@@ -62,17 +62,6 @@ object BenchFocus {
       // j2 with shuffled-hash-join preferred over sort-merge: the SMJ
       // sorts the 15M-row pre-agged fact side per task; SHJ builds on the
       // small filtered-orders side and streams the fact rows unsorted
-      // cat4 single-write A/B (r18): the same bulk MERGE with writer-side
-      // shaping (the spill IS the fold's materialization) vs the legacy
-      // two-write fold
-      "cat4_shaped" -> { (s, d) =>
-        s.conf.set("spark.graft.catalog.deltaWriterShaping", "true")
-        operators.AdminQueries.cat4_bulk_merge(s, d)
-      },
-      "cat4_legacy" -> { (s, d) =>
-        s.conf.set("spark.graft.catalog.deltaWriterShaping", "false")
-        operators.AdminQueries.cat4_bulk_merge(s, d)
-      },
       "j2_shj" -> { (s, d) =>
         s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
         operators.RelationalQueries.j2_orders_lineitem(s, d)

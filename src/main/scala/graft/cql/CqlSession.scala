@@ -2128,11 +2128,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         if (complex(f.dataType)) from_json(col(f.name), f.dataType).as(f.name)
         else col(f.name)
       }: _*)
-      if (!df.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-        throw new CqlInvalidQueryException(
-          "COPY FROM: a row carries a null primary key value")
       val n = df.count()
-      bulkAppendLog(cp.table, df)
+      bulkAppendLog(cp.table, df, "COPY FROM")
       countResult(n)
     }
   }
@@ -2144,16 +2141,18 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * load size). Shared by cqlsh `COPY FROM` and the Spark-catalog
     * `INSERT INTO` bridge ([[catalogAppend]]): both are the bulk-load
     * surface, which upstream also stamps with a single mutation timestamp
-    * per batch [U pylib/cqlshlib/copyutil.py]. */
-  /** `beforeCommit` runs AFTER the load is durably materialized but
-    * BEFORE any visible state change — validation reads the exact rows
+    * per batch [U pylib/cqlshlib/copyutil.py].
+    *
+    * The row checks ([[checkLogRows]], `surface` names the verb in their
+    * errors) and `beforeCommit` run AFTER the load is durably materialized
+    * but BEFORE any visible state change — validation reads the exact rows
     * that will be appended (not a re-execution of a possibly
     * non-deterministic source), and a destructive prelude (the catalog's
     * INSERT OVERWRITE truncate) only happens once the replacement data
     * exists. A failure anywhere before the final assignment leaves the
     * table exactly as it was. */
-  private def bulkAppendLog(table: String, df: DataFrame,
-      beforeCommit: DataFrame => Unit = _ => ()): Unit = {
+  private def bulkAppendLog(table: String, df: DataFrame, surface: String,
+      beforeCommit: () => Unit = () => ()): Unit = {
     val t = tableState(table)
     mutationEpoch += 1
     val ts = nextTs(None)
@@ -2184,21 +2183,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     val dir = s"$bulkLoadRoot/${table.toLowerCase}/$mutationEpoch"
     shaped0.write.mode("overwrite").parquet(dir)
     val shaped = spark.read.schema(t.logSchema).parquet(dir)
-    // declared vector<T, n> dimensions hold on the BULK surfaces too
-    // (COPY FROM, catalog INSERT) — same invariant as cellFor's per-cell
-    // check, validated on the materialized rows before any state change
-    val dimChecks = t.schema.fields.toSeq.flatMap { f =>
-      if (f.metadata.contains(CqlSession.VectorDimKey))
-        Some((f.name, f.metadata.getLong(CqlSession.VectorDimKey).toInt))
-      else None
-    }
-    dimChecks.foreach { case (c0, dim) =>
-      if (!shaped.filter(col(c0).isNotNull && size(col(c0)) =!= dim).isEmpty)
-        throw new CqlInvalidQueryException(
-          s"Invalid vector value for $c0: expected $dim elements " +
-            "(bulk load carries a wrong-dimension vector)")
-    }
-    beforeCommit(shaped)
+    checkLogRows(t, shaped, surface, "bulk load")
+    beforeCommit()
     // CDC space bound checks BEFORE the state commit: a rejected bulk
     // load must leave the table untouched, like any rejected mutation
     if (cdcEnabled.contains(table.toLowerCase))
@@ -2218,6 +2204,28 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   private lazy val bulkLoadRoot =
     CqlSession.tempRoot("graft-bulkload")
+
+  /** The row checks of every bulk and delta commit, run on the
+    * MATERIALIZED log rows before any state change: no null primary key
+    * (the COPY FROM contract), and declared vector<T, n> dimensions hold
+    * — the same invariant as cellFor's per-cell check. `surface` and
+    * `carrier` name the statement in the errors. */
+  private def checkLogRows(t: TableState, rows: DataFrame, surface: String,
+      carrier: String): Unit = {
+    if (!rows.filter(keyCols(t).map(col(_).isNull).reduce(_ || _)).isEmpty)
+      throw new CqlInvalidQueryException(
+        s"$surface: a row carries a null primary key value")
+    t.schema.fields.foreach { f =>
+      if (f.metadata.contains(CqlSession.VectorDimKey)) {
+        val dim = f.metadata.getLong(CqlSession.VectorDimKey).toInt
+        if (!rows.filter(col(f.name).isNotNull &&
+            size(col(f.name)) =!= dim).isEmpty)
+          throw new CqlInvalidQueryException(
+            s"Invalid vector value for ${f.name}: expected $dim elements " +
+              s"($carrier carries a wrong-dimension vector)")
+      }
+    }
+  }
 
   /** DSv2 write bridge: `INSERT INTO` / `INSERT OVERWRITE` against a
     * [[graft.spark.GraftCatalog]] table routes HERE, not to a parquet
@@ -2250,17 +2258,13 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         throw new CqlInvalidQueryException(
           s"INSERT through the Spark catalog requires primary key column $k")
     }
-    // Null-key validation and the overwrite truncate both run in
-    // bulkAppendLog's beforeCommit hook — i.e. against the MATERIALIZED
-    // load, after its parquet write succeeded: a non-deterministic source
-    // cannot validate clean yet materialize null keys, and a failed write
-    // can no longer leave an INSERT OVERWRITE target truncated-but-empty.
-    bulkAppendLog(key, df, beforeCommit = { shaped =>
-      if (!shaped.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-        throw new CqlInvalidQueryException(
-          "catalog INSERT: a row carries a null primary key value")
-      if (overwrite) truncateState(key)
-    })
+    // Null-key validation and the overwrite truncate both run inside
+    // bulkAppendLog — i.e. against the MATERIALIZED load, after its
+    // parquet write succeeded: a non-deterministic source cannot validate
+    // clean yet materialize null keys, and a failed write can no longer
+    // leave an INSERT OVERWRITE target truncated-but-empty.
+    bulkAppendLog(key, df, "catalog INSERT",
+      beforeCommit = () => if (overwrite) truncateState(key))
   }
 
   /** DSv2 DELETE bridge ([[graft.spark.GraftCatalog]]'s `SupportsDelete`):
@@ -2278,13 +2282,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private[graft] def catalogDelete(table: String,
       preds: Seq[(String, Any)]): Unit = {
     val key = table.toLowerCase
-    if (SystemKeyspaces.contains(keyspaceOf(key)))
-      throw new CqlInvalidQueryException(
-        s"table $table is a system table and cannot be written")
-    if (!isWritableTable(key))
-      throw new CqlInvalidQueryException(
-        s"table $table is not writable (materialized views are " +
-          "maintained from their base table)")
+    checkWritableTarget(table)
     if (preds.isEmpty) {
       checkPerm("modify", authRes(key))
       applyDdl(CqlTruncate(key))
@@ -2303,10 +2301,12 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * Every mutation replays through `applyDml`, so MODIFY enforcement,
     * key validation, guardrails, triggers, CDC, and the reconcile
     * fold hold identically on both surfaces, and the whole statement is
-    * rollback-atomic via `withPendingRollback`. An UPDATE's written row
-    * is the COMPLETE post-image (DSv2 contract), so data columns that
-    * are null in it write cell tombstones — exactly CQL's explicit-null
-    * semantics — rather than resurrecting older cells.
+    * rollback-atomic via `withPendingRollback`. The target checks
+    * ([[checkDeltaTarget]]) already ran in [[catalogApplyDeltaStaged]].
+    * An UPDATE's written row is the COMPLETE post-image (DSv2 contract),
+    * so data columns that are null in it write cell tombstones — exactly
+    * CQL's explicit-null semantics — rather than resurrecting older
+    * cells.
     *
     * Scale shape: the delta (changed rows only, never the table) flows
     * through the coordinator — the same single-coordinator write model
@@ -2317,34 +2317,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * one new primary key in a single statement) reconcile to ONE row —
     * a pk-unique store cannot represent the duplicate-key post-state a
     * keyless lakehouse table would hold; same boundary as CQL itself. */
-  private[graft] def catalogApplyDelta(table: String,
+  private def catalogApplyDelta(key: String,
       dataCols: Seq[String], idCols: Seq[String],
       upserts: Seq[Seq[Any]], deletes: Seq[Seq[Any]]): Unit =
     withPendingRollback {
-      val key = table.toLowerCase
-      if (SystemKeyspaces.contains(keyspaceOf(key)))
-        throw new CqlInvalidQueryException(
-          s"table $table is a system table and cannot be written")
-      if (!isWritableTable(key))
-        throw new CqlInvalidQueryException(
-          s"table $table is not writable (materialized views are " +
-            "maintained from their base table)")
-      checkPerm("modify", authRes(key))
-      val t = tableState(key)
-      if (t.counterKeys.nonEmpty) throw new CqlInvalidQueryException(
-        "MERGE/UPDATE through the Spark catalog does not support counter " +
-          "tables — counters mutate via CQL UPDATE … SET c = c + n")
-      // the rewrite copies UNTOUCHED columns from the catalog scan into
-      // the written post-image; a role that reads masked values would
-      // silently PERSIST them — refuse up front (cdcStream's rule).
-      // A pure-DELETE delta writes only key-addressed tombstones and
-      // never persists a post-image, so MODIFY alone suffices there —
-      // same as the CQL DELETE verb (r13, advisor).
-      if (upserts.nonEmpty &&
-          masksFor(key).nonEmpty && !hasPermBool("unmask", authRes(key)))
-        throw new CqlInvalidQueryException(
-          s"MERGE/UPDATE on $table requires UNMASK: the rewritten rows " +
-            "would persist masked column values")
       // a delete whose key is ALSO upserted in this delta is a key-move
       // chain (UPDATE SET k = k + 1 moves row 1→2 while row 2 moves 3:
       // delete(2) refers to the PRE-state row that upsert(2) fully
@@ -2401,36 +2377,47 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   /** Compile the writer-side shaping plan for a DSv2 delta write (r18
     * single-write — guide §5/§6 "write once": the executor spill becomes
-    * the fold's materialization, removing the commit-side delta-sized
-    * read+shape+rewrite job from every distributed MERGE/UPDATE/DELETE).
-    * Returns None — the legacy generic-segment fold — when any mapped
-    * column's type differs from its log-schema field (the writer copies
-    * Catalyst values VERBATIM, no cast machinery; the rewrite projects
-    * the table's own columns, so parity holds universally today) or when
-    * `spark.graft.catalog.deltaWriterShaping=false` (A/B and escape
-    * hatch). Allocates the statement's two coordinator timestamps HERE,
-    * on the driver, before the job: deletes commit at `tsDel`, upserts at
-    * `tsUp = tsDel + 1` — the fold's collision rule (see
-    * [[applyDeltaDistributed]]). */
+    * the fold's materialization, so no distributed MERGE/UPDATE/DELETE
+    * runs a commit-side delta-sized read+shape+rewrite job). The writer
+    * copies Catalyst values VERBATIM, with no cast machinery, so every
+    * mapped data/id column's type must equal its log-schema field's type.
+    * The rewrite projects the table's own columns, so that parity holds
+    * for every table shape; a miss is an engine bug and fails loudly.
+    *
+    * Allocates the statement's two coordinator timestamps HERE, on the
+    * driver, before the job: deletes commit at `tsDel`, upserts at
+    * `tsUp = tsDel + 1`. That order is the key-move collision rule (r18 —
+    * it replaced the r17 count-based anti-join elision, which was UNSOUND
+    * for MERGE with a non-key-equality ON condition: a NOT-MATCHED source
+    * row can INSERT a key that a MATCHED / NOT-MATCHED-BY-SOURCE branch
+    * simultaneously DELETEs with zero key-moving UPDATEs, and at one
+    * shared timestamp the tombstone wins the tie and silently erases the
+    * inserted row — advisor find). The statement's semantics — a delete
+    * whose key is also upserted is redundant against the complete
+    * post-image (the per-row path's `effDeletes` filter) — hold by
+    * TIMESTAMP ORDER instead of a join: the reconcile's strict writetime
+    * comparison resolves every same-statement delete/upsert key collision
+    * toward the upsert, with NO collision-set computation at any delta
+    * size. Deletes at tsDel still shadow every pre-statement write
+    * (tsDel > all prior timestamps), and the visible cells of one
+    * statement still carry ONE writetime — tombstoned rows answer no
+    * WRITETIME query. */
   private[graft] def deltaShapePlan(table: String, dataSchema: StructType,
-      idSchema: StructType): Option[graft.spark.GraftDeltaShapePlan] = {
-    if (!spark.conf.getOption("spark.graft.catalog.deltaWriterShaping")
-        .forall(_.trim.toBoolean)) return None
-    val key = table.toLowerCase
-    if (!engineCatalog.contains(key)) return None
-    val t = tableState(key)
+      idSchema: StructType): graft.spark.GraftDeltaShapePlan = {
+    val t = tableState(table)
     val dataSet = dataSchema.fieldNames.map(_.toLowerCase).toSet
     def dataIdx(n: String): Int =
       dataSchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
     def idIdx(n: String): Int =
       idSchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-    // type parity: every data/id column must match its log field verbatim
-    val parity = t.logSchema.fields.forall { f =>
-      val di = dataIdx(f.name); val ii = idIdx(f.name)
-      (di < 0 || dataSchema(di).dataType == f.dataType) &&
-        (ii < 0 || idSchema(ii).dataType == f.dataType)
-    }
-    if (!parity) return None
+    for (f <- t.logSchema.fields;
+         (sch, i) <- Seq(dataSchema -> dataIdx(f.name),
+           idSchema -> idIdx(f.name))
+         if i >= 0 && sch(i).dataType != f.dataType)
+      throw new IllegalStateException(
+        s"delta write on $table: column ${f.name} arrives as " +
+          s"${sch(i).dataType.catalogString} but the log stores " +
+          s"${f.dataType.catalogString}")
     val fields = t.logSchema.fields.map { f =>
       val n0 = f.name
       if (n0 == "_marker") graft.spark.GraftDeltaFieldSpec(3, -1, -1)
@@ -2448,46 +2435,29 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     }
     val tsDel = nextTs(None)
     val tsUp = nextTs(None)
-    Some(graft.spark.GraftDeltaShapePlan(t.logSchema, fields, tsDel, tsUp,
-      t.defaultTtl))
+    graft.spark.GraftDeltaShapePlan(t.logSchema, fields, tsDel, tsUp,
+      t.defaultTtl)
   }
 
-  /** Threshold between the two delta-apply shapes: a delta at or under
+  /** Threshold between the two delta-apply paths: a delta at or under
     * this many rows (or ANY delta on a table with triggers, whose augment
     * hook is inherently per-mutation) collects to the driver and replays
     * through [[catalogApplyDelta]]'s per-row `applyDml` — full trigger /
     * guardrail fidelity, driver memory bounded BY THIS CONSTANT. Anything
-    * larger folds in distributed ([[applyDeltaDistributed]]). The bound
-    * is a MEMORY dial, not a wall-clock one (measured r13: per-row and
-    * distributed apply cross at ~1.1 s wall for 10k–40k-row deltas on
-    * local[32]) — per-row rows sit in the driver's pending vector and
-    * re-materialize on every read until the next flush, so the default
-    * keeps the coordinator's held state small. */
+    * larger commits its writer-shaped segments ([[commitShapedDelta]]).
+    * The bound is a MEMORY dial, not a wall-clock one (measured r13:
+    * per-row and distributed apply cross at ~1.1 s wall for 10k–40k-row
+    * deltas on local[32]) — per-row rows sit in the driver's pending
+    * vector and re-materialize on every read until the next flush, so the
+    * default keeps the coordinator's held state small. */
   private def deltaApplyRowLimit: Long =
     spark.conf.getOption("spark.graft.catalog.deltaApplyRowLimit")
       .map(_.trim.toLong).getOrElse(10000L)
 
-  /** DSv2 delta commit over executor-spilled parquet segments (r13 — the
-    * r12 judge's #1: the old bridge shipped every changed row through
-    * `WriterCommitMessage`s to a per-row driver apply, O(changed rows)
-    * driver memory; a MERGE touching 1% of a 100 TB table would OOM the
-    * coordinator). Segments carry `(__delta_op, <post-image data cols>,
-    * __delta_id_<key cols>)` rows. Small deltas (≤ [[deltaApplyRowLimit]])
-    * and trigger-bearing tables still replay per-row for exact
-    * trigger/guardrail semantics; large deltas fold through ONE
-    * distributed parquet materialization — the same
-    * materialize-then-commit shape as [[bulkAppendLog]] — under one
-    * coordinator timestamp, with the key-move collision rule (a delete
-    * whose key is also upserted is redundant against the complete
-    * post-image and would win the same-timestamp tie) applied as a
-    * distributed anti-join instead of a driver-side Set. */
-  private[graft] def catalogApplyDeltaStaged(table: String,
-      dataCols: Seq[String], idCols: Seq[String],
-      segments: Seq[String], nUpserts: Long, nDeletes: Long,
-      shaped: Boolean = false): Unit = {
+  /** A catalog DELETE or delta may only target a base table outside the
+    * system keyspaces. */
+  private def checkWritableTarget(table: String): Unit = {
     val key = table.toLowerCase
-    // the guard set runs HERE too: an empty delta (a MERGE matching
-    // nothing) must still fail on an unwritable target, like the CQL verb
     if (SystemKeyspaces.contains(keyspaceOf(key)))
       throw new CqlInvalidQueryException(
         s"table $table is a system table and cannot be written")
@@ -2495,26 +2465,58 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       throw new CqlInvalidQueryException(
         s"table $table is not writable (materialized views are " +
           "maintained from their base table)")
+  }
+
+  /** The target checks of a catalog MERGE/UPDATE/DELETE delta, run once
+    * before the delta routes to either apply path: the target is a
+    * writable non-system table, the role holds MODIFY, the table has no
+    * counters, and a delta that upserts needs UNMASK on a masked table —
+    * the rewrite copies UNTOUCHED columns from the catalog scan into the
+    * written post-image, so a role that reads masked values would
+    * silently PERSIST them (cdcStream's rule). A pure-DELETE delta writes
+    * only key-addressed tombstones and never persists a post-image, so
+    * MODIFY alone suffices there — same as the CQL DELETE verb (r13,
+    * advisor). */
+  private def checkDeltaTarget(table: String, hasUpserts: Boolean): Unit = {
+    val key = table.toLowerCase
+    checkWritableTarget(table)
     checkPerm("modify", authRes(key))
+    if (tableState(key).counterKeys.nonEmpty)
+      throw new CqlInvalidQueryException(
+        "MERGE/UPDATE through the Spark catalog does not support counter " +
+          "tables — counters mutate via CQL UPDATE … SET c = c + n")
+    if (hasUpserts &&
+        masksFor(key).nonEmpty && !hasPermBool("unmask", authRes(key)))
+      throw new CqlInvalidQueryException(
+        s"MERGE/UPDATE on $table requires UNMASK: the rewritten rows " +
+          "would persist masked column values")
+  }
+
+  /** DSv2 delta commit over executor-spilled parquet segments (r13 — the
+    * r12 judge's #1: the old bridge shipped every changed row through
+    * `WriterCommitMessage`s to a per-row driver apply, O(changed rows)
+    * driver memory; a MERGE touching 1% of a 100 TB table would OOM the
+    * coordinator). The segments are already shaped into the table's log
+    * schema by the writers ([[deltaShapePlan]]): post-image upserts and
+    * row tombstones (`_deleted`) under the statement's two timestamps.
+    * Small deltas (≤ [[deltaApplyRowLimit]]) and trigger-bearing tables
+    * replay per-row for exact trigger/guardrail semantics; larger deltas
+    * commit the segments themselves as log bytes ([[commitShapedDelta]]). */
+  private[graft] def catalogApplyDeltaStaged(table: String,
+      dataCols: Seq[String], idCols: Seq[String],
+      segments: Seq[String], nUpserts: Long, nDeletes: Long): Unit = {
+    val key = table.toLowerCase
+    // the target checks run before the empty-delta return: a MERGE
+    // matching nothing must still fail on an unwritable target, like the
+    // CQL verb
+    checkDeltaTarget(table, hasUpserts = nUpserts > 0)
     if (segments.isEmpty) return
     val hasTriggers = triggerReg.keys.exists(_._1 == key)
-    val segSchema =
-      if (shaped) tableState(key).logSchema
-      else graft.spark.GraftDeltaWriter.segmentSchema(
-        StructType(dataCols.map(c => tableState(key).logSchema.fields
-          .find(_.name.equalsIgnoreCase(c))
-          .map(f => StructField(c, f.dataType))
-          .getOrElse(throw new CqlInvalidQueryException(
-            s"undefined column $c in $table")))),
-        StructType(idCols.map(c => tableState(key).logSchema.fields
-          .find(_.name.equalsIgnoreCase(c))
-          .map(f => StructField(c, f.dataType))
-          .getOrElse(throw new CqlInvalidQueryException(
-            s"undefined column $c in $table")))))
-    val seg = spark.read.schema(segSchema).parquet(segments: _*)
-    // shaped segments committed distributed become the table's LIVE log
-    // bytes (the single-write point) — every other outcome leaves them
-    // dead and they are reaped in the finally
+    val seg = spark.read.schema(tableState(key).logSchema)
+      .parquet(segments: _*)
+    // segments committed distributed become the table's LIVE log bytes
+    // (the single-write point) — every other outcome leaves them dead and
+    // they are reaped in the finally
     var segmentsLive = false
     try {
       // trigger-bearing tables replay per-mutation by contract — but NEVER
@@ -2536,85 +2538,55 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         // bounded collect (or trigger table — augment is per-mutation by
         // contract; a trigger-bearing table's MERGE is coordinator-bound
         // exactly like its CQL write path). The per-row replay allocates
-        // its own statement timestamp — shaped segments' pre-stamped
+        // its own statement timestamp — the segments' pre-stamped
         // writetimes are not replayed.
-        val (upsDf, delsDf) =
-          if (shaped) (
-            seg.filter(!col("_deleted")).select(dataCols.map(col): _*),
-            seg.filter(col("_deleted")).select(idCols.map(col): _*))
-          else (
-            seg.filter(col("__delta_op") === "U")
-              .select(dataCols.map(col): _*),
-            seg.filter(col("__delta_op") === "D")
-              .select(idCols.map(c => col(s"__delta_id_$c").as(c)): _*))
         catalogApplyDelta(key, dataCols, idCols,
-          upsDf.collect().map(_.toSeq).toSeq,
-          delsDf.collect().map(_.toSeq).toSeq)
-      } else if (shaped) {
-        commitShapedDelta(key, segments, seg, hasUpserts = nUpserts > 0)
+          seg.filter(!col("_deleted")).select(dataCols.map(col): _*)
+            .collect().map(_.toSeq).toSeq,
+          seg.filter(col("_deleted")).select(idCols.map(col): _*)
+            .collect().map(_.toSeq).toSeq)
+      } else {
+        commitShapedDelta(key, segments, seg)
         segmentsLive = true
-      } else applyDeltaDistributed(key, dataCols, idCols, seg,
-        hasUpserts = nUpserts > 0, hasDeletes = nDeletes > 0)
+      }
     } finally
-      // unless the shaped segments just BECAME the live log bytes, the
-      // staged files are dead (the legacy fold re-materialized into the
-      // bulk-load dir, the per-row path collected, or the statement
-      // failed and rolled back). Hadoop FS delete, not java.io.File: on
-      // a cluster the staging dir is a shared filesystem (best-effort —
-      // tempRoot's shutdown hook and DFS lifecycle rules are the backstop)
+      // unless the segments just BECAME the live log bytes, the staged
+      // files are dead (the per-row path collected, or the statement
+      // failed and rolled back); best-effort — tempRoot's shutdown hook
+      // and DFS lifecycle rules are the backstop
       if (!segmentsLive)
-        segments.foreach { p =>
-          try {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(hp, false)
-            ()
-          } catch { case _: Exception => () }
-        }
+        segments.foreach(graft.spark.GraftDeltaWriter.deleteSegment(_,
+          spark.sparkContext.hadoopConfiguration))
   }
 
-  /** Commit a WRITER-SHAPED delta (r18 single-write): the staged segments
+  /** Commit a writer-shaped delta (r18 single-write): the staged segments
     * already carry log-schema rows under the statement's pre-allocated
-    * timestamps, so the fold's old delta-sized read+shape+rewrite job
-    * disappears — validations run against the staged bytes themselves,
-    * then the log pointer swings to them. Same commit discipline as
-    * [[bulkAppendLog]]/[[applyDeltaDistributed]]: every check fails
-    * BEFORE any visible state change. */
+    * timestamps, so the row checks ([[checkLogRows]]) run against the
+    * staged bytes themselves, then the log pointer swings to them — the
+    * [[bulkAppendLog]] commit discipline: every check fails BEFORE any
+    * visible state change. Driver memory is O(1) in delta size. */
   private def commitShapedDelta(key: String, segments: Seq[String],
-      shaped: DataFrame, hasUpserts: Boolean): Unit = {
+      shaped: DataFrame): Unit = {
     val t = tableState(key)
-    if (t.counterKeys.nonEmpty) throw new CqlInvalidQueryException(
-      "MERGE/UPDATE through the Spark catalog does not support counter " +
-        "tables — counters mutate via CQL UPDATE … SET c = c + n")
-    if (hasUpserts &&
-        masksFor(key).nonEmpty && !hasPermBool("unmask", authRes(key)))
-      throw new CqlInvalidQueryException(
-        s"MERGE/UPDATE on $key requires UNMASK: the rewritten rows " +
-          "would persist masked column values")
-    val keys = keyCols(t)
-    if (!shaped.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      throw new CqlInvalidQueryException(
-        "catalog MERGE/UPDATE: a row carries a null primary key value")
-    t.schema.fields.toSeq.foreach { f =>
-      if (f.metadata.contains(CqlSession.VectorDimKey)) {
-        val dim = f.metadata.getLong(CqlSession.VectorDimKey).toInt
-        if (!shaped.filter(col(f.name).isNotNull &&
-            size(col(f.name)) =!= dim).isEmpty)
-          throw new CqlInvalidQueryException(
-            s"Invalid vector value for ${f.name}: expected $dim elements " +
-              "(delta carries a wrong-dimension vector)")
-      }
-    }
+    checkLogRows(t, shaped, "catalog MERGE/UPDATE", "delta")
     mutationEpoch += 1
     if (cdcEnabled.contains(key)) {
       cdcGuardSpace(key)
-      // CDC segment BEFORE the state swap. The staged files already ARE
-      // log-schema parquet under the statement's timestamps, so the
-      // emission is a FILE-LEVEL copy — one cdc file per fold segment
-      // (the emission parallelism IS the fold's, the r14 contract, with
-      // no re-serialization job at all; the r13 coalesce(1) funnel is
-      // structurally impossible here). Hadoop FS API: staging and cdc
-      // dirs may be shared filesystems on a cluster.
+      // CDC segment BEFORE the state swap (per-row parity: a statement
+      // never commits state without its CDC durability — withPending-
+      // Rollback rolls the per-row path back when emission fails; here
+      // the lesser evil on a mid-write crash is a phantom segment, the
+      // same exposure upstream's commitlog-first ordering has). The
+      // staged files already ARE log-schema parquet under the statement's
+      // timestamps, so the emission is a FILE-LEVEL copy — one cdc file
+      // per segment (the emission parallelism IS the delta write's, the
+      // r14 contract, with no re-serialization job at all; the r13
+      // coalesce(1) funnel is structurally impossible here). Every CDC
+      // contract is file-granular already: cdcStream's file source reads
+      // the files in order with _writetime totally ordering rows, cdcReap
+      // deletes by file mtime, and the system_views.cdc accounting is
+      // dirBytes, not a file count. Hadoop FS API: staging and cdc dirs
+      // may be shared filesystems on a cluster.
       val hconf = org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)
       val dstDir = new org.apache.hadoop.fs.Path(cdcDirOf(key))
       val dstFs = dstDir.getFileSystem(hconf)
@@ -2626,130 +2598,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
             s"delta-$mutationEpoch-$i.parquet"),
           false, hconf)
       }
-    }
-    state(key) = t.copy(base = log(t).unionByName(shaped),
-      pending = Vector.empty, localOnly = false)
-  }
-
-  /** The distributed delta fold: shape upserts (complete post-images —
-    * nulls are EXPLICIT, writing cell tombstones exactly like
-    * `UPDATE … SET c = null`) and row-tombstone deletes straight into the
-    * table's log schema, materialize through one distributed parquet
-    * write, then swing the log pointer — the [[bulkAppendLog]] commit
-    * discipline (every validation runs against the materialized rows
-    * BEFORE any visible state change, so a failure leaves the table
-    * untouched). Driver memory is O(1) in delta size. */
-  private def applyDeltaDistributed(key: String, dataCols: Seq[String],
-      idCols: Seq[String], seg: DataFrame, hasUpserts: Boolean,
-      hasDeletes: Boolean): Unit = {
-    val t = tableState(key)
-    if (t.counterKeys.nonEmpty) throw new CqlInvalidQueryException(
-      "MERGE/UPDATE through the Spark catalog does not support counter " +
-        "tables — counters mutate via CQL UPDATE … SET c = c + n")
-    if (hasUpserts &&
-        masksFor(key).nonEmpty && !hasPermBool("unmask", authRes(key)))
-      throw new CqlInvalidQueryException(
-        s"MERGE/UPDATE on $key requires UNMASK: the rewritten rows " +
-          "would persist masked column values")
-    val dataSet = dataCols.map(_.toLowerCase).toSet
-    def dataName(n: String): Option[String] =
-      dataCols.find(_.equalsIgnoreCase(n))
-    val up = seg.filter(col("__delta_op") === "U")
-    val del0 = seg.filter(col("__delta_op") === "D")
-      .select(idCols.map(c => col(s"__delta_id_$c").as(c)): _*)
-    // Key-move collision rule, distributed (r18 — replaces the r17
-    // count-based anti-join elision, which was UNSOUND for MERGE with a
-    // non-key-equality ON condition: a NOT-MATCHED source row can INSERT
-    // a key that a MATCHED / NOT-MATCHED-BY-SOURCE branch simultaneously
-    // DELETEs with zero key-moving UPDATEs, and at one shared timestamp
-    // the tombstone wins the tie and silently erases the inserted row —
-    // advisor find). The statement's semantics — a delete whose key is
-    // also upserted is redundant against the complete post-image (the
-    // per-row path's `effDeletes` filter) — are enforced here by
-    // TIMESTAMP ORDER instead of a join: deletes commit at `tsDel`,
-    // upserts at `tsUp = tsDel + 1`, so the reconcile's strict
-    // writetime comparison resolves every same-statement delete/upsert
-    // key collision toward the upsert, with NO collision-set
-    // computation at any delta size. Single-sided deltas keep one
-    // timestamp (allocating two would drift the session clock for
-    // nothing). Deletes at tsDel still shadow every pre-statement
-    // write (tsDel > all prior timestamps), and visible cells of one
-    // statement still carry ONE writetime — tombstoned rows answer no
-    // WRITETIME query.
-    val tsDel = nextTs(None)
-    val ts = if (hasUpserts && hasDeletes) nextTs(None) else tsDel
-    val upShaped = up.select(t.logSchema.fields.toSeq.map { f =>
-      val n0 = f.name
-      if (n0 == "_marker") lit(true).as(n0)
-      else if (n0 == "_writetime") lit(ts).as(n0)
-      else if (n0 == "_ttl")
-        t.defaultTtl.map(v => lit(v)).getOrElse(lit(null))
-          .cast(LongType).as(n0)
-      else if (n0 == "_deleted") lit(false).as(n0)
-      else if (n0.startsWith("_op_")) {
-        // collection columns in the post-image are explicit writes even
-        // when null (`SET c = null` folds a set-to-null) — unlike the
-        // INSERT bulk surface, where a null df cell means "not written"
-        val src = n0.stripPrefix("_op_")
-        if (dataSet(src.toLowerCase)) lit("set").as(n0)
-        else lit(null).cast(StringType).as(n0)
-      } else if (n0.startsWith("_del_")) {
-        // scalar post-image nulls are EXPLICIT cell tombstones
-        val src = n0.stripPrefix("_del_")
-        dataName(src)
-          .map(c => when(col(c).isNull, lit(true)).as(n0))
-          .getOrElse(lit(null).cast(BooleanType).as(n0))
-      } else dataName(n0)
-        .map(c => col(c).cast(f.dataType).as(n0))
-        .getOrElse(lit(null).cast(f.dataType).as(n0))
-    }: _*)
-    val idSet = idCols.map(_.toLowerCase).toSet
-    val delShaped = del0.select(t.logSchema.fields.toSeq.map { f =>
-      val n0 = f.name
-      if (n0 == "_writetime") lit(tsDel).as(n0)
-      else if (n0 == "_deleted") lit(true).as(n0)
-      else if (idSet(n0.toLowerCase))
-        col(idCols.find(_.equalsIgnoreCase(n0)).get).cast(f.dataType).as(n0)
-      else lit(null).cast(f.dataType).as(n0)
-    }: _*)
-    mutationEpoch += 1
-    val dir = s"$bulkLoadRoot/$key/$mutationEpoch"
-    upShaped.unionByName(delShaped).write.mode("overwrite").parquet(dir)
-    val shaped = spark.read.schema(t.logSchema).parquet(dir)
-    // ——— validations against the MATERIALIZED rows, before any state
-    // change (bulkAppendLog's discipline) ———
-    val keys = keyCols(t)
-    if (!shaped.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      throw new CqlInvalidQueryException(
-        "catalog MERGE/UPDATE: a row carries a null primary key value")
-    t.schema.fields.toSeq.foreach { f =>
-      if (f.metadata.contains(CqlSession.VectorDimKey)) {
-        val dim = f.metadata.getLong(CqlSession.VectorDimKey).toInt
-        if (!shaped.filter(col(f.name).isNotNull &&
-            size(col(f.name)) =!= dim).isEmpty)
-          throw new CqlInvalidQueryException(
-            s"Invalid vector value for ${f.name}: expected $dim elements " +
-              "(delta carries a wrong-dimension vector)")
-      }
-    }
-    if (cdcEnabled.contains(key)) {
-      cdcGuardSpace(key)
-      // CDC segment BEFORE the state swap (per-row parity: a statement
-      // never commits state without its CDC durability — withPending-
-      // Rollback rolls the per-row path back when emission fails; here
-      // the lesser evil on a mid-write crash is a phantom segment, the
-      // same exposure upstream's commitlog-first ordering has). The
-      // delta lands as a MULTI-FILE segment (r14 — the r13 judge's #2:
-      // coalesce(1) funneled a 13.7 M-row sf1 delta through ONE writer
-      // task, the new slowest link of a real bulk MERGE): the statement's
-      // files parallelize like the fold itself, and every CDC contract is
-      // file-granular already — cdcStream's file source reads them in
-      // order with _writetime (one shared ts per statement) totally
-      // ordering rows, cdcReap deletes by file mtime, and the
-      // system_views.cdc accounting is dirBytes, not a file count. The
-      // per-row emission paths keep coalesce(1): they write driver-held
-      // row vectors where one file IS the cheap shape.
-      shaped.write.mode("append").parquet(cdcDirOf(key))
     }
     state(key) = t.copy(base = log(t).unionByName(shaped),
       pending = Vector.empty, localOnly = false)

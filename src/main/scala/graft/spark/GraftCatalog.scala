@@ -466,23 +466,14 @@ private[spark] class GraftRowLevelOperation(session: CqlSession,
           private val stagingDir = session.newDeltaStagingDir(registryKey)
           private val hconf = new GraftSerializableConf(
             GraftShim.sessionHadoopConf(session.sparkSession))
-          // r18 single-write: when the delta's data/id types match the
-          // table's log schema verbatim (the universal case — the rewrite
-          // projects the table's own columns), the writers shape rows
-          // STRAIGHT into the log schema with the statement's pre-allocated
-          // timestamps, and the spilled segments ARE the fold's
-          // materialization — the commit's delta-sized read+shape+rewrite
-          // job disappears. `shapePlan` returns None (legacy two-write
-          // fold) on any type-parity miss or when
-          // spark.graft.catalog.deltaWriterShaping=false.
-          private var shapePlan: Option[GraftDeltaShapePlan] = None
+          // r18 single-write: the writers shape rows STRAIGHT into the
+          // table's log schema with the statement's pre-allocated
+          // timestamps, so the spilled segments ARE the commit's log
+          // bytes — no delta-sized read+shape+rewrite job at commit
           override def createBatchWriterFactory(pInfo: PhysicalWriteInfo)
-              : DeltaWriterFactory = {
-            shapePlan =
-              session.deltaShapePlan(registryKey, dataSchema, idSchema)
+              : DeltaWriterFactory =
             GraftDeltaWriterFactory(dataSchema, idSchema, stagingDir, hconf,
-              shapePlan)
-          }
+              session.deltaShapePlan(registryKey, dataSchema, idSchema))
           override def useCommitCoordinator(): Boolean = false
           /** Driver-side commit: the per-task deltas arrived as parquet
             * SEGMENTS (changed rows only, spilled on the executors —
@@ -495,8 +486,7 @@ private[spark] class GraftRowLevelOperation(session: CqlSession,
               dataSchema.fieldNames.toSeq, idSchema.fieldNames.toSeq,
               ds.iterator.flatMap(_.segment).toSeq,
               ds.iterator.map(_.upserts).sum,
-              ds.iterator.map(_.deletes).sum,
-              shaped = shapePlan.isDefined)
+              ds.iterator.map(_.deletes).sum)
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =
             messages.foreach {
@@ -536,16 +526,16 @@ private[graft] class GraftSerializableConf(
   }
 }
 
-/** Writer-side shaping plan (r18 single-write): one instruction per LOG
-  * schema field, compiled on the driver from the table's log schema and
-  * the delta's data/id projections — only when every mapped column's type
-  * matches the log field's type VERBATIM, so the writer copies Catalyst
-  * values with no cast machinery (the fallback is the legacy two-write
-  * fold). `tsDel`/`tsUp` are the statement's coordinator timestamps,
-  * allocated on the driver BEFORE the job: deletes commit one tick below
-  * upserts, which is what makes the fold's same-statement delete/upsert
+/** Writer-side shaping plan (r18 single-write), the only delta segment
+  * layout: one instruction per LOG schema field, compiled on the driver
+  * from the table's log schema and the delta's data/id projections. Every
+  * mapped column's type matches the log field's type VERBATIM (the
+  * compiler throws otherwise), so the writer copies Catalyst values with
+  * no cast machinery. `tsDel`/`tsUp` are the statement's coordinator
+  * timestamps, allocated on the driver BEFORE the job: deletes commit one
+  * tick below upserts, which is what makes same-statement delete/upsert
   * key collisions resolve toward the upsert with no anti-join (see
-  * [[graft.cql.CqlSession.applyDeltaDistributed]]). */
+  * [[graft.cql.CqlSession.deltaShapePlan]]). */
 private[graft] final case class GraftDeltaShapePlan(
     logSchema: StructType,
     fields: Array[GraftDeltaFieldSpec],
@@ -561,8 +551,7 @@ private[graft] final case class GraftDeltaFieldSpec(
 
 private[spark] case class GraftDeltaWriterFactory(dataSchema: StructType,
     idSchema: StructType, stagingDir: String,
-    hconf: GraftSerializableConf,
-    shapePlan: Option[GraftDeltaShapePlan] = None)
+    hconf: GraftSerializableConf, shapePlan: GraftDeltaShapePlan)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[org.apache.spark.sql.catalyst.InternalRow] =
@@ -571,15 +560,11 @@ private[spark] case class GraftDeltaWriterFactory(dataSchema: StructType,
 }
 
 /** Spills this task's delta to a parquet segment as rows arrive (opened
-  * lazily — an untouched task writes nothing). Two segment layouts:
-  *
-  *  - with a [[GraftDeltaShapePlan]] (r18, the universal case): rows are
-  *    shaped STRAIGHT into the table's log schema — post-image values,
-  *    `_op_`/`_del_` cell flags, the statement's pre-allocated
-  *    delete/upsert timestamps — so the segments need no commit-side
-  *    rewrite: they ARE the fold's materialization.
-  *  - legacy (type-parity fallback): `(__delta_op, <data columns…>,
-  *    __delta_id_<key columns…>)`, reshaped by the commit fold.
+  * lazily — an untouched task writes nothing). Rows are shaped by the
+  * [[GraftDeltaShapePlan]] STRAIGHT into the table's log schema —
+  * post-image values, `_op_`/`_del_` cell flags, the statement's
+  * pre-allocated delete/upsert timestamps — so the segments need no
+  * commit-side rewrite: they ARE the commit's log bytes.
   *
   * Upserts carry the complete post-image, deletes carry only the id
   * columns. An UPDATE whose new row keeps its primary key is ONE upsert
@@ -587,14 +572,12 @@ private[spark] case class GraftDeltaWriterFactory(dataSchema: StructType,
   * inexpressible in CQL) maps to delete(old key) + upsert(new row). */
 private[spark] class GraftDeltaWriter(dataSchema: StructType,
     idSchema: StructType, segmentPath: String, hconf: GraftSerializableConf,
-    shapePlan: Option[GraftDeltaShapePlan] = None)
+    plan: GraftDeltaShapePlan)
     extends DeltaWriter[org.apache.spark.sql.catalyst.InternalRow] {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.unsafe.types.UTF8String
 
-  private val segSchema = shapePlan.map(_.logSchema).getOrElse(
-    GraftDeltaWriter.segmentSchema(dataSchema, idSchema))
   private var writer
       : org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
   private var nUp = 0L
@@ -606,58 +589,41 @@ private[spark] class GraftDeltaWriter(dataSchema: StructType,
 
   private val setFlag = UTF8String.fromString("set")
 
-  private def emit(op: String, data: InternalRow, id: InternalRow): Unit = {
+  /** One log row: the upsert's post-image (`isUp`) or the delete's
+    * row tombstone addressed by `id`. */
+  private def emit(isUp: Boolean, data: InternalRow, id: InternalRow)
+      : Unit = {
     if (writer == null)
       writer = org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetRowWriter.open(segSchema, segmentPath, hconf.value)
-    val arr = new Array[Any](segSchema.length)
-    shapePlan match {
-      case Some(p) =>
-        val isUp = op == "U"
-        var i = 0
-        while (i < p.fields.length) {
-          val f = p.fields(i)
-          arr(i) = f.kind match {
-            case 0 => // table column value: post-image (U) / id key (D)
-              if (isUp) {
-                if (f.dataIdx >= 0)
-                  data.get(f.dataIdx, dataSchema(f.dataIdx).dataType)
-                else null
-              } else if (f.idIdx >= 0)
-                id.get(f.idIdx, idSchema(f.idIdx).dataType)
-              else null
-            case 1 => // _op_<c>: post-images write their collection cells
-              if (isUp && f.dataIdx >= 0) setFlag else null
-            case 2 => // _del_<c>: explicit-null cell = cell tombstone
-              if (isUp && f.dataIdx >= 0 && data.isNullAt(f.dataIdx))
-                java.lang.Boolean.TRUE
-              else null
-            case 3 => if (isUp) java.lang.Boolean.TRUE else null // _marker
-            case 4 => // _writetime: deletes one tick below upserts
-              java.lang.Long.valueOf(if (isUp) p.tsUp else p.tsDel)
-            case 5 => // _ttl
-              if (isUp) p.defaultTtl.map(java.lang.Long.valueOf).orNull
-              else null
-            case _ => java.lang.Boolean.valueOf(!isUp) // _deleted
-          }
-          i += 1
-        }
-      case None =>
-        arr(0) = UTF8String.fromString(op)
-        if (data != null) {
-          var i = 0
-          while (i < dataSchema.length) {
-            arr(1 + i) = data.get(i, dataSchema(i).dataType)
-            i += 1
-          }
-        }
-        if (id != null) {
-          var i = 0
-          while (i < idSchema.length) {
-            arr(1 + dataSchema.length + i) = id.get(i, idSchema(i).dataType)
-            i += 1
-          }
-        }
+        .GraftParquetRowWriter.open(plan.logSchema, segmentPath, hconf.value)
+    val arr = new Array[Any](plan.fields.length)
+    var i = 0
+    while (i < plan.fields.length) {
+      val f = plan.fields(i)
+      arr(i) = f.kind match {
+        case 0 => // table column value: post-image (U) / id key (D)
+          if (isUp) {
+            if (f.dataIdx >= 0)
+              data.get(f.dataIdx, dataSchema(f.dataIdx).dataType)
+            else null
+          } else if (f.idIdx >= 0)
+            id.get(f.idIdx, idSchema(f.idIdx).dataType)
+          else null
+        case 1 => // _op_<c>: post-images write their collection cells
+          if (isUp && f.dataIdx >= 0) setFlag else null
+        case 2 => // _del_<c>: explicit-null cell = cell tombstone
+          if (isUp && f.dataIdx >= 0 && data.isNullAt(f.dataIdx))
+            java.lang.Boolean.TRUE
+          else null
+        case 3 => if (isUp) java.lang.Boolean.TRUE else null // _marker
+        case 4 => // _writetime: deletes one tick below upserts
+          java.lang.Long.valueOf(if (isUp) plan.tsUp else plan.tsDel)
+        case 5 => // _ttl
+          if (isUp) plan.defaultTtl.map(java.lang.Long.valueOf).orNull
+          else null
+        case _ => java.lang.Boolean.valueOf(!isUp) // _deleted
+      }
+      i += 1
     }
     writer.write(new GenericInternalRow(arr))
   }
@@ -673,11 +639,11 @@ private[spark] class GraftDeltaWriter(dataSchema: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    emit("U", row, null); nUp += 1
+    emit(isUp = true, row, null); nUp += 1
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    emit("D", null, id); nDel += 1
+    emit(isUp = false, null, id); nDel += 1
   }
 
   override def update(meta: InternalRow, id: InternalRow,
@@ -694,8 +660,8 @@ private[spark] class GraftDeltaWriter(dataSchema: StructType,
       valEq(row.get(j, dataSchema(j).dataType),
         id.get(i, idSchema(i).dataType))
     }
-    if (!keyUnchanged) { emit("D", null, id); nDel += 1 }
-    emit("U", row, null); nUp += 1
+    if (!keyUnchanged) { emit(isUp = false, null, id); nDel += 1 }
+    emit(isUp = true, row, null); nUp += 1
   }
 
   override def commit(): WriterCommitMessage = {
@@ -724,17 +690,4 @@ private[graft] object GraftDeltaWriter {
       hp.getFileSystem(conf).delete(hp, false)
       ()
     } catch { case _: Exception => () }
-
-  /** The delta segment layout: op marker + post-image data columns +
-    * prefixed id columns (deletes carry only the latter). The `__delta_`
-    * prefix keeps user columns collision-free (CQL identifiers are
-    * lowercased alphanumerics). */
-  def segmentSchema(dataSchema: StructType, idSchema: StructType)
-      : StructType =
-    StructType(
-      org.apache.spark.sql.types.StructField("__delta_op",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      (dataSchema.fields.map(_.copy(nullable = true)) ++
-        idSchema.fields.map(f =>
-          f.copy(name = s"__delta_id_${f.name}", nullable = true))))
 }

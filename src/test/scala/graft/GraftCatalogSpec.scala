@@ -696,55 +696,182 @@ class GraftCatalogSpec extends SparkSpec {
     }
   }
 
-  test("distributed fold single-write: writer-shaped segments produce " +
-    "the IDENTICAL post-state as the legacy two-write fold, and the " +
-    "statement's visible cells carry ONE writetime") {
+  test("shaped-vs-per-row parity: every MERGE branch lands IDENTICAL rows " +
+    "on both apply paths, and each statement's visible cells carry ONE " +
+    "writetime") {
+    val s = CqlSession(spark)
+    s.exposeAsCatalog("graftpar")
+    import spark.implicits._
+    Seq((2L, "s2", 200L), (3L, "s3", 300L), (7L, "s7", 700L))
+      .toDF("k", "v", "n").createOrReplaceTempView("par_src")
+    def merge(branches: String)(t: String): String =
+      s"MERGE INTO $t t USING par_src s ON t.k = s.k $branches"
+    // (branch, statement over a target name, whether it writes upserts);
+    // the never-firing MATCHED DELETE keeps the insert-only MERGE on the
+    // row-level delta path instead of a plain append
+    val matrix: Seq[(String, String => String, Boolean)] = Seq(
+      ("matched UPDATE",
+        merge("WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n"), true),
+      ("matched DELETE", merge("WHEN MATCHED THEN DELETE"), false),
+      ("not-matched INSERT", merge("WHEN MATCHED AND s.n < 0 THEN DELETE " +
+        "WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)"),
+        true),
+      ("not-matched-by-source DELETE",
+        merge("WHEN NOT MATCHED BY SOURCE THEN DELETE"), false),
+      ("key-moving UPDATE SET k = k + 1 chain",
+        t => s"UPDATE $t SET k = k + 1", true),
+      ("explicit scalar null",
+        merge("WHEN MATCHED THEN UPDATE SET v = NULL"), true),
+      ("collection set to NULL",
+        merge("WHEN MATCHED THEN UPDATE SET tags = NULL"), true))
+    def mk(tbl: String): Unit = {
+      s.execute(s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text, " +
+        "n bigint, tags list<bigint>)")
+      (1L to 6L).foreach(i => s.execute(s"INSERT INTO $tbl (k, v, n, tags) " +
+        s"VALUES ($i, 'v$i', ${i * 10}, [$i, ${i + 1}])"))
+    }
+    val initial = (1L to 6L).map(i => (i, s"v$i", i * 10, List(i, i + 1)))
+    def rows(tbl: String): Seq[(Long, String, Long, List[Long])] =
+      spark.sql(s"SELECT k, v, n, tags FROM graftpar.default.$tbl ORDER BY k")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          Option(r.getSeq[Long](3)).map(_.toList).orNull)).toSeq
+    def writetimes(tbl: String): Set[Long] =
+      s.execute(s"SELECT WRITETIME(n) FROM $tbl").collect()
+        .map(_.getLong(0)).toSet
+    // one run: the post-state and the writetimes the statement made visible
+    def run(tbl: String, stmt: String => String, shaped: Boolean)
+        : (Seq[(Long, String, Long, List[Long])], Set[Long]) = {
+      mk(tbl)
+      val before = writetimes(tbl)
+      val sql = stmt(s"graftpar.default.$tbl")
+      if (shaped) forceDistributed(spark.sql(sql)) else spark.sql(sql)
+      (rows(tbl), writetimes(tbl) -- before)
+    }
+    matrix.zipWithIndex.foreach { case ((branch, stmt, upserts), i) =>
+      val (perRow, wtsR) = run(s"par${i}_r", stmt, shaped = false)
+      val (shaped, wtsS) = run(s"par${i}_s", stmt, shaped = true)
+      assert(shaped === perRow,
+        s"$branch: shaped diverged from per-row\n$shaped\n$perRow")
+      assert(perRow !== initial, s"$branch changed nothing")
+      val want = if (upserts) 1 else 0
+      assert(wtsR.size === want && wtsS.size === want,
+        s"$branch: statement writetimes per-row $wtsR, shaped $wtsS")
+    }
+  }
+
+  test("shaped delta type matrix: a forced-shaped MERGE commits and reads " +
+    "back on every column shape (collections, vector, blob key, decimal/" +
+    "timestamp/uuid, clustering key, UDT)") {
     forceDistributed {
       val s = CqlSession(spark)
-      import spark.implicits._
-      def run(tbl: String, cat: String, shaping: Boolean)
-          : (Seq[(Long, String, Long, Seq[Long])], Int) = {
-        spark.conf.set("spark.graft.catalog.deltaWriterShaping",
-          shaping.toString)
-        try {
-          s.execute(s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text, " +
-            "n bigint, tags list<bigint>)")
-          (1L to 6L).foreach(i => s.execute(
-            s"INSERT INTO $tbl (k, v, n, tags) VALUES " +
-              s"($i, 'v$i', ${i * 10}, [$i])"))
-          s.exposeAsCatalog(cat)
-          Seq((2L, "up2", 200L), (3L, "del", 0L), (7L, "new7", 700L))
-            .toDF("k", "v", "n").createOrReplaceTempView(s"${tbl}_src")
-          spark.sql(s"""MERGE INTO $cat.default.$tbl t
-                        USING ${tbl}_src s ON t.k = s.k
-                        WHEN MATCHED AND s.v = 'del' THEN DELETE
-                        WHEN MATCHED THEN UPDATE
-                          SET v = s.v, n = s.n, tags = NULL
-                        WHEN NOT MATCHED THEN
-                          INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-          val rows = spark.sql(s"SELECT k, v, n, tags FROM " +
-            s"$cat.default.$tbl ORDER BY k").collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-              Option(r.getSeq[Long](3)).map(_.toSeq).getOrElse(null)))
-            .toSeq
-          // one statement = one visible coordinator timestamp, on the
-          // single-write path exactly like the legacy fold
-          val wts = s.execute(
-            s"SELECT WRITETIME(v) FROM $tbl WHERE k IN (2, 7)").collect()
-            .map(_.getLong(0)).distinct
-          (rows, wts.length)
-        } finally
-          spark.conf.unset("spark.graft.catalog.deltaWriterShaping")
+      s.execute("CREATE TYPE addr_tm (street text, zip bigint)")
+      s.exposeAsCatalog("grafttm")
+      // (table, column DDL, key columns, value columns, pre rows, source
+      // rows); rows are inline-table tuples in column order, and a source
+      // row with n < 0 deletes its matched target row
+      val shapes = Seq(
+        ("tm_scalar", "k bigint PRIMARY KEY, n bigint, v text",
+          Seq("k"), Seq("n", "v"),
+          "(1L, 1L, 'a'), (2L, 2L, 'b'), (3L, 3L, 'c')",
+          "(2L, 20L, 'B'), (3L, -1L, 'x'), (4L, 40L, 'D')"),
+        ("tm_list", "k bigint PRIMARY KEY, n bigint, l list<bigint>",
+          Seq("k"), Seq("n", "l"),
+          "(1L, 1L, array(1L, 2L)), (2L, 2L, array(3L)), (3L, 3L, array(4L))",
+          "(2L, 20L, array(9L, 8L)), (3L, -1L, array(0L)), " +
+            "(4L, 40L, array(5L))"),
+        ("tm_set", "k bigint PRIMARY KEY, n bigint, st set<text>",
+          Seq("k"), Seq("n", "st"),
+          "(1L, 1L, array('a', 'b')), (2L, 2L, array('c')), " +
+            "(3L, 3L, array('d'))",
+          "(2L, 20L, array('x', 'y')), (3L, -1L, array('z')), " +
+            "(4L, 40L, array('e'))"),
+        ("tm_map", "k bigint PRIMARY KEY, n bigint, m map<text, bigint>",
+          Seq("k"), Seq("n", "m"),
+          "(1L, 1L, map('a', 1L)), (2L, 2L, map('b', 2L)), " +
+            "(3L, 3L, map('c', 3L))",
+          "(2L, 20L, map('b', 20L, 'bb', 21L)), (3L, -1L, map('x', 0L)), " +
+            "(4L, 40L, map('d', 4L))"),
+        ("tm_vector", "k bigint PRIMARY KEY, n bigint, e vector<float, 3>",
+          Seq("k"), Seq("n", "CAST(e AS ARRAY<FLOAT>) AS e"),
+          "(1L, 1L, array(1.0, 2.0, 3.0)), (2L, 2L, array(4.0, 5.0, 6.0)), " +
+            "(3L, 3L, array(7.0, 8.0, 9.0))",
+          "(2L, 20L, array(0.5, 0.25, 0.125)), (3L, -1L, array(0.0, 0.0, 0.0)), " +
+            "(4L, 40L, array(1.5, 2.5, 3.5))"),
+        ("tm_blob", "k blob PRIMARY KEY, n bigint",
+          Seq("k"), Seq("n"),
+          "(X'01', 1L), (X'0102', 2L), (X'ff', 3L)",
+          "(X'0102', 20L), (X'ff', -1L), (X'02', 40L)"),
+        ("tm_typed", "k bigint PRIMARY KEY, n bigint, d decimal, " +
+          "ts timestamp, u uuid",
+          Seq("k"), Seq("n", "CAST(d AS DECIMAL(38, 18)) AS d",
+            "CAST(ts AS TIMESTAMP) AS ts", "u"),
+          "(1L, 1L, 1.25, '2024-01-02 03:04:05', " +
+            "'123e4567-e89b-12d3-a456-426614174000'), " +
+            "(2L, 2L, 2.5, '2024-02-03 04:05:06', " +
+            "'223e4567-e89b-12d3-a456-426614174000'), " +
+            "(3L, 3L, 3.75, '2024-03-04 05:06:07', " +
+            "'323e4567-e89b-12d3-a456-426614174000')",
+          "(2L, 20L, 20.125, '2025-01-01 00:00:00', " +
+            "'a23e4567-e89b-12d3-a456-426614174000'), " +
+            "(3L, -1L, 0, '2025-01-01 00:00:00', " +
+            "'b23e4567-e89b-12d3-a456-426614174000'), " +
+            "(4L, 40L, 40.5, '2025-04-05 06:07:08', " +
+            "'c23e4567-e89b-12d3-a456-426614174000')"),
+        ("tm_clustering", "p bigint, c bigint, n bigint, v text, " +
+          "PRIMARY KEY (p, c)",
+          Seq("p", "c"), Seq("n", "v"),
+          "(1L, 1L, 1L, 'a'), (1L, 2L, 2L, 'b'), (2L, 1L, 3L, 'c')",
+          "(1L, 2L, 20L, 'B'), (2L, 1L, -1L, 'x'), (1L, 3L, 40L, 'D')"),
+        ("tm_udt", "k bigint PRIMARY KEY, n bigint, a addr_tm",
+          Seq("k"), Seq("n", "a"),
+          "(1L, 1L, named_struct('street', 'a', 'zip', 1L)), " +
+            "(2L, 2L, named_struct('street', 'b', 'zip', 2L)), " +
+            "(3L, 3L, named_struct('street', 'c', 'zip', 3L))",
+          "(2L, 20L, named_struct('street', 'B', 'zip', 20L)), " +
+            "(3L, -1L, named_struct('street', 'x', 'zip', 0L)), " +
+            "(4L, 40L, named_struct('street', 'D', 'zip', 4L))"))
+      shapes.foreach { case (tbl, ddl, keys, vals, pre, src) =>
+        val names = keys ++ vals.map(_.split(' ').last)
+        def view(name: String, rows: String): Unit = spark.sql(
+          s"SELECT ${(keys ++ vals).mkString(", ")} FROM VALUES $rows " +
+            s"AS v(${names.mkString(", ")})").createOrReplaceTempView(name)
+        view(s"${tbl}_pre", pre); view(s"${tbl}_src", src)
+        s.execute(s"CREATE TABLE $tbl ($ddl)")
+        val target = s"grafttm.default.$tbl"
+        val cols = names.mkString(", ")
+        spark.sql(s"INSERT INTO $target ($cols) SELECT * FROM ${tbl}_pre")
+        val on = keys.map(k => s"t.$k = s.$k").mkString(" AND ")
+        spark.sql(
+          s"""MERGE INTO $target t USING ${tbl}_src s ON $on
+              WHEN MATCHED AND s.n < 0 THEN DELETE
+              WHEN MATCHED THEN UPDATE SET *
+              WHEN NOT MATCHED THEN INSERT *""")
+        def json(from: String): Seq[String] =
+          spark.sql(s"SELECT to_json(struct($cols)) FROM $from").collect()
+            .map(_.getString(0)).sorted.toSeq
+        val expected = json(
+          s"(SELECT * FROM ${tbl}_pre t LEFT ANTI JOIN ${tbl}_src s ON $on " +
+            s"UNION ALL SELECT * FROM ${tbl}_src WHERE n >= 0) x")
+        assert(expected.size === 3, tbl)
+        assert(json(target) === expected, s"$tbl read back diverged")
       }
-      val (legacy, wtsL) = run("cat_sw_l", "graftswl", shaping = false)
-      val (shapedR, wtsS) = run("cat_sw_s", "graftsws", shaping = true)
-      assert(shapedR === legacy,
-        s"single-write diverged from the legacy fold:\n$shapedR\n$legacy")
-      assert(wtsL === 1 && wtsS === 1,
-        s"statement writetimes: legacy $wtsL, shaped $wtsS (want 1)")
-      // the tags = NULL post-image is a real set-to-null on both paths
-      assert(shapedR.collect { case (2L, _, _, tg) => tg } === Seq(null))
     }
+  }
+
+  test("deltaShapePlan refuses a type-parity miss loudly, naming the " +
+    "column and both types") {
+    import org.apache.spark.sql.types._
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_parity (k bigint PRIMARY KEY, n bigint)")
+    val id = StructType(Seq(StructField("k", LongType)))
+    def data(n: DataType): StructType =
+      StructType(Seq(StructField("k", LongType), StructField("n", n)))
+    val plan = s.deltaShapePlan("cat_parity", data(LongType), id)
+    assert(plan.fields.length === plan.logSchema.length)
+    val e = intercept[IllegalStateException](
+      s.deltaShapePlan("cat_parity", data(IntegerType), id))
+    assert(e.getMessage.contains("column n arrives as int") &&
+      e.getMessage.contains("stores bigint"), e.getMessage)
   }
 
   test("distributed fold: MERGE with a non-key-equality ON condition — " +
