@@ -395,7 +395,7 @@ object RelationalQueries {
     * part files appended (the 100 TB ingest shape — immutable segments
     * land, existing ones never mutate) → fold ONLY the new files'
     * partial rows into the standing MV (decimal partials re-aggregate
-    * exactly, so increment ≡ rebuild bit-for-bit — MvResumeProbe measures
+    * exactly, so increment ≡ rebuild bit-for-bit — a resume probe measured
     * the win, a15IncrementalSpec pins the equality); any folded file
     * rewritten or removed (compaction) → full rebuild, the only sound
     * answer without per-file retractions.

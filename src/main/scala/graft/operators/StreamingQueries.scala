@@ -22,7 +22,7 @@ object StreamingQueries {
     * Batch path groups on `date_trunc` rather than `window()`: for an
     * epoch-aligned tumbling width the two keys are IDENTICAL values, but
     * the struct(start,end) group key costs a measured ~12% at sf10 (r9
-    * BenchFocus: 0.419 → 0.369 s at 10M events) — pure key-width overhead
+    * focused bench: 0.419 → 0.369 s at 10M events) — pure key-width overhead
     * in the shuffle. The STREAMING twin `t8_stream_tumbling` keeps
     * `window()`, which watermark eviction actually needs. */
   def t1_tumbling(s: SparkSession, d: String): DataFrame =
@@ -376,7 +376,7 @@ object StreamingQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** T17 (r13) — the engine-level answer to the raw-scan decode floor the
-    * r12 AsymptoteProbe measured on t1 (≈2.9× vs DuckDB at 100 M rows,
+    * r12 asymptote probe measured on t1 (≈2.9× vs DuckDB at 100 M rows,
     * decode-rate-bound): nobody scans 100 TB of raw events per dashboard
     * query — Cassandra's own answer to "hourly rollup over raw events" is
     * a maintained materialized view. The rollup MV is kept by the

@@ -13,8 +13,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Columnar PARTIAL aggregation over a vectorized parquet scan (r11,
-  * VERDICT task 7). The measured floor decomposition (ColumnarProbe at
-  * the sf10-equivalent fixture) showed the stock path's wall is NOT
+  * VERDICT task 7). The measured floor decomposition (a columnar probe
+  * at the sf10-equivalent fixture) showed the stock path's wall is NOT
   * parquet decode: a hand-rolled aggregate over `executeColumnar()`
   * batches ran at count-star speed (0.157 s vs 0.160 s) while the full
   * SQL plan took 0.829 s — the ColumnarToRow materialization plus the
@@ -241,9 +241,9 @@ object ColumnarPartialAgg {
     *
     * CONTRACT — rows-beyond-filter evaluation (r15 advisor note): the
     * batch `fill`/`fillDouble` path evaluates the compiled tree for EVERY
-    * row of the batch, including slot<0 (filtered-out) rows the per-row
-    * path never touches. Every node admitted here must therefore be
-    * THROW-FREE on arbitrary in-domain column values (nulls are
+    * row of the batch, including slot<0 (filtered-out) rows a per-row
+    * evaluation would never touch. Every node admitted here must
+    * therefore be THROW-FREE on arbitrary in-domain column values (nulls are
     * placeholder-0 and masked; double arithmetic never throws; division
     * is by non-zero literals only). A future node that can raise on data
     * (e.g. non-literal division under ANSI, overflow-checked casts) must
@@ -621,11 +621,11 @@ object ColumnarPartialAgg {
     }
     def reset(): Unit = ns = new Array[Long](0)
   }
-  private final class DoubleSumAcc(e: DoubleCol, batchFill: Boolean,
-      sf: SharedFills) extends Acc {
+  private final class DoubleSumAcc(e: DoubleCol, sf: SharedFills)
+      extends Acc {
     private var sums = new Array[Double](0)
     private var seen = new Array[Boolean](0)
-    private val scratch = if (batchFill) new Scratch(sf) else null
+    private val scratch = new Scratch(sf)
     private var vals = new Array[Double](0)
     private var vnulls = new Array[Boolean](0)
     def grow(n: Int): Unit = if (sums.length < n) {
@@ -634,23 +634,14 @@ object ColumnarPartialAgg {
       seen = java.util.Arrays.copyOf(seen, c)
     }
     def updateBatch(b: ColumnarBatch, n: Int, slots: Array[Int]): Unit = {
-      if (batchFill) {
-        if (vals.length < n) {
-          vals = new Array[Double](n); vnulls = new Array[Boolean](n)
-        }
-        e.fill(b, n, vals, vnulls, scratch)
-        var i = 0
-        while (i < n) {
-          val s = slots(i)
-          if (s >= 0 && !vnulls(i)) { sums(s) += vals(i); seen(s) = true }
-          i += 1
-        }
-        return
+      if (vals.length < n) {
+        vals = new Array[Double](n); vnulls = new Array[Boolean](n)
       }
+      e.fill(b, n, vals, vnulls, scratch)
       var i = 0
       while (i < n) {
         val s = slots(i)
-        if (s >= 0 && !e.isNull(b, i)) { sums(s) += e.get(b, i); seen(s) = true }
+        if (s >= 0 && !vnulls(i)) { sums(s) += vals(i); seen(s) = true }
         i += 1
       }
     }
@@ -701,11 +692,11 @@ object ColumnarPartialAgg {
   }
   /** Average over a double input: buffer is Spark Average's
     * (sum: double, count: long) — the final agg computes the division. */
-  private final class DoubleAvgAcc(e: DoubleCol, batchFill: Boolean,
-      sf: SharedFills) extends Acc {
+  private final class DoubleAvgAcc(e: DoubleCol, sf: SharedFills)
+      extends Acc {
     private var sums = new Array[Double](0)
     private var ns = new Array[Long](0)
-    private val scratch = if (batchFill) new Scratch(sf) else null
+    private val scratch = new Scratch(sf)
     private var vals = new Array[Double](0)
     private var vnulls = new Array[Boolean](0)
     def grow(n: Int): Unit = if (sums.length < n) {
@@ -714,23 +705,14 @@ object ColumnarPartialAgg {
       ns = java.util.Arrays.copyOf(ns, c)
     }
     def updateBatch(b: ColumnarBatch, n: Int, slots: Array[Int]): Unit = {
-      if (batchFill) {
-        if (vals.length < n) {
-          vals = new Array[Double](n); vnulls = new Array[Boolean](n)
-        }
-        e.fill(b, n, vals, vnulls, scratch)
-        var i = 0
-        while (i < n) {
-          val s = slots(i)
-          if (s >= 0 && !vnulls(i)) { sums(s) += vals(i); ns(s) += 1 }
-          i += 1
-        }
-        return
+      if (vals.length < n) {
+        vals = new Array[Double](n); vnulls = new Array[Boolean](n)
       }
+      e.fill(b, n, vals, vnulls, scratch)
       var i = 0
       while (i < n) {
         val s = slots(i)
-        if (s >= 0 && !e.isNull(b, i)) { sums(s) += e.get(b, i); ns(s) += 1 }
+        if (s >= 0 && !vnulls(i)) { sums(s) += vals(i); ns(s) += 1 }
         i += 1
       }
     }
@@ -848,8 +830,8 @@ object ColumnarPartialAgg {
     * isEmpty=false) so the final aggregate reports null. ANSI: both
     * cases THROW, exactly where the stock cast/sum would. */
   private final class DecimalSumAcc(e: DoubleCol, precision: Int, scale: Int,
-      ansi: Boolean, batchFill: Boolean, sf: SharedFills) extends Acc {
-    private val scratch = if (batchFill) new Scratch(sf) else null
+      ansi: Boolean, sf: SharedFills) extends Acc {
+    private val scratch = new Scratch(sf)
     private var vals = new Array[Double](0)
     private var vnulls = new Array[Boolean](0)
     private val factor = math.pow(10d, scale)
@@ -932,23 +914,14 @@ object ColumnarPartialAgg {
       } else if (ansi) overflow(d.toString)
     }
     def updateBatch(b: ColumnarBatch, n: Int, slots: Array[Int]): Unit = {
-      if (batchFill) {
-        if (vals.length < n) {
-          vals = new Array[Double](n); vnulls = new Array[Boolean](n)
-        }
-        e.fill(b, n, vals, vnulls, scratch)
-        var i = 0
-        while (i < n) {
-          val s = slots(i)
-          if (s >= 0 && !vnulls(i) && !over(s)) addValue(s, vals(i))
-          i += 1
-        }
-        return
+      if (vals.length < n) {
+        vals = new Array[Double](n); vnulls = new Array[Boolean](n)
       }
+      e.fill(b, n, vals, vnulls, scratch)
       var i = 0
       while (i < n) {
         val s = slots(i)
-        if (s >= 0 && !e.isNull(b, i) && !over(s)) addValue(s, e.get(b, i))
+        if (s >= 0 && !vnulls(i) && !over(s)) addValue(s, vals(i))
         i += 1
       }
     }
@@ -1116,13 +1089,6 @@ object ColumnarPartialAgg {
     // DecimalSumAcc mirror the matching stock semantics — throw under
     // ANSI exactly where stock cast/sum would, null/wrap otherwise
     val ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
-    // batch expression evaluation for double-input accumulators (fill
-    // into primitive arrays, then a branch-light accumulate loop) — the
-    // per-row virtual-call chain through composed Col trees measured as
-    // the dominant term of wide decimal aggs once honest forcing landed.
-    // Conf-gated for A/B and as a kill switch.
-    val batchFill = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.columnarAgg.batchFill", "true").toBoolean
     // the residual filter sits BELOW the project, so its attributes are
     // scan attributes directly — no alias substitution needed
     val predEval = filter.map(f => compilePred(f, scan.output))
@@ -1194,12 +1160,12 @@ object ColumnarPartialAgg {
               compile(inner, scanOut).collect {
                 case dc: DoubleCol if bufOk =>
                   (sf: SharedFills) =>
-                    new DecimalSumAcc(dc, dt.precision, dt.scale, ansi, batchFill, sf)
+                    new DecimalSumAcc(dc, dt.precision, dt.scale, ansi, sf)
               }
             case (DoubleType, se) => compile(se, scanOut).collect {
               case dc: DoubleCol
                   if s.aggBufferAttributes.map(_.dataType) == Seq(DoubleType) =>
-                (sf: SharedFills) => new DoubleSumAcc(dc, batchFill, sf)
+                (sf: SharedFills) => new DoubleSumAcc(dc, sf)
             }
             case (LongType, se) => compile(se, scanOut).collect {
               case lc: LongCol
@@ -1213,7 +1179,7 @@ object ColumnarPartialAgg {
                 Seq(DoubleType, LongType) =>
             compile(subst(av.child), scanOut).collect {
               case dc: DoubleCol =>
-                (sf: SharedFills) => new DoubleAvgAcc(dc, batchFill, sf)
+                (sf: SharedFills) => new DoubleAvgAcc(dc, sf)
             }
           case mm @ (_: Min | _: Max) =>
             val isMin = mm.isInstanceOf[Min]

@@ -47,4 +47,10 @@ object GraftShim {
         java.util.Collections.emptyMap()),
       Seq(path), Some(schema),
       classOf[execution.datasources.parquet.ParquetFileFormat])
+
+  /** Block until the listener bus has delivered every posted event (its
+    * drain is `private[spark]`): a profiler reads its listeners' totals
+    * only after the run's last job, stage and query events have landed. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
