@@ -5,7 +5,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, BinaryComparison, Cast, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, Not, Or, Subtract, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Partial, Sum}
 import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, MicrosToTimestamp, TruncTimestamp}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, LeafExecNode, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.ColumnarRule
 import org.apache.spark.sql.types._
@@ -29,9 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * integration surface — `injectColumnar` + a plan-segment swap.]
   *
   * Scope is deliberately narrow and bail-out-first: a supported plan is
-  *   HashAggregate(Partial, [Project,] FileSourceScan(parquet, columnar))
-  * whose grouping keys and aggregate inputs compile to the typed column
-  * programs below; anything else returns the plan unchanged. The row
+  *   HashAggregate(Partial, [Project,] [Filter,] columnar parquet scan)
+  * where the scan is a V1 FileSourceScan(parquet) or a DSv2
+  * BatchScan(ParquetScan, no pushed aggregate) — the latter serves every
+  * GraftCatalog snapshot read — and whose grouping keys, filter and
+  * aggregate inputs compile to the typed column programs below; anything
+  * else returns the plan unchanged. The row
   * loop is allocation-free: group keys evaluate into a reused long[]
   * (strings interned to dense ids per partition, nulls in a bitmask),
   * sum inputs stay primitive, and decimal quantization runs an exact
@@ -1078,11 +1085,13 @@ object ColumnarPartialAgg {
     }
   }
 
-  /** Plan-time compilation of the whole match, or None to leave the plan
-    * untouched. */
-  def compileAgg(agg: HashAggregateExec, scan: FileSourceScanExec,
+  /** Plan-time compilation of the whole match, or the reason to leave the
+    * plan untouched. `scan` is a columnar parquet scan leaf (V1
+    * FileSourceScanExec or DSv2 BatchScanExec): only its `output` is read
+    * here, and it must list the attributes in batch column order. */
+  def compileAgg(agg: HashAggregateExec, scan: SparkPlan,
       project: Option[Seq[NamedExpression]],
-      filter: Option[Expression] = None): Option[Kernel] = {
+      filter: Option[Expression] = None): Either[String, Kernel] = {
     // ANSI changes overflow behavior in the sum kernels (Spark 4 defaults
     // it ON, so bailing here would disable the rule in every production
     // session): capture the mode at plan time and let LongSumAcc /
@@ -1092,7 +1101,8 @@ object ColumnarPartialAgg {
     // the residual filter sits BELOW the project, so its attributes are
     // scan attributes directly — no alias substitution needed
     val predEval = filter.map(f => compilePred(f, scan.output))
-    if (predEval.exists(_.isEmpty)) return None
+    if (predEval.exists(_.isEmpty))
+      return Left(s"filter does not compile: ${filter.get}")
     val scanOut = scan.output
     // fold the fused Project into the aggregate's expressions
     val aliasMap: Map[Long, Expression] = project match {
@@ -1118,7 +1128,11 @@ object ColumnarPartialAgg {
         case _ => None // double keys: rare, and bit-pattern care — bail
       }
     }
-    if (keySpecs.exists(_.isEmpty)) return None
+    keySpecs.indexWhere(_.isEmpty) match {
+      case -1 => ()
+      case i => return Left(
+        s"grouping key does not compile: ${agg.groupingExpressions(i)}")
+    }
     // shared-subexpression registry (r16): double arithmetic subtrees
     // appearing in 2+ batch-filled aggregate inputs (a1: price*(1-disc)
     // feeds both the disc and charge sums) are computed once per batch
@@ -1204,7 +1218,11 @@ object ColumnarPartialAgg {
           case _ => None
         }
       } finally activeShares.remove()
-    if (accFactories.exists(_.isEmpty)) return None
+    accFactories.indexWhere(_.isEmpty) match {
+      case -1 => ()
+      case i => return Left(
+        s"aggregate does not compile: ${agg.aggregateExpressions(i)}")
+    }
     // partial output must be exactly the grouping attributes followed by
     // the aggregate buffer attributes, exprId-wise in order — a same-length
     // but reordered/aliased resultExpressions list must bail, not emit
@@ -1217,15 +1235,18 @@ object ColumnarPartialAgg {
           .zip(ae.aggregateFunction.inputAggBufferAttributes)
       }
     val nGroup = agg.groupingExpressions.length
-    if (agg.output.length != nGroup + expectedBufs.length) return None
+    val outputMismatch =
+      "output is not the grouping attributes followed by the buffer attributes"
+    if (agg.output.length != nGroup + expectedBufs.length)
+      return Left(outputMismatch)
     val groupOk = agg.output.take(nGroup)
       .lazyZip(agg.groupingExpressions.map(_.toAttribute))
       .forall((a, b) => a.exprId == b.exprId)
     val bufOk = agg.output.drop(nGroup).lazyZip(expectedBufs)
       .forall((a, bp) => a.exprId == bp._1.exprId || a.exprId == bp._2.exprId)
-    if (!groupOk || !bufOk) return None
+    if (!groupOk || !bufOk) return Left(outputMismatch)
     val factories = accFactories.map(_.get).toArray
-    Some(Kernel(keySpecs.map(_.get).toArray,
+    Right(Kernel(keySpecs.map(_.get).toArray,
       (sf: SharedFills) => factories.map(_(sf)),
       predEval.map(_.get), shares.n))
   }
@@ -1234,10 +1255,16 @@ object ColumnarPartialAgg {
 /** The swapped-in physical node. Holds the scan as a private member (not
   * a plan child): no ColumnarToRow transition is ever inserted, and the
   * node's OUTPUT is the original partial HashAggregate's attributes, so
-  * the exchange and final aggregate above resolve unchanged. */
+  * the exchange and final aggregate above resolve unchanged. The scan is
+  * used only through `output`, `executeColumnar()` (which prepares its
+  * subqueries and applies its runtime and partition filters, exactly as
+  * under a ColumnarToRow parent) and `simpleString`, so a V1
+  * FileSourceScanExec and a DSv2 BatchScanExec are served alike. The
+  * scan's own SQLMetrics are listed under `scan.` beside the kernel's:
+  * the scan is not a plan child, so nothing else would show them. */
 case class ColumnarPartialAggExec(
     output: Seq[Attribute],
-    scan: FileSourceScanExec,
+    scan: SparkPlan,
     groupingExprs: Seq[NamedExpression],
     aggExprs: Seq[AggregateExpression],
     projectList: Option[Seq[NamedExpression]],
@@ -1249,14 +1276,31 @@ case class ColumnarPartialAggExec(
   override def stringArgs: Iterator[Any] =
     Iterator(groupingExprs, aggExprs, scan.simpleString(60))
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
+    "numInputBatches" ->
+      SQLMetrics.createMetric(sparkContext, "number of input batches"),
+    "numOutputRows" ->
+      SQLMetrics.createMetric(sparkContext, "number of partial rows out"),
+    "numFlushes" ->
+      SQLMetrics.createMetric(sparkContext, "number of flushes at maxGroups"),
+    "kernelTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "kernel time")
+  ) ++ scan.metrics.map { case (k, m) => s"scan.$k" -> m }
+
   override protected def doExecute(): RDD[InternalRow] = {
-    // compile on the driver (bail already ruled out None at plan time)
+    // compile on the driver (the rule already compiled it at plan time)
     val kernel = compileAgg(
       HashAggregateExec(None, isStreaming = false, None, groupingExprs,
         aggExprs, aggExprs.map(_.resultAttribute), 0, output, scan),
       scan, projectList, filterCond)
-      .getOrElse(throw new IllegalStateException(
-        "ColumnarPartialAggExec planned over an uncompilable shape"))
+      .fold(why => throw new IllegalStateException(
+        s"ColumnarPartialAggExec planned over an uncompilable shape: $why"),
+        identity)
+    val numInputRows = longMetric("numInputRows")
+    val numInputBatches = longMetric("numInputBatches")
+    val numOutputRows = longMetric("numOutputRows")
+    val numFlushes = longMetric("numFlushes")
+    val kernelTime = longMetric("kernelTime")
     val outTypes = output.map(_.dataType)
     val nKeys = kernel.keys.length
     // memory bound (100 TB safety): stock partial HashAggregate spills
@@ -1450,6 +1494,7 @@ case class ColumnarPartialAggExec(
         // snapshot the emit inputs (the iterators are lazy), THEN reset
         // the live structures; accs reset AFTER the iterator drains —
         // see pump()
+        numOutputRows += numGroups
         if (fastMap != null) {
           val ksnap = java.util.Arrays.copyOf(fastKeys, fastN)
           val out = emitAllFast(ksnap, fastN, nullSlotId)
@@ -1754,13 +1799,19 @@ case class ColumnarPartialAggExec(
               pendingReset = false
             }
             if (batches.hasNext) {
-              consume(batches.next())
+              val batch = batches.next()
+              val t0 = System.nanoTime()
+              consume(batch)
+              kernelTime += System.nanoTime() - t0
+              numInputRows += batch.numRows()
+              numInputBatches += 1
               // packedCap bounds the per-key id space one batch of
               // headroom below the pack-field capacity (ids never exceed
               // the live group count, so flushing here keeps every field
               // in range); at the default maxGroups it is never the
               // binding constraint
               if (numGroups > math.min(maxGroups, packedCap)) {
+                numFlushes += 1
                 cur = flush()
                 pendingReset = true
               }
@@ -1786,8 +1837,9 @@ case class ColumnarPartialAggExec(
 }
 
 /** The `injectColumnar` rule: swap supported partial aggregates before
-  * transitions are inserted; leave everything else byte-identical. */
-case class GraftColumnarRule() extends ColumnarRule {
+  * transitions are inserted; leave everything else byte-identical. A
+  * partial aggregate left in place logs why at debug level. */
+case class GraftColumnarRule() extends ColumnarRule with Logging {
   override def preColumnarTransitions: org.apache.spark.sql.catalyst.rules.Rule[SparkPlan] =
     new org.apache.spark.sql.catalyst.rules.Rule[SparkPlan] {
       override val ruleName: String = "graft.ColumnarPartialAgg"
@@ -1797,27 +1849,31 @@ case class GraftColumnarRule() extends ColumnarRule {
           .toBoolean) plan
       else plan.transformUp {
         case agg: HashAggregateExec if isPartial(agg) => agg.child match {
-          case scan: FileSourceScanExec if columnarParquet(scan) =>
+          case _ if !withinWidth(agg) => kept(agg, "wider than the width gate")
+          case scan if columnarParquet(scan) =>
             swap(agg, scan, None, None)
-          case ProjectExec(pl, scan: FileSourceScanExec)
+          case ProjectExec(pl, scan)
               if columnarParquet(scan) && pl.forall(_.deterministic) =>
             swap(agg, scan, Some(pl), None)
-          case FilterExec(cond, scan: FileSourceScanExec)
+          case FilterExec(cond, scan)
               if columnarParquet(scan) && cond.deterministic =>
             swap(agg, scan, None, Some(cond))
-          case ProjectExec(pl, FilterExec(cond, scan: FileSourceScanExec))
+          case ProjectExec(pl, FilterExec(cond, scan))
               if columnarParquet(scan) && cond.deterministic &&
                 pl.forall(_.deterministic) =>
             swap(agg, scan, Some(pl), Some(cond))
-          case _ => agg
+          case child => kept(agg, "input is not a columnar parquet scan " +
+            s"under at most a deterministic Project and Filter: ${child.nodeName}")
         }
       }
     }
 
   private def isPartial(agg: HashAggregateExec): Boolean =
     agg.aggregateExpressions.forall(_.mode == Partial) &&
-      agg.requiredChildDistributionExpressions.isEmpty &&
-      agg.groupingExpressions.length <= 60 && // null bitmask is one long
+      agg.requiredChildDistributionExpressions.isEmpty
+
+  private def withinWidth(agg: HashAggregateExec): Boolean =
+    agg.groupingExpressions.length <= 60 && // null bitmask is one long
       // WIDTH GATE (re-measured r14, sf10 fixture, HONEST forcing): the
       // original maxAggs=2 default came from a count()-forced comparison
       // (swapped 0.60 vs stock 0.47) in which the optimizer had PRUNED the
@@ -1832,16 +1888,32 @@ case class GraftColumnarRule() extends ColumnarRule {
         org.apache.spark.sql.internal.SQLConf.get
           .getConfString("spark.graft.columnarAgg.maxAggs", "16").toInt
 
-  private def columnarParquet(scan: FileSourceScanExec): Boolean =
-    scan.supportsColumnar &&
+  /** A vectorized parquet scan of either kind: V1 FileSourceScanExec, or a
+    * DSv2 BatchScanExec over a ParquetScan (catalog snapshots, and
+    * `spark.read.parquet` once parquet leaves
+    * `spark.sql.sources.useV1SourceList`). A ParquetScan with a pushed
+    * aggregate emits aggregate rows, not table rows: left alone. */
+  private def columnarParquet(plan: SparkPlan): Boolean = plan match {
+    case scan: FileSourceScanExec => scan.supportsColumnar &&
       scan.relation.fileFormat.toString.toLowerCase.contains("parquet")
+    case scan: BatchScanExec => scan.scan match {
+      case p: ParquetScan => p.pushedAggregate.isEmpty && scan.supportsColumnar
+      case _ => false
+    }
+    case _ => false
+  }
 
-  private def swap(agg: HashAggregateExec, scan: FileSourceScanExec,
+  private def swap(agg: HashAggregateExec, scan: SparkPlan,
       project: Option[Seq[NamedExpression]],
       filter: Option[Expression]): SparkPlan =
     ColumnarPartialAgg.compileAgg(agg, scan, project, filter) match {
-      case Some(_) => ColumnarPartialAggExec(agg.output, scan,
+      case Right(_) => ColumnarPartialAggExec(agg.output, scan,
         agg.groupingExpressions, agg.aggregateExpressions, project, filter)
-      case None => agg
+      case Left(why) => kept(agg, why)
     }
+
+  private def kept(agg: HashAggregateExec, why: => String): SparkPlan = {
+    logDebug(s"graft.ColumnarPartialAgg keeps ${agg.simpleString(200)}: $why")
+    agg
+  }
 }

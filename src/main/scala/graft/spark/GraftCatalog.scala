@@ -35,7 +35,11 @@ import java.util
   * see flushed immutable files). The snapshot is served by Spark's stock
   * parquet DSv2 reader, so catalog queries get the vectorized scan,
   * filter pushdown, column pruning, and whole-stage codegen — identical
-  * plan shape to any parquet table, no driver-side row shipping.
+  * plan shape to any parquet table, no driver-side row shipping. Spark
+  * plans that reader as a DSv2 BatchScan(ParquetScan), and
+  * [[GraftColumnarRule]] matches it, so a snapshot aggregate's partial
+  * stage runs in the columnar agg kernel (`ColumnarPartialAggExec`)
+  * whenever its keys and aggregates compile, as over a V1 parquet scan.
   *
   * Write path (r8): `INSERT INTO` / `INSERT OVERWRITE` work through the
   * V1 write bridge and land in `CqlSession.catalogAppend` — the session's

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.functions._
 import graft.Q.{dbl, dec6}
+import graft.cql.CqlSession
+import graft.spark.ColumnarPartialAggExec
 
 /** GraftColumnarRule / ColumnarPartialAggExec (r11): the columnar partial
   * aggregate must be plan-visible on the supported shape and BYTE-EQUAL
@@ -9,9 +16,25 @@ import graft.Q.{dbl, dec6}
   * is the same aggregate over a `repartition`ed child — the exchange
   * between scan and aggregate makes the rule bail by construction, so
   * both paths run in one session. */
-class ColumnarAggSpec extends SparkSpec {
+class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val events = () => Tables.events(spark, sf)
+
+  /** Run `body` with session confs set (None = unset), then restore them. */
+  private def withConf[T](kv: (String, Option[String])*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    def put(k: String, v: Option[String]): Unit =
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    kv.foreach { case (k, v) => put(k, v) }
+    try body finally before.foreach { case (k, v) => put(k, v) }
+  }
+
+  private val dsv2 = "spark.sql.sources.useV1SourceList" -> Some("")
+  private val stockAgg = "spark.graft.columnarAgg.enabled" -> Some("false")
+
+  /** The kernel execs of an executed (final AQE) plan. */
+  private def kernels(df: DataFrame): Seq[ColumnarPartialAggExec] =
+    collect(df.queryExecution.executedPlan) { case e: ColumnarPartialAggExec => e }
 
   test("the swap is plan-visible on t1's shape and absent once any " +
     "non-scan child intervenes") {
@@ -194,6 +217,7 @@ class ColumnarAggSpec extends SparkSpec {
       () => max(col("t1")).as("mxt"))
     spark.conf.set("spark.graft.columnarAgg.maxAggs", "10")
     val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+    var v2Swapped = 0
     // sweep BOTH ANSI modes: the sum kernels compile mode-specific
     // overflow behavior (captured at plan time), so each mode's swapped
     // path must equal ITS stock twin
@@ -213,10 +237,22 @@ class ColumnarAggSpec extends SparkSpec {
         finally spark.conf.set("spark.graft.columnarAgg.enabled", "true")
       assert(swapped === stock,
         s"draw $draw (ansi=$ansi) diverged: keys=$keys aggs=$aggs")
+      // the same draw through the DSv2 reader: spark.read.parquet plans a
+      // BatchScan(ParquetScan), the scan kind every catalog read has
+      withConf(dsv2) {
+        val df = t().groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+        val swappedV2 = df.collect().map(_.toString).sorted.toSeq
+        if (kernels(df).exists(_.scan.isInstanceOf[BatchScanExec]))
+          v2Swapped += 1
+        val stockV2 = withConf(stockAgg)(run())
+        assert(swappedV2 === stockV2,
+          s"draw $draw (ansi=$ansi, DSv2) diverged: keys=$keys aggs=$aggs")
+      }
     } finally {
       spark.conf.unset("spark.graft.columnarAgg.maxAggs")
       spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
     }
+    assert(v2Swapped > 0, "no DSv2 draw ran the kernel")
   }
 
   test("memory bound also bounds the string-intern tables: a near-unique " +
@@ -379,5 +415,189 @@ class ColumnarAggSpec extends SparkSpec {
       case None =>
         spark.conf.unset("spark.sql.parquet.columnarReaderBatchSize")
     }
+  }
+
+  /** Rows of `q` swapped and stock, asserting the swapped plan ran the
+    * kernel over a scan of class `scanKind` (when given) and the stock
+    * plan ran none. */
+  private def swappedVsStock(q: () => DataFrame,
+      scanKind: Option[Class[_]]): (Seq[String], Seq[String]) = {
+    val df = q()
+    val swapped = df.collect().map(_.toString).toSeq
+    scanKind.foreach { c =>
+      val ks = kernels(df)
+      assert(ks.nonEmpty && ks.forall(k => c.isInstance(k.scan)),
+        df.queryExecution.executedPlan)
+    }
+    withConf(stockAgg) {
+      val sdf = q()
+      val stock = sdf.collect().map(_.toString).toSeq
+      assert(kernels(sdf).isEmpty, sdf.queryExecution.executedPlan)
+      (swapped, stock)
+    }
+  }
+
+  test("catalog snapshot reads feed the kernel through the DSv2 BatchScan " +
+    "and equal the stock plan in both ANSI modes (the bulk_merge read " +
+    "shape, and a select list out of table order)") {
+    val s = CqlSession(spark)
+    s.execute(
+      "CREATE TABLE colagg_items (lk bigint PRIMARY KEY, qty double, flag text)")
+    s.exposeAsCatalog("colagg")
+    spark.sql("""INSERT INTO colagg.default.colagg_items
+      |SELECT 10 * id + 1 AS lk,
+      |  CASE WHEN id % 97 = 0 THEN NULL ELSE CAST(1 + id % 50 AS DOUBLE) / 3 END AS qty,
+      |  CASE WHEN id % 89 = 0 THEN NULL WHEN id % 4 = 0 THEN 'R'
+      |    WHEN id % 4 = 1 THEN 'A' ELSE 'N' END AS flag
+      |FROM range(20000)""".stripMargin)
+    val queries = Seq(
+      """SELECT flag, count(*) AS n,
+        |CAST(sum(CAST(qty AS DECIMAL(38,6))) AS DOUBLE) AS total, min(lk) AS first_key
+        |FROM colagg.default.colagg_items WHERE lk BETWEEN 30001 AND 150001
+        |GROUP BY flag ORDER BY flag""",
+      """SELECT max(qty) AS mq, min(lk) AS first_key, count(qty) AS nq, flag,
+        |sum(CAST(qty AS DECIMAL(38,6))) AS total
+        |FROM colagg.default.colagg_items GROUP BY flag ORDER BY flag""")
+    for (ansi <- Seq("true", "false"); q <- queries)
+      withConf("spark.sql.ansi.enabled" -> Some(ansi)) {
+        val (swapped, stock) = swappedVsStock(
+          () => spark.sql(q.stripMargin), Some(classOf[BatchScanExec]))
+        assert(swapped.nonEmpty)
+        assert(swapped === stock, s"ansi=$ansi: $q")
+      }
+  }
+
+  test("a partitioned DSv2 parquet dir: the partition column keys and " +
+    "feeds the kernel, and BatchScan output follows the batch column order " +
+    "(readDataSchema ++ readPartitionSchema)") {
+    val dir = Tables.tempRoot("graft-colagg-v2part")
+    spark.range(6000).selectExpr(
+      "CAST(id % 4 AS INT) AS bucket", "id AS lk",
+      "CASE WHEN id % 31 = 0 THEN NULL ELSE CAST(id % 50 AS DOUBLE) / 7 END AS qty",
+      "CASE id % 3 WHEN 0 THEN 'R' WHEN 1 THEN 'A' ELSE 'N' END AS flag")
+      .write.partitionBy("bucket").mode("overwrite").parquet(dir)
+    val queries: Seq[DataFrame => DataFrame] = Seq(
+      _.groupBy("bucket", "flag").agg(count(lit(1)).as("n"),
+        sum(dec6(col("qty"))).as("total"), min("lk").as("first")),
+      _.filter(col("lk").between(100, 4000)).groupBy("flag")
+        .agg(max("bucket").as("mb"), sum("lk").as("sk"), count(col("qty")).as("nq")),
+      _.filter(col("bucket") === 2).groupBy("flag")
+        .agg(min("lk").as("first"), sum(dec6(col("qty"))).as("total")))
+    withConf(dsv2) {
+      for (ansi <- Seq("true", "false"); q <- queries)
+        withConf("spark.sql.ansi.enabled" -> Some(ansi)) {
+          val (swapped, stock) = swappedVsStock(
+            () => q(spark.read.parquet(dir)).orderBy("flag"),
+            Some(classOf[BatchScanExec]))
+          assert(swapped.nonEmpty)
+          assert(swapped === stock, s"ansi=$ansi")
+        }
+      val df = queries.head(spark.read.parquet(dir))
+      df.collect()
+      kernels(df).map(_.scan).foreach { case b: BatchScanExec =>
+        val p = b.scan.asInstanceOf[ParquetScan]
+        assert(p.readPartitionSchema.fieldNames.toSeq === Seq("bucket"))
+        assert(b.output.map(_.name) ===
+          (p.readDataSchema ++ p.readPartitionSchema).map(_.name))
+      }
+    }
+  }
+
+  test("a ParquetScan with a pushed aggregate is left unswapped") {
+    val dir = Tables.tempRoot("graft-colagg-aggpush")
+    spark.range(3000).selectExpr("id AS j", "CAST(id % 7 AS INT) AS i")
+      .write.mode("overwrite").parquet(dir)
+    def q() = spark.read.parquet(dir)
+      .agg(count(lit(1)).as("n"), max("j").as("mx"), min("i").as("mn"))
+    withConf(dsv2) {
+      val pushed = withConf("spark.sql.parquet.aggregatePushdown" -> Some("true")) {
+        val df = q()
+        val rows = df.collect().map(_.toString).toSeq
+        val scans = collect(df.queryExecution.executedPlan) {
+          case b: BatchScanExec => b.scan
+        }
+        assert(scans.collect { case p: ParquetScan => p.pushedAggregate.isDefined }
+          === Seq(true), df.queryExecution.executedPlan)
+        assert(kernels(df).isEmpty, df.queryExecution.executedPlan)
+        rows
+      }
+      // the same aggregate without the pushdown swaps, with equal rows
+      val (swapped, stock) = swappedVsStock(() => q(), Some(classOf[BatchScanExec]))
+      assert(swapped === stock)
+      assert(pushed === stock)
+    }
+  }
+
+  test("a scalar-subquery partition filter, evaluated when the scan " +
+    "executes, still prunes under the kernel") {
+    val dir = Tables.tempRoot("graft-colagg-subq")
+    spark.range(4000).selectExpr("CAST(id % 4 AS INT) AS bucket", "id AS lk",
+      "CASE id % 3 WHEN 0 THEN 'R' ELSE 'N' END AS flag")
+      .write.partitionBy("bucket").mode("overwrite").parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("colagg_subq")
+    def q() = spark.sql("""SELECT flag, count(*) AS n, min(lk) AS first
+      |FROM colagg_subq WHERE bucket = (SELECT max(bucket) - 1 FROM colagg_subq)
+      |GROUP BY flag ORDER BY flag""".stripMargin)
+    val literal = spark.read.parquet(dir).filter(col("bucket") === 2)
+      .groupBy("flag").agg(count(lit(1)).as("n"), min("lk").as("first"))
+      .orderBy("flag").collect().map(_.toString).toSeq
+    val (swapped, stock) = swappedVsStock(() => q(), Some(classOf[FileSourceScanExec]))
+    val df = q()
+    df.collect()
+    assert(kernels(df).map(_.scan).collect { case f: FileSourceScanExec =>
+      f.partitionFilters.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.ExecSubqueryExpression]))
+    } === Seq(true), df.queryExecution.executedPlan)
+    assert(swapped === stock)
+    assert(swapped === literal)
+    // the DSv2 reader keeps the subquery in a Filter above the scan; the
+    // answer must not move either way
+    withConf(dsv2) {
+      spark.read.parquet(dir).createOrReplaceTempView("colagg_subq")
+      val (swappedV2, stockV2) = swappedVsStock(() => q(), None)
+      assert(swappedV2 === stockV2)
+      assert(swappedV2 === literal)
+    }
+  }
+
+  test("kernel SQLMetrics are populated on the a1 plan and on a catalog " +
+    "read, the scan's own metrics included") {
+    def metricsOf(df: DataFrame): Seq[Map[String, Long]] = {
+      df.collect()
+      val ks = kernels(df)
+      assert(ks.nonEmpty, df.queryExecution.executedPlan)
+      ks.map(_.metrics.map { case (k, m) => k -> m.value })
+    }
+    def populated(m: Map[String, Long]): Unit = {
+      Seq("numInputRows", "numInputBatches", "numOutputRows", "kernelTime")
+        .foreach(k => assert(m(k) > 0, s"$k in $m"))
+      assert(m("scan.numOutputRows") === m("numInputRows"), m)
+      assert(m("numOutputRows") <= m("numInputRows"), m)
+    }
+    val a1 = metricsOf(graft.operators.RelationalQueries.a1_pricing_summary(spark, sf))
+    a1.foreach(populated)
+    assert(a1.forall(_("numFlushes") == 0))
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE colagg_metrics (lk bigint PRIMARY KEY, qty double, flag text)")
+    s.exposeAsCatalog("colaggm")
+    spark.sql("""INSERT INTO colaggm.default.colagg_metrics
+      |SELECT id AS lk, CAST(id % 50 AS DOUBLE) AS qty,
+      |  CASE id % 3 WHEN 0 THEN 'R' WHEN 1 THEN 'A' ELSE 'N' END AS flag
+      |FROM range(5000)""".stripMargin)
+    def read() = spark.sql("""SELECT flag, count(*) AS n,
+      |sum(CAST(qty AS DECIMAL(38,6))) AS total, min(lk) AS first_key
+      |FROM colaggm.default.colagg_metrics WHERE lk BETWEEN 100 AND 4100
+      |GROUP BY flag""".stripMargin)
+    val cat = metricsOf(read())
+    cat.foreach(populated)
+    assert(cat.map(_("numInputRows")).sum >= 4001L)
+    assert(cat.map(_("numOutputRows")).sum >= 3L)
+    // a tiny maxGroups flushes, and every flush's rows are counted out
+    val flushed = withConf("spark.graft.columnarAgg.maxGroups" -> Some("1")) {
+      metricsOf(read())
+    }
+    flushed.foreach(populated)
+    assert(flushed.map(_("numFlushes")).sum > 0)
+    assert(flushed.map(_("numOutputRows")).sum > cat.map(_("numOutputRows")).sum)
   }
 }
