@@ -51,8 +51,8 @@ import java.util
   * auto_snapshot safety net. MERGE INTO / UPDATE (r12, and DELETE with
   * non-key predicates): `SupportsRowLevelOperations` + `SupportsDelta` —
   * the rewrite reads affected rows from the snapshot scan and commits a
-  * primary-key-addressed delta of CQL upserts + tombstones under one
-  * coordinator timestamp (`CqlSession.catalogApplyDelta`). CQL-only
+  * primary-key-addressed delta of upserts + tombstones under the
+  * statement's timestamps (`CqlSession.catalogApplyDeltaStaged`). CQL-only
   * granularities (USING TIMESTAMP/TTL, collection element ops, counters)
   * stay on the CQL verbs.
   *
@@ -326,10 +326,9 @@ private[spark] class GraftTable(ident: String, tableSchema: StructType,
     * fall outside `SupportsDelete`'s key-equality subset — rewrite
     * through the DELTA row-level path (r12): Spark scans the snapshot for
     * affected rows and hands back a per-row delta addressed by the
-    * table's PRIMARY KEY (`rowId`), which commits into
-    * `CqlSession.catalogApplyDelta` as CQL upserts + row tombstones under
-    * ONE coordinator timestamp — the same bridge semantics INSERT/DELETE
-    * already use (MODIFY enforcement, guardrails, triggers, CDC,
+    * table's PRIMARY KEY (`rowId`), which commits through
+    * `CqlSession.catalogApplyDeltaStaged` as upserts + row tombstones
+    * under the statement's timestamps (MODIFY enforcement, triggers, CDC,
     * reconcile). Delta-based (`SupportsDelta`), NOT group-based: CQL's
     * log model upserts changed rows; rewriting whole file groups would
     * fake copy-on-write semantics the engine doesn't have. */

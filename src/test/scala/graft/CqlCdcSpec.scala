@@ -230,6 +230,33 @@ class CqlCdcSpec extends SparkSpec {
     java.nio.file.Files.write(f, "10,a\n11,b\n12,c\n".getBytes("UTF-8"))
     s.execute(s"COPY cdcc (k, v) FROM '${f.toString}' WITH HEADER = FALSE")
     assert(drain(s, "cdcc").count() === 3L)
+    // a catalog INSERT INTO is a bulk load too: its cdc files are copies
+    // of the load's part files (one per part, no second write job), every
+    // row under the load's one _writetime, and a replica converges
+    s.exposeAsCatalog("graftcdcc")
+    spark.range(100, 130).selectExpr("id AS k", "concat('p', id) AS v")
+      .repartition(3).createOrReplaceTempView("cdcc_load")
+    spark.sql("INSERT INTO graftcdcc.default.cdcc SELECT k, v FROM cdcc_load")
+    val name = s"cdc_files_${System.nanoTime()}"
+    graft.streaming.StreamingPipelines.runToMemory(s.cdcStream("cdcc")
+      .withColumn("file", col("_metadata.file_path")), name, "append")
+    val loaded = spark.table(name).filter(col("k") >= 100L)
+    assert(loaded.count() === 30L)
+    assert(loaded.select("file").distinct().count() === 3L,
+      "one cdc file per load part file")
+    assert(loaded.select("_writetime").distinct().count() === 1L)
+    val replica = CqlSession(spark)
+    replica.execute("CREATE TABLE cdcc (k bigint PRIMARY KEY, v text)")
+    s.cdcStream("cdcc").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        replica.applyCdcBatch("cdcc", b)
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    def dump(x: CqlSession): Seq[String] =
+      x.execute("SELECT k, v, WRITETIME(v) FROM cdcc").collect()
+        .map(_.toString).sorted.toSeq
+    assert(dump(replica) === dump(s) && dump(s).size === 33)
     s.execute("DROP TABLE cdcc")
     s.execute("CREATE TABLE cdcc (k bigint PRIMARY KEY, v text) WITH cdc = true")
     s.execute("INSERT INTO cdcc (k, v) VALUES (99, 'fresh')")
@@ -248,13 +275,11 @@ class CqlCdcSpec extends SparkSpec {
     import spark.implicits._
     Seq((2L, "up", 20L), (4L, "del", 0L), (9L, "new", 90L))
       .toDF("k", "v", "n").createOrReplaceTempView("repd_src")
-    spark.conf.set("spark.graft.catalog.deltaApplyRowLimit", "0")
-    try spark.sql(
+    spark.sql(
       """MERGE INTO graftrepd.default.repd13 t USING repd_src s ON t.k = s.k
          WHEN MATCHED AND s.v = 'del' THEN DELETE
          WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n
          WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-    finally spark.conf.unset("spark.graft.catalog.deltaApplyRowLimit")
     val replica = CqlSession(spark)
     replica.execute("CREATE TABLE repd13 (k bigint PRIMARY KEY, v text, " +
       "n bigint)")
@@ -329,7 +354,6 @@ class CqlCdcSpec extends SparkSpec {
          UNION ALL SELECT id, 'del', 0 FROM range(3001, 3101)
          UNION ALL SELECT id, 'new', id FROM range(7001, 7101)""")
       .repartition(8).createOrReplaceTempView("repd14_src")
-    spark.conf.set("spark.graft.catalog.deltaApplyRowLimit", "0")
     // the emission's file granularity IS the fold's task granularity
     // (r18: cdc files are file-copies of the fold's shaped segments) —
     // at fixture volume AQE would legitimately coalesce the tiny MERGE
@@ -342,10 +366,7 @@ class CqlCdcSpec extends SparkSpec {
          WHEN MATCHED AND s.v = 'del' THEN DELETE
          WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n
          WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-    finally {
-      spark.conf.unset("spark.graft.catalog.deltaApplyRowLimit")
-      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    }
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     // drain the statement's segment; _metadata.file_path exposes how many
     // files it spans (the r13 shape was coalesce(1) — ONE task serializing
     // the whole changed-row set; r14 keeps the fold's parallelism)
@@ -427,24 +448,22 @@ class CqlCdcSpec extends SparkSpec {
         }
       }
       (1 to 25).foreach(_ => randOp())
-      // mid-script bulk MERGE through the distributed fold: ~300-row
-      // delta (past the pinned limit) over a key band overlapping the
-      // per-row keys plus a fresh insert band
+      // mid-script bulk MERGE through the distributed fold: ~60-row
+      // delta over a key band overlapping the per-row keys plus a fresh
+      // insert band
       spark.range(0, 300)
         .select((col("id") % 60).as("k"),
           concat(lit(s"m$round-"), col("id") % 7).as("v"),
           (col("id") * 3 % 97).as("n"))
         .groupBy("k").agg(max("v").as("v"), max("n").as("n"))
         .createOrReplaceTempView(s"fz_src$round")
-      spark.conf.set("spark.graft.catalog.deltaApplyRowLimit", "0")
-      try spark.sql(
+      spark.sql(
         s"""MERGE INTO graftfz$round.default.fz$round t
             USING fz_src$round s ON t.k = s.k
             WHEN MATCHED AND s.n % 11 = 0 THEN DELETE
             WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n
             WHEN NOT MATCHED AND s.n % 13 <> 0
               THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-      finally spark.conf.unset("spark.graft.catalog.deltaApplyRowLimit")
       (1 to 25).foreach(_ => randOp())
       // drain everything into a fresh replica and compare FULL state
       val replica = CqlSession(spark)

@@ -11,6 +11,13 @@ class AuditTrigger extends GraftTrigger {
       s"(${row("k")}, ${row("_writetime")}, '$table', ${row("_deleted")})")
 }
 
+/** Spec trigger that adds nothing: putting it on a table routes catalog
+  * deltas down the per-row replay, the apply path of trigger tables. */
+class NoopTrigger extends GraftTrigger {
+  override def augment(table: String, row: Map[String, Any]): Seq[String] =
+    Nil
+}
+
 /** Spec trigger whose augmented mutation is invalid — used to pin the
   * all-or-nothing contract (the original write must not survive). */
 class BrokenTrigger extends GraftTrigger {

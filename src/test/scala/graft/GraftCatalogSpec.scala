@@ -580,16 +580,13 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   // ——— r13: the DISTRIBUTED delta fold (executor-spilled parquet
-  // segments, anti-join collision rule, one log-fold materialization).
-  // `deltaApplyRowLimit = 0` forces every delta — however small — down
-  // the large-delta path, so the same semantic scenarios that pin the
-  // per-row bridge above re-verify the distributed one. ———
+  // segments committed as log bytes). Every delta on a table without
+  // triggers takes it, however small; the tests that compare it with the
+  // per-row replay put a NoopTrigger on the per-row side, which routes
+  // that table's deltas down the trigger-table path. ———
 
-  private def forceDistributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.catalog.deltaApplyRowLimit", "0")
-    try body
-    finally spark.conf.unset("spark.graft.catalog.deltaApplyRowLimit")
-  }
+  private def noopTrigger(s: CqlSession, tbl: String): Unit =
+    s.execute(s"CREATE TRIGGER noop ON $tbl USING 'graft.NoopTrigger'")
 
   test("distributed fold: the delta commit message carries a segment " +
     "path and counts — no row buffer to scale with the delta") {
@@ -606,94 +603,88 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("distributed fold: MERGE fuzz converges to the in-memory model " +
     "(same branches as the per-row fuzz, forced down the big-delta path)") {
-    forceDistributed {
-      val rnd = new scala.util.Random(20260815L)
-      val s = CqlSession(spark)
-      s.exposeAsCatalog("graftfzd")
-      import spark.implicits._
-      for (round <- 1 to 5) {
-        val tbl = s"mfzd$round"
-        s.execute(
-          s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text, n bigint)")
-        val target = (0L until 20L).filter(_ => rnd.nextBoolean())
-          .map(k => (k, s"t$k", rnd.nextInt(100).toLong))
-        target.foreach { case (k, v, n) =>
-          s.execute(s"INSERT INTO $tbl (k, v, n) VALUES ($k, '$v', $n)") }
-        val source = (0L until 25L).filter(_ => rnd.nextBoolean())
-          .map(k => (k, s"s$k", rnd.nextInt(100).toLong, rnd.nextInt(3)))
-        source.toDF("k", "v", "n", "act")
-          .createOrReplaceTempView(s"mfzd_src$round")
-        spark.sql(
-          s"""MERGE INTO graftfzd.default.$tbl t USING mfzd_src$round s
-             ON t.k = s.k
-             WHEN MATCHED AND s.act = 0 THEN DELETE
-             WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n + t.n
-             WHEN NOT MATCHED AND s.act <> 0 THEN
-               INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-        val tmap = target.map(t => t._1 -> t).toMap
-        val expected = scala.collection.mutable.Map.empty[Long, (String, Long)]
-        target.foreach { case (k, v, n) => expected(k) = (v, n) }
-        source.foreach { case (k, v, n, act) =>
-          if (tmap.contains(k)) {
-            if (act == 0) expected.remove(k)
-            else expected(k) = (v, n + tmap(k)._3)
-          } else if (act != 0) expected(k) = (v, n)
-        }
-        val got = spark.sql(s"SELECT k, v, n FROM graftfzd.default.$tbl")
-          .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
-          .toMap
-        assert(got === expected.toMap, s"round $round (Spark read) diverged")
-        val cql = s.execute(s"SELECT k, v, n FROM $tbl").collect()
-          .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-        assert(cql === expected.toMap, s"round $round (CQL read) diverged")
+    val rnd = new scala.util.Random(20260815L)
+    val s = CqlSession(spark)
+    s.exposeAsCatalog("graftfzd")
+    import spark.implicits._
+    for (round <- 1 to 5) {
+      val tbl = s"mfzd$round"
+      s.execute(
+        s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text, n bigint)")
+      val target = (0L until 20L).filter(_ => rnd.nextBoolean())
+        .map(k => (k, s"t$k", rnd.nextInt(100).toLong))
+      target.foreach { case (k, v, n) =>
+        s.execute(s"INSERT INTO $tbl (k, v, n) VALUES ($k, '$v', $n)") }
+      val source = (0L until 25L).filter(_ => rnd.nextBoolean())
+        .map(k => (k, s"s$k", rnd.nextInt(100).toLong, rnd.nextInt(3)))
+      source.toDF("k", "v", "n", "act")
+        .createOrReplaceTempView(s"mfzd_src$round")
+      spark.sql(
+        s"""MERGE INTO graftfzd.default.$tbl t USING mfzd_src$round s
+           ON t.k = s.k
+           WHEN MATCHED AND s.act = 0 THEN DELETE
+           WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n + t.n
+           WHEN NOT MATCHED AND s.act <> 0 THEN
+             INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
+      val tmap = target.map(t => t._1 -> t).toMap
+      val expected = scala.collection.mutable.Map.empty[Long, (String, Long)]
+      target.foreach { case (k, v, n) => expected(k) = (v, n) }
+      source.foreach { case (k, v, n, act) =>
+        if (tmap.contains(k)) {
+          if (act == 0) expected.remove(k)
+          else expected(k) = (v, n + tmap(k)._3)
+        } else if (act != 0) expected(k) = (v, n)
       }
+      val got = spark.sql(s"SELECT k, v, n FROM graftfzd.default.$tbl")
+        .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
+        .toMap
+      assert(got === expected.toMap, s"round $round (Spark read) diverged")
+      val cql = s.execute(s"SELECT k, v, n FROM $tbl").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+      assert(cql === expected.toMap, s"round $round (CQL read) diverged")
     }
   }
 
   test("distributed fold: chained key-move UPDATE survives (delete/upsert " +
     "timestamp order replaces the driver-side collision Set)") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_chaind (k bigint PRIMARY KEY, v text)")
-      (1L to 3L).foreach(i =>
-        s.execute(s"INSERT INTO cat_chaind (k, v) VALUES ($i, 'v$i')"))
-      s.exposeAsCatalog("graft")
-      spark.sql("UPDATE graft.default.cat_chaind SET k = k + 1")
-      val got = spark.sql(
-        "SELECT k, v FROM graft.default.cat_chaind ORDER BY k").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(got === Seq((2L, "v1"), (3L, "v2"), (4L, "v3")),
-        s"chained key-move lost rows on the distributed path: $got")
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_chaind (k bigint PRIMARY KEY, v text)")
+    (1L to 3L).foreach(i =>
+      s.execute(s"INSERT INTO cat_chaind (k, v) VALUES ($i, 'v$i')"))
+    s.exposeAsCatalog("graft")
+    spark.sql("UPDATE graft.default.cat_chaind SET k = k + 1")
+    val got = spark.sql(
+      "SELECT k, v FROM graft.default.cat_chaind ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got === Seq((2L, "v1"), (3L, "v2"), (4L, "v3")),
+      s"chained key-move lost rows on the distributed path: $got")
   }
 
   test("distributed fold: a no-key-move MERGE (delete + update + insert " +
     "branches) keeps every delete effective with no collision anti-join " +
     "(deletes commit one timestamp below the upserts)") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_nokm (k bigint PRIMARY KEY, n bigint)")
-      (1L to 6L).foreach(i =>
-        s.execute(s"INSERT INTO cat_nokm (k, n) VALUES ($i, ${i * 10})"))
-      s.exposeAsCatalog("graftnokm")
-      import spark.implicits._
-      // source touches every target key (even → DELETE, odd → UPDATE)
-      // plus inserts 7..8 — the deletes MUST still tombstone their rows
-      // even though they commit one tick below the statement's upserts
-      (1L to 8L).map(k => (k, k * 100)).toDF("k", "p")
-        .createOrReplaceTempView("nokm_src")
-      spark.sql("""MERGE INTO graftnokm.default.cat_nokm t
-                   USING nokm_src s ON t.k = s.k
-                   WHEN MATCHED AND s.k % 2 = 0 THEN DELETE
-                   WHEN MATCHED THEN UPDATE SET n = s.p
-                   WHEN NOT MATCHED THEN INSERT (k, n) VALUES (s.k, s.p)""")
-      val got = spark.sql(
-        "SELECT k, n FROM graftnokm.default.cat_nokm ORDER BY k").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(got === Seq((1L, 100L), (3L, 300L), (5L, 500L),
-        (7L, 700L), (8L, 800L)),
-        s"no-key-move MERGE diverged on the elided path: $got")
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_nokm (k bigint PRIMARY KEY, n bigint)")
+    (1L to 6L).foreach(i =>
+      s.execute(s"INSERT INTO cat_nokm (k, n) VALUES ($i, ${i * 10})"))
+    s.exposeAsCatalog("graftnokm")
+    import spark.implicits._
+    // source touches every target key (even → DELETE, odd → UPDATE)
+    // plus inserts 7..8 — the deletes MUST still tombstone their rows
+    // even though they commit one tick below the statement's upserts
+    (1L to 8L).map(k => (k, k * 100)).toDF("k", "p")
+      .createOrReplaceTempView("nokm_src")
+    spark.sql("""MERGE INTO graftnokm.default.cat_nokm t
+                 USING nokm_src s ON t.k = s.k
+                 WHEN MATCHED AND s.k % 2 = 0 THEN DELETE
+                 WHEN MATCHED THEN UPDATE SET n = s.p
+                 WHEN NOT MATCHED THEN INSERT (k, n) VALUES (s.k, s.p)""")
+    val got = spark.sql(
+      "SELECT k, n FROM graftnokm.default.cat_nokm ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got === Seq((1L, 100L), (3L, 300L), (5L, 500L),
+      (7L, 700L), (8L, 800L)),
+      s"no-key-move MERGE diverged on the elided path: $got")
   }
 
   test("shaped-vs-per-row parity: every MERGE branch lands IDENTICAL rows " +
@@ -742,9 +733,9 @@ class GraftCatalogSpec extends SparkSpec {
     def run(tbl: String, stmt: String => String, shaped: Boolean)
         : (Seq[(Long, String, Long, List[Long])], Set[Long]) = {
       mk(tbl)
+      if (!shaped) noopTrigger(s, tbl)
       val before = writetimes(tbl)
-      val sql = stmt(s"graftpar.default.$tbl")
-      if (shaped) forceDistributed(spark.sql(sql)) else spark.sql(sql)
+      spark.sql(stmt(s"graftpar.default.$tbl"))
       (rows(tbl), writetimes(tbl) -- before)
     }
     matrix.zipWithIndex.foreach { case ((branch, stmt, upserts), i) =>
@@ -759,102 +750,129 @@ class GraftCatalogSpec extends SparkSpec {
     }
   }
 
+  test("apply routing: a 1-row MERGE on a table without triggers commits " +
+    "its shaped segment (memtable_rows 0); with a trigger it replays " +
+    "per-row into the memtable (memtable_rows + mutations)") {
+    val s = CqlSession(spark)
+    s.exposeAsCatalog("graftroute")
+    import spark.implicits._
+    Seq((1L, "m")).toDF("k", "v").createOrReplaceTempView("route_src")
+    def memtableRows(tbl: String): Long = s.execute(
+      "SELECT memtable_rows FROM system_views.disk_usage WHERE " +
+        s"table_name = '$tbl' ALLOW FILTERING").head().getLong(0)
+    // (memtable rows before, after) a 1-row MERGE: one matched UPDATE
+    def merge(tbl: String, trigger: Boolean): (Long, Long) = {
+      s.execute(s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text)")
+      s.execute(s"INSERT INTO $tbl (k, v) VALUES (1, 'a')")
+      s.execute(s"INSERT INTO $tbl (k, v) VALUES (2, 'b')")
+      if (trigger) noopTrigger(s, tbl)
+      val before = memtableRows(tbl)
+      spark.sql(s"""MERGE INTO graftroute.default.$tbl t USING route_src s
+                    ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v""")
+      assert(s.execute(s"SELECT v FROM $tbl WHERE k = 1").head()
+        .getString(0) === "m")
+      (before, memtableRows(tbl))
+    }
+    assert(merge("route_shaped", trigger = false) === (2L, 0L),
+      "a table without triggers must commit the delta as log bytes")
+    assert(merge("route_perrow", trigger = true) === (2L, 3L),
+      "a trigger table must replay the delta's one mutation per-row")
+  }
+
   test("shaped delta type matrix: a forced-shaped MERGE commits and reads " +
     "back on every column shape (collections, vector, blob key, decimal/" +
     "timestamp/uuid, clustering key, UDT)") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TYPE addr_tm (street text, zip bigint)")
-      s.exposeAsCatalog("grafttm")
-      // (table, column DDL, key columns, value columns, pre rows, source
-      // rows); rows are inline-table tuples in column order, and a source
-      // row with n < 0 deletes its matched target row
-      val shapes = Seq(
-        ("tm_scalar", "k bigint PRIMARY KEY, n bigint, v text",
-          Seq("k"), Seq("n", "v"),
-          "(1L, 1L, 'a'), (2L, 2L, 'b'), (3L, 3L, 'c')",
-          "(2L, 20L, 'B'), (3L, -1L, 'x'), (4L, 40L, 'D')"),
-        ("tm_list", "k bigint PRIMARY KEY, n bigint, l list<bigint>",
-          Seq("k"), Seq("n", "l"),
-          "(1L, 1L, array(1L, 2L)), (2L, 2L, array(3L)), (3L, 3L, array(4L))",
-          "(2L, 20L, array(9L, 8L)), (3L, -1L, array(0L)), " +
-            "(4L, 40L, array(5L))"),
-        ("tm_set", "k bigint PRIMARY KEY, n bigint, st set<text>",
-          Seq("k"), Seq("n", "st"),
-          "(1L, 1L, array('a', 'b')), (2L, 2L, array('c')), " +
-            "(3L, 3L, array('d'))",
-          "(2L, 20L, array('x', 'y')), (3L, -1L, array('z')), " +
-            "(4L, 40L, array('e'))"),
-        ("tm_map", "k bigint PRIMARY KEY, n bigint, m map<text, bigint>",
-          Seq("k"), Seq("n", "m"),
-          "(1L, 1L, map('a', 1L)), (2L, 2L, map('b', 2L)), " +
-            "(3L, 3L, map('c', 3L))",
-          "(2L, 20L, map('b', 20L, 'bb', 21L)), (3L, -1L, map('x', 0L)), " +
-            "(4L, 40L, map('d', 4L))"),
-        ("tm_vector", "k bigint PRIMARY KEY, n bigint, e vector<float, 3>",
-          Seq("k"), Seq("n", "CAST(e AS ARRAY<FLOAT>) AS e"),
-          "(1L, 1L, array(1.0, 2.0, 3.0)), (2L, 2L, array(4.0, 5.0, 6.0)), " +
-            "(3L, 3L, array(7.0, 8.0, 9.0))",
-          "(2L, 20L, array(0.5, 0.25, 0.125)), (3L, -1L, array(0.0, 0.0, 0.0)), " +
-            "(4L, 40L, array(1.5, 2.5, 3.5))"),
-        ("tm_blob", "k blob PRIMARY KEY, n bigint",
-          Seq("k"), Seq("n"),
-          "(X'01', 1L), (X'0102', 2L), (X'ff', 3L)",
-          "(X'0102', 20L), (X'ff', -1L), (X'02', 40L)"),
-        ("tm_typed", "k bigint PRIMARY KEY, n bigint, d decimal, " +
-          "ts timestamp, u uuid",
-          Seq("k"), Seq("n", "CAST(d AS DECIMAL(38, 18)) AS d",
-            "CAST(ts AS TIMESTAMP) AS ts", "u"),
-          "(1L, 1L, 1.25, '2024-01-02 03:04:05', " +
-            "'123e4567-e89b-12d3-a456-426614174000'), " +
-            "(2L, 2L, 2.5, '2024-02-03 04:05:06', " +
-            "'223e4567-e89b-12d3-a456-426614174000'), " +
-            "(3L, 3L, 3.75, '2024-03-04 05:06:07', " +
-            "'323e4567-e89b-12d3-a456-426614174000')",
-          "(2L, 20L, 20.125, '2025-01-01 00:00:00', " +
-            "'a23e4567-e89b-12d3-a456-426614174000'), " +
-            "(3L, -1L, 0, '2025-01-01 00:00:00', " +
-            "'b23e4567-e89b-12d3-a456-426614174000'), " +
-            "(4L, 40L, 40.5, '2025-04-05 06:07:08', " +
-            "'c23e4567-e89b-12d3-a456-426614174000')"),
-        ("tm_clustering", "p bigint, c bigint, n bigint, v text, " +
-          "PRIMARY KEY (p, c)",
-          Seq("p", "c"), Seq("n", "v"),
-          "(1L, 1L, 1L, 'a'), (1L, 2L, 2L, 'b'), (2L, 1L, 3L, 'c')",
-          "(1L, 2L, 20L, 'B'), (2L, 1L, -1L, 'x'), (1L, 3L, 40L, 'D')"),
-        ("tm_udt", "k bigint PRIMARY KEY, n bigint, a addr_tm",
-          Seq("k"), Seq("n", "a"),
-          "(1L, 1L, named_struct('street', 'a', 'zip', 1L)), " +
-            "(2L, 2L, named_struct('street', 'b', 'zip', 2L)), " +
-            "(3L, 3L, named_struct('street', 'c', 'zip', 3L))",
-          "(2L, 20L, named_struct('street', 'B', 'zip', 20L)), " +
-            "(3L, -1L, named_struct('street', 'x', 'zip', 0L)), " +
-            "(4L, 40L, named_struct('street', 'D', 'zip', 4L))"))
-      shapes.foreach { case (tbl, ddl, keys, vals, pre, src) =>
-        val names = keys ++ vals.map(_.split(' ').last)
-        def view(name: String, rows: String): Unit = spark.sql(
-          s"SELECT ${(keys ++ vals).mkString(", ")} FROM VALUES $rows " +
-            s"AS v(${names.mkString(", ")})").createOrReplaceTempView(name)
-        view(s"${tbl}_pre", pre); view(s"${tbl}_src", src)
-        s.execute(s"CREATE TABLE $tbl ($ddl)")
-        val target = s"grafttm.default.$tbl"
-        val cols = names.mkString(", ")
-        spark.sql(s"INSERT INTO $target ($cols) SELECT * FROM ${tbl}_pre")
-        val on = keys.map(k => s"t.$k = s.$k").mkString(" AND ")
-        spark.sql(
-          s"""MERGE INTO $target t USING ${tbl}_src s ON $on
-              WHEN MATCHED AND s.n < 0 THEN DELETE
-              WHEN MATCHED THEN UPDATE SET *
-              WHEN NOT MATCHED THEN INSERT *""")
-        def json(from: String): Seq[String] =
-          spark.sql(s"SELECT to_json(struct($cols)) FROM $from").collect()
-            .map(_.getString(0)).sorted.toSeq
-        val expected = json(
-          s"(SELECT * FROM ${tbl}_pre t LEFT ANTI JOIN ${tbl}_src s ON $on " +
-            s"UNION ALL SELECT * FROM ${tbl}_src WHERE n >= 0) x")
-        assert(expected.size === 3, tbl)
-        assert(json(target) === expected, s"$tbl read back diverged")
-      }
+    val s = CqlSession(spark)
+    s.execute("CREATE TYPE addr_tm (street text, zip bigint)")
+    s.exposeAsCatalog("grafttm")
+    // (table, column DDL, key columns, value columns, pre rows, source
+    // rows); rows are inline-table tuples in column order, and a source
+    // row with n < 0 deletes its matched target row
+    val shapes = Seq(
+      ("tm_scalar", "k bigint PRIMARY KEY, n bigint, v text",
+        Seq("k"), Seq("n", "v"),
+        "(1L, 1L, 'a'), (2L, 2L, 'b'), (3L, 3L, 'c')",
+        "(2L, 20L, 'B'), (3L, -1L, 'x'), (4L, 40L, 'D')"),
+      ("tm_list", "k bigint PRIMARY KEY, n bigint, l list<bigint>",
+        Seq("k"), Seq("n", "l"),
+        "(1L, 1L, array(1L, 2L)), (2L, 2L, array(3L)), (3L, 3L, array(4L))",
+        "(2L, 20L, array(9L, 8L)), (3L, -1L, array(0L)), " +
+          "(4L, 40L, array(5L))"),
+      ("tm_set", "k bigint PRIMARY KEY, n bigint, st set<text>",
+        Seq("k"), Seq("n", "st"),
+        "(1L, 1L, array('a', 'b')), (2L, 2L, array('c')), " +
+          "(3L, 3L, array('d'))",
+        "(2L, 20L, array('x', 'y')), (3L, -1L, array('z')), " +
+          "(4L, 40L, array('e'))"),
+      ("tm_map", "k bigint PRIMARY KEY, n bigint, m map<text, bigint>",
+        Seq("k"), Seq("n", "m"),
+        "(1L, 1L, map('a', 1L)), (2L, 2L, map('b', 2L)), " +
+          "(3L, 3L, map('c', 3L))",
+        "(2L, 20L, map('b', 20L, 'bb', 21L)), (3L, -1L, map('x', 0L)), " +
+          "(4L, 40L, map('d', 4L))"),
+      ("tm_vector", "k bigint PRIMARY KEY, n bigint, e vector<float, 3>",
+        Seq("k"), Seq("n", "CAST(e AS ARRAY<FLOAT>) AS e"),
+        "(1L, 1L, array(1.0, 2.0, 3.0)), (2L, 2L, array(4.0, 5.0, 6.0)), " +
+          "(3L, 3L, array(7.0, 8.0, 9.0))",
+        "(2L, 20L, array(0.5, 0.25, 0.125)), (3L, -1L, array(0.0, 0.0, 0.0)), " +
+          "(4L, 40L, array(1.5, 2.5, 3.5))"),
+      ("tm_blob", "k blob PRIMARY KEY, n bigint",
+        Seq("k"), Seq("n"),
+        "(X'01', 1L), (X'0102', 2L), (X'ff', 3L)",
+        "(X'0102', 20L), (X'ff', -1L), (X'02', 40L)"),
+      ("tm_typed", "k bigint PRIMARY KEY, n bigint, d decimal, " +
+        "ts timestamp, u uuid",
+        Seq("k"), Seq("n", "CAST(d AS DECIMAL(38, 18)) AS d",
+          "CAST(ts AS TIMESTAMP) AS ts", "u"),
+        "(1L, 1L, 1.25, '2024-01-02 03:04:05', " +
+          "'123e4567-e89b-12d3-a456-426614174000'), " +
+          "(2L, 2L, 2.5, '2024-02-03 04:05:06', " +
+          "'223e4567-e89b-12d3-a456-426614174000'), " +
+          "(3L, 3L, 3.75, '2024-03-04 05:06:07', " +
+          "'323e4567-e89b-12d3-a456-426614174000')",
+        "(2L, 20L, 20.125, '2025-01-01 00:00:00', " +
+          "'a23e4567-e89b-12d3-a456-426614174000'), " +
+          "(3L, -1L, 0, '2025-01-01 00:00:00', " +
+          "'b23e4567-e89b-12d3-a456-426614174000'), " +
+          "(4L, 40L, 40.5, '2025-04-05 06:07:08', " +
+          "'c23e4567-e89b-12d3-a456-426614174000')"),
+      ("tm_clustering", "p bigint, c bigint, n bigint, v text, " +
+        "PRIMARY KEY (p, c)",
+        Seq("p", "c"), Seq("n", "v"),
+        "(1L, 1L, 1L, 'a'), (1L, 2L, 2L, 'b'), (2L, 1L, 3L, 'c')",
+        "(1L, 2L, 20L, 'B'), (2L, 1L, -1L, 'x'), (1L, 3L, 40L, 'D')"),
+      ("tm_udt", "k bigint PRIMARY KEY, n bigint, a addr_tm",
+        Seq("k"), Seq("n", "a"),
+        "(1L, 1L, named_struct('street', 'a', 'zip', 1L)), " +
+          "(2L, 2L, named_struct('street', 'b', 'zip', 2L)), " +
+          "(3L, 3L, named_struct('street', 'c', 'zip', 3L))",
+        "(2L, 20L, named_struct('street', 'B', 'zip', 20L)), " +
+          "(3L, -1L, named_struct('street', 'x', 'zip', 0L)), " +
+          "(4L, 40L, named_struct('street', 'D', 'zip', 4L))"))
+    shapes.foreach { case (tbl, ddl, keys, vals, pre, src) =>
+      val names = keys ++ vals.map(_.split(' ').last)
+      def view(name: String, rows: String): Unit = spark.sql(
+        s"SELECT ${(keys ++ vals).mkString(", ")} FROM VALUES $rows " +
+          s"AS v(${names.mkString(", ")})").createOrReplaceTempView(name)
+      view(s"${tbl}_pre", pre); view(s"${tbl}_src", src)
+      s.execute(s"CREATE TABLE $tbl ($ddl)")
+      val target = s"grafttm.default.$tbl"
+      val cols = names.mkString(", ")
+      spark.sql(s"INSERT INTO $target ($cols) SELECT * FROM ${tbl}_pre")
+      val on = keys.map(k => s"t.$k = s.$k").mkString(" AND ")
+      spark.sql(
+        s"""MERGE INTO $target t USING ${tbl}_src s ON $on
+            WHEN MATCHED AND s.n < 0 THEN DELETE
+            WHEN MATCHED THEN UPDATE SET *
+            WHEN NOT MATCHED THEN INSERT *""")
+      def json(from: String): Seq[String] =
+        spark.sql(s"SELECT to_json(struct($cols)) FROM $from").collect()
+          .map(_.getString(0)).sorted.toSeq
+      val expected = json(
+        s"(SELECT * FROM ${tbl}_pre t LEFT ANTI JOIN ${tbl}_src s ON $on " +
+          s"UNION ALL SELECT * FROM ${tbl}_src WHERE n >= 0) x")
+      assert(expected.size === 3, tbl)
+      assert(json(target) === expected, s"$tbl read back diverged")
     }
   }
 
@@ -886,9 +904,11 @@ class GraftCatalogSpec extends SparkSpec {
     // collision resolves toward the upsert at ANY branch mix — same
     // answer as the per-row path's driver-side Set filter, which this
     // test also runs for parity.
-    def run(tbl: String, cat: String): Seq[(Long, String)] = {
+    def run(tbl: String, cat: String, perRow: Boolean = false)
+        : Seq[(Long, String)] = {
       val s = CqlSession(spark)
       s.execute(s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text)")
+      if (perRow) noopTrigger(s, tbl)
       s.execute(s"INSERT INTO $tbl (k, v) VALUES (5, 'old')")
       s.execute(s"INSERT INTO $tbl (k, v) VALUES (6, 'keep')")
       s.exposeAsCatalog(cat)
@@ -905,70 +925,64 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql(s"SELECT k, v FROM $cat.default.$tbl ORDER BY k").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq
     }
-    val dist = forceDistributed { run("cat_onx_d", "graftonxd") }
+    val dist = run("cat_onx_d", "graftonxd")
     assert(dist === Seq((5L, "new5"), (6L, "keep")),
       s"distributed fold erased the NOT-MATCHED insert: $dist")
-    val perRow = run("cat_onx_r", "graftonxr")
+    val perRow = run("cat_onx_r", "graftonxr", perRow = true)
     assert(perRow === dist, s"apply paths diverged: per-row $perRow " +
       s"vs distributed $dist")
   }
 
   test("distributed fold: blob-keyed UPDATE is ONE upsert (catalyst " +
     "byte[] equality in the writer)") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_blobd (k blob PRIMARY KEY, n bigint)")
-      s.execute("INSERT INTO cat_blobd (k, n) VALUES (0x0102, 1)")
-      s.execute("INSERT INTO cat_blobd (k, n) VALUES (0xff, 7)")
-      s.exposeAsCatalog("graft")
-      spark.sql("UPDATE graft.default.cat_blobd SET n = n + 10 WHERE n < 5")
-      val rows = spark.sql(
-        "SELECT n FROM graft.default.cat_blobd ORDER BY n").collect()
-        .map(_.getLong(0)).toSeq
-      assert(rows === Seq(7L, 11L), s"blob-keyed update lost rows: $rows")
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_blobd (k blob PRIMARY KEY, n bigint)")
+    s.execute("INSERT INTO cat_blobd (k, n) VALUES (0x0102, 1)")
+    s.execute("INSERT INTO cat_blobd (k, n) VALUES (0xff, 7)")
+    s.exposeAsCatalog("graft")
+    spark.sql("UPDATE graft.default.cat_blobd SET n = n + 10 WHERE n < 5")
+    val rows = spark.sql(
+      "SELECT n FROM graft.default.cat_blobd ORDER BY n").collect()
+      .map(_.getLong(0)).toSeq
+    assert(rows === Seq(7L, 11L), s"blob-keyed update lost rows: $rows")
   }
 
   test("distributed fold: a PURE-DELETE delta (non-key predicate) " +
     "tombstones by key without touching the anti-join's data columns") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_deld (k bigint PRIMARY KEY, v text)")
-      (1L to 5L).foreach(i =>
-        s.execute(s"INSERT INTO cat_deld (k, v) VALUES ($i, 'v${i % 2}')"))
-      s.exposeAsCatalog("graft")
-      // non-key predicate → the row-level delta; all ops are deletes
-      spark.sql("DELETE FROM graft.default.cat_deld WHERE v = 'v1'")
-      assert(spark.sql("SELECT k FROM graft.default.cat_deld ORDER BY k")
-        .collect().map(_.getLong(0)).toSeq === Seq(2L, 4L))
-      assert(s.execute("SELECT count(*) FROM cat_deld").head()
-        .getLong(0) === 2L)
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_deld (k bigint PRIMARY KEY, v text)")
+    (1L to 5L).foreach(i =>
+      s.execute(s"INSERT INTO cat_deld (k, v) VALUES ($i, 'v${i % 2}')"))
+    s.exposeAsCatalog("graft")
+    // non-key predicate → the row-level delta; all ops are deletes
+    spark.sql("DELETE FROM graft.default.cat_deld WHERE v = 'v1'")
+    assert(spark.sql("SELECT k FROM graft.default.cat_deld ORDER BY k")
+      .collect().map(_.getLong(0)).toSeq === Seq(2L, 4L))
+    assert(s.execute("SELECT count(*) FROM cat_deld").head()
+      .getLong(0) === 2L)
   }
 
   test("distributed fold: post-image nulls are EXPLICIT — scalar cell " +
     "tombstone and collection set-to-null, shadowing older writes") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_nulld (k bigint PRIMARY KEY, v text, " +
-        "tags list<bigint>, w bigint)")
-      s.execute(
-        "INSERT INTO cat_nulld (k, v, tags, w) VALUES (1, 'x', [1, 2], 0)")
-      s.exposeAsCatalog("graft")
-      spark.sql("UPDATE graft.default.cat_nulld SET v = NULL, " +
-        "tags = NULL, w = 5 WHERE k = 1")
-      val r = s.execute("SELECT v, tags, w FROM cat_nulld WHERE k = 1").head()
-      assert(r.isNullAt(0) && r.isNullAt(1) && r.getLong(2) === 5L,
-        s"post-image nulls must overwrite: $r")
-      // the null is a real tombstone at the shared coordinator timestamp:
-      // an OLDER CQL write cannot resurrect the cell
-      val wt = s.execute("SELECT writetime(w) AS wt FROM cat_nulld")
-        .head().getLong(0)
-      s.execute(s"UPDATE cat_nulld USING TIMESTAMP ${wt - 1} " +
-        "SET v = 'ghost' WHERE k = 1")
-      assert(s.execute("SELECT v FROM cat_nulld WHERE k = 1").head()
-        .isNullAt(0), "older write must stay shadowed by the tombstone")
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_nulld (k bigint PRIMARY KEY, v text, " +
+      "tags list<bigint>, w bigint)")
+    s.execute(
+      "INSERT INTO cat_nulld (k, v, tags, w) VALUES (1, 'x', [1, 2], 0)")
+    s.exposeAsCatalog("graft")
+    spark.sql("UPDATE graft.default.cat_nulld SET v = NULL, " +
+      "tags = NULL, w = 5 WHERE k = 1")
+    val r = s.execute("SELECT v, tags, w FROM cat_nulld WHERE k = 1").head()
+    assert(r.isNullAt(0) && r.isNullAt(1) && r.getLong(2) === 5L,
+      s"post-image nulls must overwrite: $r")
+    // the null is a real tombstone at the shared coordinator timestamp:
+    // an OLDER CQL write cannot resurrect the cell
+    val wt = s.execute("SELECT writetime(w) AS wt FROM cat_nulld")
+      .head().getLong(0)
+    s.execute(s"UPDATE cat_nulld USING TIMESTAMP ${wt - 1} " +
+      "SET v = 'ghost' WHERE k = 1")
+    assert(s.execute("SELECT v FROM cat_nulld WHERE k = 1").head()
+      .isNullAt(0), "older write must stay shadowed by the tombstone")
   }
 
   test("distributed fold: compound (partition, clustering) keys, a " +
@@ -985,6 +999,7 @@ class GraftCatalogSpec extends SparkSpec {
       }
     }
     mk("cat_cmp_row"); mk("cat_cmp_dist")
+    noopTrigger(s, "cat_cmp_row")
     s.exposeAsCatalog("graft")
     import spark.implicits._
     Seq((1L, 1L, "x"), (1L, 2L, "y"), (2L, 1L, "z"), (3L, 1L, "w"))
@@ -995,8 +1010,8 @@ class GraftCatalogSpec extends SparkSpec {
           WHEN MATCHED AND s.nv = 'y' THEN DELETE
           WHEN MATCHED THEN UPDATE SET v = s.nv, tags = NULL
           WHEN NOT MATCHED THEN INSERT (p, c, v) VALUES (s.p, s.c, s.nv)""")
-    merge("cat_cmp_row") // default limit: the per-row applyDml path
-    forceDistributed { merge("cat_cmp_dist") }
+    merge("cat_cmp_row") // trigger table: the per-row applyDml path
+    merge("cat_cmp_dist")
     def state(tbl: String): Seq[String] =
       s.execute(s"SELECT p, c, tags, st, v FROM $tbl").collect()
         .map(_.toString).sorted.toSeq
@@ -1025,6 +1040,7 @@ class GraftCatalogSpec extends SparkSpec {
         "(3, {street: 'far', zip: 30}, {'z': 3}, 3)")
     }
     mk("cat_udt_row"); mk("cat_udt_dist")
+    noopTrigger(s, "cat_udt_row")
     s.exposeAsCatalog("graft")
     def mutate(tbl: String): Unit = {
       // k=1: replace the struct wholesale; k=2: null it out (explicit);
@@ -1036,7 +1052,7 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql(s"UPDATE graft.default.$tbl SET n = n + 10 WHERE k = 3")
     }
     mutate("cat_udt_row")
-    forceDistributed { mutate("cat_udt_dist") }
+    mutate("cat_udt_dist")
     def state(tbl: String): Seq[String] =
       s.execute(s"SELECT k, a, m, n FROM $tbl").collect()
         .map(_.toString).sorted.toSeq
@@ -1108,13 +1124,18 @@ class GraftCatalogSpec extends SparkSpec {
     assert(s.execute("SELECT count(*) FROM audit_log").head()
       .getLong(0) === 2L,
       "MERGE mutations on a trigger table must fire the trigger per row")
-    // PAST the limit: refuse with the documented guardrail error —
-    // per-mutation trigger replay is coordinator-bound, so the scale-safe
-    // behavior is a loud refusal, not a collect() of the whole delta
-    val e = intercept[Exception](forceDistributed { spark.sql(merge) })
+    // PAST the 10,000-row cap (k = 1, 2 update, 3..10001 insert: 10,001
+    // upserts): refuse with the documented guardrail error — per-mutation
+    // trigger replay is coordinator-bound, so the scale-safe behavior is
+    // a loud refusal, not a collect() of the whole delta
+    spark.range(1, 10002).selectExpr("id AS k", "'big' AS v")
+      .createOrReplaceTempView("trgd_big")
+    val e = intercept[Exception](
+      spark.sql(merge.replace("USING trgd_src", "USING trgd_big")))
     assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(x => Option(x.getMessage).exists(m =>
-        m.contains("deltaApplyRowLimit") && m.contains("trigger"))),
+        m.contains("delta of 10001 rows") && m.contains("10000-row cap") &&
+          m.contains("(catd)"))),
       s"expected the trigger-table guardrail error, got: ${e.getMessage}")
     // the refusal left table AND audit state untouched
     assert(s.execute("SELECT v FROM cat_trgd WHERE k = 1").head()
@@ -1123,7 +1144,7 @@ class GraftCatalogSpec extends SparkSpec {
       .getLong(0) === 2L, "a refused MERGE must not fire triggers")
     s.execute("DROP TRIGGER catd ON cat_trgd")
     // with the trigger gone the same statement folds distributed and lands
-    forceDistributed { spark.sql(merge) }
+    spark.sql(merge)
     assert(spark.sql("SELECT count(*) FROM graft.default.cat_trgd")
       .head().getLong(0) === 2L)
   }
@@ -1143,6 +1164,7 @@ class GraftCatalogSpec extends SparkSpec {
         s"CREATE TABLE $tbl (k bigint PRIMARY KEY, v text, n bigint, " +
           "tags list<bigint>)")
       mk(s"dfr$round"); mk(s"dfd$round")
+      noopTrigger(s, s"dfr$round")
       // one bulk INSERT via the catalog seeds BOTH tables identically
       val target = (0L until 2000L).map(k =>
         (k, s"t$k", rnd.nextInt(1000).toLong,
@@ -1166,8 +1188,8 @@ class GraftCatalogSpec extends SparkSpec {
             WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n + t.n
             WHEN NOT MATCHED AND s.act <> 0 THEN
               INSERT (k, v, n) VALUES (s.k, s.v, s.n)""")
-      merge(s"dfr$round") // per-row replay (default limit)
-      forceDistributed { merge(s"dfd$round") }
+      merge(s"dfr$round") // per-row replay (trigger table)
+      merge(s"dfd$round")
       def state(tbl: String): Seq[String] =
         s.execute(s"SELECT k, v, n, tags FROM $tbl").collect()
           .map(_.toString).sorted.toSeq
@@ -1179,19 +1201,17 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("distributed fold: a CDC-enabled table's delta lands as one " +
     "reapable segment") {
-    forceDistributed {
-      val s = CqlSession(spark)
-      s.execute("CREATE TABLE cat_cdcd (k bigint PRIMARY KEY, v bigint) " +
-        "WITH cdc = true")
-      (1L to 4L).foreach(i =>
-        s.execute(s"INSERT INTO cat_cdcd (k, v) VALUES ($i, $i)"))
-      s.exposeAsCatalog("graft")
-      val before = s.cdcReap("cat_cdcd") // drain the insert segments
-      assert(before > 0L)
-      spark.sql("UPDATE graft.default.cat_cdcd SET v = v * 10 WHERE k <= 2")
-      val freed = s.cdcReap("cat_cdcd")
-      assert(freed > 0L,
-        "the distributed delta fold must emit a CDC segment")
-    }
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_cdcd (k bigint PRIMARY KEY, v bigint) " +
+      "WITH cdc = true")
+    (1L to 4L).foreach(i =>
+      s.execute(s"INSERT INTO cat_cdcd (k, v) VALUES ($i, $i)"))
+    s.exposeAsCatalog("graft")
+    val before = s.cdcReap("cat_cdcd") // drain the insert segments
+    assert(before > 0L)
+    spark.sql("UPDATE graft.default.cat_cdcd SET v = v * 10 WHERE k <= 2")
+    val freed = s.cdcReap("cat_cdcd")
+    assert(freed > 0L,
+      "the distributed delta fold must emit a CDC segment")
   }
 }
