@@ -42,6 +42,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // batches (r11) — swaps ONLY HashAggregate(Partial) + fused Project
     // above a columnar parquet scan; see graft.spark.ColumnarPartialAgg
     ext.injectColumnar(_ => graft.spark.GraftColumnarRule())
+    // filter constants read from the codegen references array, so a plan
+    // that differs only in a constant reuses the compiled class
+    ext.injectColumnar(_ => graft.spark.GraftParamLiteralRule())
   }
 }
 

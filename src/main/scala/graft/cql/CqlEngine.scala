@@ -29,7 +29,11 @@ class CqlTable(dfThunk: () => DataFrame, val partitionKeys: Seq[String],
     * similarity_function (5.0 `WITH OPTIONS = {'similarity_function':
     * …}` [U index/sai]); absent = cosine, the upstream default. Drives
     * ANN OF scoring. */
-  val annSimilarity: Map[String, String]) {
+  val annSimilarity: Map[String, String],
+  /** true when `df` already lists every partition in its declared
+    * clustering order (the session's driver-side partition fold), so a
+    * partition read needs no sort to return its native order */
+  val clusteringOrdered: Boolean = false) {
   /** The serving DataFrame, FORCED ON FIRST READ and memoized: the
     * session may put per-epoch materialization work (the localCheckpoint
     * of a driver-local table's reconcile) into the thunk, and
@@ -37,6 +41,13 @@ class CqlTable(dfThunk: () => DataFrame, val partitionKeys: Seq[String],
     * with eager = false — tables an epoch never reads must not pay it
     * at engine build (r18). */
   lazy val df: DataFrame = dfThunk()
+
+  /** This table's metadata over `rows`: the reconciled rows of one
+    * partition, in declared clustering order. */
+  private[cql] def overPartition(rows: DataFrame): CqlTable =
+    new CqlTable(() => rows, partitionKeys, clusteringKeys, staticKeys,
+      counterKeys, indexedColumns, clusteringDesc, annSimilarity,
+      clusteringOrdered = true)
 }
 
 object CqlTable {
@@ -254,14 +265,23 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
   }
 
   /** Run an already-parsed (e.g. prepared-and-bound) SELECT. */
-  private[cql] def execute(sel: CqlSelect): DataFrame = {
-    val table = catalog.getOrElse(sel.table.toLowerCase,
-      throw new CqlInvalidQueryException(s"unknown table ${sel.table}"))
+  private[cql] def execute(sel: CqlSelect): DataFrame =
+    execute(sel, catalog.getOrElse(sel.table.toLowerCase,
+      throw new CqlInvalidQueryException(s"unknown table ${sel.table}")),
+      Nil)
+
+  /** Run `sel` over `table`, which may stand in for the registered table
+    * (the session's one-partition fold). `applied` lists predicates of
+    * `sel` that every row of `table.df` already satisfies: they are
+    * validated like the rest but not filtered again. */
+  private[cql] def execute(sel: CqlSelect, table: CqlTable,
+      applied: Seq[CqlPredicate]): DataFrame = {
     validate(sel, table)
     var df = table.df
 
     // WHERE
-    sel.predicates.map(predColumn(_, table)).foreach(c => df = df.filter(c))
+    sel.predicates.filterNot(applied.contains).map(predColumn(_, table))
+      .foreach(c => df = df.filter(c))
 
     // PER PARTITION LIMIT (before LIMIT, after filters — upstream order).
     // Ordering = clustering order; remaining columns break ties so the
@@ -274,15 +294,23 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
         .map(col(_).asc)
       // native read order = the DECLARED clustering order: a DESC table's
       // per-partition limit keeps the newest rows, as upstream does
-      val declaredDesc = (table.clusteringDesc ++
-        Seq.fill(table.clusteringKeys.length)(false))
-        .take(table.clusteringKeys.length)
-      val order = table.clusteringKeys.zip(declaredDesc).map { case (c0, d) =>
-        if (d) col(c0).desc else col(c0).asc } ++ tiebreak
+      val order = declaredOrder(table) ++ tiebreak
       val w = Window.partitionBy(table.partitionKeys.map(col): _*).orderBy(order: _*)
       df = df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= k).drop("__rn")
     }
+
+    // Native read order: a row SELECT pinned to one partition returns it
+    // in the DECLARED clustering order, so a DESC table's LIMIT keeps the
+    // newest rows, as upstream [U db/SinglePartitionReadCommand]. The
+    // pinned partition's rows move to one Spark partition and sort there
+    // (a coalesce would pull the whole scan stage into one task).
+    val aggregates = sel.selectors.exists(isAgg) || sel.groupBy.nonEmpty
+    if (!table.clusteringOrdered && table.clusteringKeys.nonEmpty &&
+        sel.orderBy.isEmpty && sel.ann.isEmpty && !aggregates &&
+        !sel.distinct &&
+        CqlEngine.pinnedPartition(sel, table.partitionKeys).nonEmpty)
+      df = df.repartition(1).sortWithinPartitions(declaredOrder(table): _*)
 
     // ANN ordering (Cassandra 5.0 `ORDER BY col ANN OF [v,…] LIMIT k`, SAI
     // vector index [U index/sai/plan/]): exact top-k by cosine similarity,
@@ -352,13 +380,7 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
         // (correct) value and the aggregate's first() is order-free. The
         // window exchange hash-partitions on the group keys, which the
         // groupBy below reuses — still ONE shuffle.
-        val clusterOrder: Seq[Column] = {
-          val declaredDesc = (table.clusteringDesc ++
-            Seq.fill(table.clusteringKeys.length)(false))
-            .take(table.clusteringKeys.length)
-          table.clusteringKeys.zip(declaredDesc).map { case (c0, d0) =>
-            if (d0) col(c0).desc else col(c0).asc }
-        }
+        val clusterOrder = declaredOrder(table)
         // un-aliased group expressions for Window.partitionBy
         val groupPartExprs = sel.groupBy.map {
           case CqlGroupItem(c0, None) => col(c0)
@@ -818,6 +840,15 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
 
   /** Literal typed to its column (CQL bind values are typed; Spark's struct
     * comparison does not coerce). */
+  /** The table's declared clustering order (`WITH CLUSTERING ORDER BY`;
+    * unlisted keys ASC) as sort columns. */
+  private def declaredOrder(t: CqlTable): Seq[Column] = {
+    val desc = (t.clusteringDesc ++ Seq.fill(t.clusteringKeys.length)(false))
+      .take(t.clusteringKeys.length)
+    t.clusteringKeys.zip(desc).map { case (c0, d) =>
+      if (d) col(c0).desc else col(c0).asc }
+  }
+
   /** A LIMIT / PER PARTITION LIMIT operand after binding: an int, or an
     * unbound marker (rejected — limits bind through prepared statements). */
   private def boundLimit(v: Any, what: String): Int = v match {
@@ -1293,6 +1324,20 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
 }
 
 object CqlEngine {
+  /** The `pk = v` relation of each partition-key column, when every one is
+    * restricted by exactly one (non-token) equality: the SELECT reads one
+    * partition. */
+  private[cql] def pinnedPartition(sel: CqlSelect,
+      partitionKeys: Seq[String]): Option[Seq[ColumnPredicate]] = {
+    val pins = partitionKeys.map(pk => sel.predicates.collect {
+      case p: ColumnPredicate if !p.isToken && p.op == "=" &&
+          p.column.equalsIgnoreCase(pk) => p
+    })
+    if (partitionKeys.nonEmpty && pins.forall(_.size == 1))
+      Some(pins.map(_.head))
+    else None
+  }
+
   /** Catalog over the standard fixture tables with their natural primary
     * keys (partition key first, clustering after — mirrors how a Cassandra
     * data model of this schema would be declared). */

@@ -2,6 +2,10 @@ package graft.cql
 
 import graft.operators.CassandraModel
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow,
+  Literal}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1009,8 +1013,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   /** Reconciled read view of a table's current log. `nowUs` (epoch micros)
     * enables cell-level TTL expiry for cells written `USING TTL`. */
-  def view(table: String, nowUs: Option[Long] = None): DataFrame = {
-    val t = tableState(table)
+  def view(table: String, nowUs: Option[Long] = None): DataFrame =
+    viewOf(tableState(table), nowUs)
+
+  private def viewOf(t: TableState, nowUs: Option[Long] = None): DataFrame = {
     val lg = {
       // Partition and range tombstones (row deletes with a null clustering
       // SUFFIX) shadow every strictly-older cell under their prefix
@@ -1036,8 +1042,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           .drop("_rt_wt")
       }
     }
-    val regular = dataCols(t)
-      .filterNot(c => keyCols(t).contains(c) || t.staticKeys.contains(c))
+    val regular = regularCols(t)
     if (t.staticKeys.isEmpty)
       CassandraModel.reconcileView(lg, keyCols(t), regular, nowUs)
     else {
@@ -1295,28 +1300,33 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         case (tbl, colName, sai, target) if tbl == name =>
           colName.toLowerCase -> (sai, target)
       }.groupBy(_._1).map { case (c0, xs) => c0 -> xs.map(_._2).toSet }
-      // r18 (guide §1.2/§5): serve DRIVER-LOCAL tables from a lazily
-      // checkpointed reconcile. The engine df is epoch-frozen and built
-      // with nowUs = None, so its ROWS are time-independent — yet every
-      // statement on it re-executed the full multi-window reconcile fold
-      // (measured: ~30–110 ms of job fixed cost per SELECT on an
-      // 81-row table). A localCheckpoint materializes the fold ONCE per
-      // (table, epoch) at the table's FIRST read — the same plan, the
-      // same rows, cached InternalRows — and later statements plan over
-      // a flat LogicalRDD (optimizer time 15 → 2 ms/stmt, execute 30+ →
-      // ~15 ms/stmt). The checkpoint sits INSIDE CqlTable's by-name df:
-      // Dataset.localCheckpoint runs its upstream jobs at wrap time even
-      // with eager = false, and an epoch's unread tables must not pay
-      // materialization at engine build. Gated to localOnly tables:
-      // their rows already live in the driver's pending vector (CQL DML,
-      // and catalog deltas on trigger tables, capped at
-      // TriggerDeltaRowCap rows; a bulk load or any other catalog delta
-      // makes the table file-backed), so the cached partitions add no
-      // memory class — while file-backed tables keep the parquet scan's
-      // pushdown/pruning, which a checkpoint would destroy at 100 TB.
-      val vdf = view(name)
+      // The Spark view serves every SELECT the driver-side partition fold
+      // does not (partitionRead: a pinned partition of a scalar base
+      // table), so building it is deferred into CqlTable's by-name df: an
+      // epoch whose reads all fold, or that reads a table not at all, never
+      // analyzes that table's windowed reconcile plan.
+      //
+      // r18 (guide §1.2/§5): DRIVER-LOCAL tables serve the view from a
+      // lazily checkpointed reconcile. The engine df is epoch-frozen and
+      // built with nowUs = None, so its ROWS are time-independent — yet
+      // every statement on it would re-execute the full multi-window
+      // reconcile fold (measured: ~30–110 ms of job fixed cost per SELECT
+      // on an 81-row table). A localCheckpoint materializes the fold ONCE
+      // per (table, epoch) at the table's FIRST view read — the same plan,
+      // the same rows, cached InternalRows — and later statements plan
+      // over a flat LogicalRDD (optimizer time 15 → 2 ms/stmt, execute
+      // 30+ → ~15 ms/stmt). Dataset.localCheckpoint runs its upstream jobs
+      // at wrap time even with eager = false, hence the by-name df. Gated
+      // to localOnly tables: their rows already live in the driver's
+      // pending vector (CQL DML, and catalog deltas on trigger tables,
+      // capped at TriggerDeltaRowCap rows; a bulk load or any other
+      // catalog delta makes the table file-backed), so the cached
+      // partitions add no memory class — while file-backed tables keep the
+      // parquet scan's pushdown/pruning, which a checkpoint would destroy
+      // at 100 TB. A file-backed table's partition reads fold on the
+      // driver instead; its table-wide reads re-run the Spark fold.
       name -> CqlTable(
-        if (t.localOnly) vdf.localCheckpoint(false) else vdf,
+        if (t.localOnly) viewOf(t).localCheckpoint(false) else viewOf(t),
         t.partitionKeys, t.clusteringKeys,
         t.staticKeys, t.counterKeys, indexed, t.clusteringDesc,
         annSimilarity = annSimReg.collect {
@@ -2957,8 +2967,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       wantSizeEstimates = true; engineCache = None
     }
     val masks = masksFor(sel.table)
-    if (masks.isEmpty || hasPermBool("unmask", authRes(sel.table)))
-      engine.execute(sel)
+    if (masks.isEmpty) partitionRead(sel).getOrElse(viewRead(sel))
+    else if (hasPermBool("unmask", authRes(sel.table))) viewRead(sel)
     else {
       // 5.0 DDM read path [U cql3/statements/SelectStatement +
       // auth/Permission.SELECT_MASKED]: without UNMASK, restricting (or
@@ -3014,7 +3024,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       val srcByOut = sel.selectors.collect {
         case ColumnSelector(n, a) => a.getOrElse(n).toLowerCase -> n.toLowerCase
       }.toMap
-      val out = engine.execute(sel)
+      val out = viewRead(sel)
       val st = state.get(sel.table.toLowerCase)
       out.select(out.columns.toSeq.map { cn =>
         val src = srcByOut.getOrElse(cn.toLowerCase, cn.toLowerCase)
@@ -4187,6 +4197,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       }
     }
     event(firstEvent)
+    val outer = traceSink
+    traceSink = Some((a: String) => event(a))
     try {
       val out = f
       event(completion)
@@ -4197,8 +4209,15 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         event(s"Request failed: ${e.getClass.getSimpleName}")
         sessionRow(((System.nanoTime() - t0) / 1000L).toInt)
         throw e
-    }
+    } finally traceSink = outer
   }
+
+  /** The running traced statement's event recorder, if any. */
+  private var traceSink: Option[String => Unit] = None
+
+  /** Record `activity` as an event of the statement being traced (no-op
+    * when tracing is off). */
+  private def traceNote(activity: String): Unit = traceSink.foreach(_(activity))
 
   private def execute0(cql: String): DataFrame = {
     val trimmed = cql.trim
@@ -5440,22 +5459,33 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     }
   }
 
-  /** Test hook: forces the LWT read through the Spark view path so specs
-    * can pin fast-path ≡ Spark-path equivalence. */
-  private[graft] var lwtForceSparkRead: Boolean = false
+  /** Test hook: forces every read the driver-side partition fold would
+    * serve (partition SELECTs and LWT condition reads) through the Spark
+    * view, so specs can pin fold ≡ Spark view. */
+  private[graft] var forceSparkRead: Boolean = false
+  /** CqlLwtFastPathSpec's name for [[forceSparkRead]]. */
+  private[graft] def lwtForceSparkRead_=(b: Boolean): Unit = forceSparkRead = b
+  private[graft] def lwtForceSparkRead: Boolean = forceSparkRead
   /** Count of LWT reads served driver-locally (spec instrumentation). */
   private[graft] var lwtLocalReads: Long = 0L
+  /** Count of SELECTs served by the driver-side partition fold
+    * ([[partitionRead]]; spec instrumentation). */
+  private[graft] var foldReads: Long = 0L
 
-  /** The local fast path applies while ALL table data sits in `pending`
-    * (driver-local rows) and every cell resolves by the scalar reconcile
-    * rule — no collection/UDT/counter op-logs, no per-partition statics. */
-  private def lwtLocalEligible(t: TableState): Boolean =
-    t.localOnly && !lwtForceSparkRead && t.staticKeys.isEmpty &&
-      t.counterKeys.isEmpty &&
+  /** Every cell resolves by the scalar reconcile rule: no collection/UDT/
+    * counter op-logs, no per-partition statics. The driver-side partition
+    * fold covers exactly these tables. */
+  private def scalarTable(t: TableState): Boolean =
+    t.staticKeys.isEmpty && t.counterKeys.isEmpty &&
       !t.logSchema.fieldNames.exists(_.startsWith("_op_"))
 
-  /** Generic scalar ordering for the reconcile tie-break (the same value
-    * comparison Spark's struct max_by applies); null sorts lowest. */
+  /** The LWT local fast path applies while ALL table data sits in
+    * `pending` (driver-local rows) of a scalar table. */
+  private def lwtLocalEligible(t: TableState): Boolean =
+    t.localOnly && !forceSparkRead && scalarTable(t)
+
+  /** Generic scalar ordering of LWT condition operands; null sorts
+    * lowest. */
   private def ordCmp(a: Any, b: Any): Int = (a, b) match {
     case (null, null) => 0
     case (null, _) => -1
@@ -5480,82 +5510,247 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       s"cannot order-compare ${a.getClass} cells")
   }
 
-  /** Driver-local point read of one full-PK row from a session-local log —
-    * the same algebra as [[view]]+reconcileView, collapsed to the addressed
-    * partition: (1) partition/range tombstones (null clustering suffix)
-    * shadow strictly-older rows under their prefix; (2) the full-key row
-    * tombstone shadows strictly-older cells; (3) each cell resolves to the
-    * (writetime, tombstone-wins-tie, value) winner; (4) the row exists iff
-    * a cell or an INSERT row marker survives. Returns the reconciled cells
-    * (plus the key values) or None when the row does not exist.
-    * Equivalence with the Spark path is pinned by CqlLwtFastPathSpec. */
-  private def localPointRead(t: TableState,
-      keyVals: Map[String, Any]): Option[Map[String, Any]] = {
+  private def logField(t: TableState, n: String): StructField =
+    t.logSchema.fields.find(_.name.equalsIgnoreCase(n)).get
+
+  /** Non-key, non-static columns: the cells [[view]] reconciles per row. */
+  private def regularCols(t: TableState): Seq[String] = dataCols(t)
+    .filterNot(c => keyCols(t).contains(c) || t.staticKeys.contains(c))
+
+  /** The schema of [[view]] on a scalar table: primary key, regular cells,
+    * their per-cell writetimes, then the row writetime. */
+  private def foldSchema(t: TableState): StructType = {
+    val regular = regularCols(t)
+    StructType(
+      (keyCols(t) ++ regular).map(logField(t, _).copy(nullable = true)) ++
+        regular.map(c => StructField(s"_writetime_$c", LongType)) :+
+        StructField("_writetime", LongType))
+  }
+
+  /** The log rows of one partition as Catalyst rows: the base log through
+    * a scan with the key filter pushed down (no scan while the table is
+    * localOnly), plus the matching pending rows, filtered on the driver.
+    * `pk` holds one non-null Catalyst value per partition-key column. */
+  private def partitionLog(t: TableState, pk: Seq[Any]): Seq[InternalRow] = {
+    val toCat = CatalystTypeConverters.createToCatalystConverter(t.logSchema)
+    val pkF = t.partitionKeys.map(logField(t, _))
+    val base =
+      if (t.localOnly) Seq.empty[Row]
+      else t.base.filter(pkF.zip(pk).map { case (f, v) =>
+        col(f.name) === org.apache.spark.sql.GraftShim.column(
+          Literal(v, f.dataType))
+      }.reduce(_ && _)).collect().toSeq
+    val pkI = pkF.map(f => t.logSchema.fieldIndex(f.name))
+    val pkCat = pkF.map(f =>
+      CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    val pkOrd = pkF.map(f => PhysicalDataType.ordering(f.dataType))
+    val pending = t.pending.filter(r => pkI.indices.forall { j =>
+      !r.isNullAt(pkI(j)) &&
+        pkOrd(j).compare(pkCat(j)(r.get(pkI(j))), pk(j)) == 0
+    })
+    (base ++ pending).map(r => toCat(r).asInstanceOf[InternalRow])
+  }
+
+  /** Driver-side reconcile of ONE partition's log rows — the same algebra
+    * as [[view]] + reconcileView, collapsed to the addressed partition:
+    * (1) partition/range tombstones (null clustering suffix) shadow
+    * strictly-older rows under their prefix (view()'s cascaded prefix
+    * windows collapse to one max per row: a tombstone a shallower one
+    * shadows could only shadow rows that one shadows already); (2) a row
+    * tombstone shadows strictly-older cells of its row; (3) each cell
+    * resolves to the (writetime, tombstone-wins-tie, value) winner, values
+    * compared by Spark's own ordering of the column type, as max_by does;
+    * (4) with an INSERT marker column, a row exists iff a cell or a live
+    * marker survives. Rows come out in [[foldSchema]], in DECLARED
+    * clustering order (Spark's null placement: first under ASC, last under
+    * DESC). Scalar tables only ([[scalarTable]]); TTL is not applied, as
+    * in the engine's view. Equivalence with the Spark view is pinned by
+    * CqlPartitionFoldSpec and CqlLwtFastPathSpec. */
+  private def foldPartition(t: TableState,
+      part: Seq[InternalRow]): Seq[InternalRow] = {
     val ls = t.logSchema
-    def idx(n: String) = ls.fieldIndex(n)
-    def eqv(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
-      case _ => a == b
-    }
+    def idx(n: String) = ls.fieldIndex(logField(t, n).name)
     val wtI = idx("_writetime"); val delI = idx("_deleted")
-    val mkI = idx("_marker")
-    val pkIdx = t.partitionKeys.map(idx)
-    val ckIdx = t.clusteringKeys.map(idx)
-    val pkT = t.partitionKeys.map(keyVals)
-    val ckT = t.clusteringKeys.map(keyVals)
-    val part = t.pending.filter(r =>
-      pkIdx.zip(pkT).forall { case (i, v) => !r.isNullAt(i) && eqv(r.get(i), v) })
-    // (1) deepest-prefix-first cumulative max over partition/range
-    // tombstones matching the target's clustering prefix (view()'s k
-    // cascaded windows collapse to one max for a single addressed row)
-    val shadowWt = (0 until t.clusteringKeys.size).foldLeft(Long.MinValue) {
-      (acc, k) =>
-        part.iterator.filter { r =>
-          r.getBoolean(delI) &&
-            ckIdx.take(k).zip(ckT.take(k)).forall { case (i, v) =>
-              !r.isNullAt(i) && eqv(r.get(i), v) } &&
-            ckIdx.drop(k).forall(r.isNullAt)
-        }.map(_.getLong(wtI)).foldLeft(acc)(math.max)
+    def opt(n: String) = Some(ls.fieldNames.indexOf(n)).filter(_ >= 0)
+    val mkI = opt("_marker")
+    val keyI = keyCols(t).map(idx).toArray
+    val keyT = keyI.map(ls(_).dataType)
+    val nPk = t.partitionKeys.size
+    val nCk = t.clusteringKeys.size
+    val ckOrd = keyT.drop(nPk).map(PhysicalDataType.ordering)
+    val desc = (t.clusteringDesc ++ Seq.fill(nCk)(false)).take(nCk)
+    // grouping keys compare as Spark groups them: -0.0 = 0.0, NaN = NaN,
+    // emitted in normal form
+    def norm(v: Any): Any = v match {
+      case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
+      case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+      case o => o
     }
-    val rows = part.filter { r =>
-      ckIdx.zip(ckT).forall { case (i, v) =>
-        !r.isNullAt(i) && eqv(r.get(i), v) } && r.getLong(wtI) > shadowWt
-    }
-    // (2) full-key row tombstone
-    val rowTombWt = rows.iterator.filter(_.getBoolean(delI))
-      .map(_.getLong(wtI)).foldLeft(Long.MinValue)(math.max)
-    val live = rows.filter(r =>
-      !r.getBoolean(delI) && r.getLong(wtI) > rowTombWt)
-    val dataColsR = t.schema.fieldNames.toSeq
-      .filterNot(c => keyCols(t).exists(_.equalsIgnoreCase(c)))
-    if (dataColsR.isEmpty)
-      return if (live.nonEmpty) Some(keyVals) else None
-    // (3) per-cell (writetime, tomb, value) winner; tombstone wins ties
-    val cells = dataColsR.map { c =>
-      val cI = idx(c)
-      val dI = ls.fieldNames.indexOf(s"_del_$c")
-      var best: (Long, Boolean, Any) = null
-      live.foreach { r =>
-        val tomb = dI >= 0 && !r.isNullAt(dI) && r.getBoolean(dI)
-        val v = if (r.isNullAt(cI)) null else r.get(cI)
-        if (v != null || tomb) {
-          val cand = (r.getLong(wtI), tomb, v)
-          val wins = best == null || {
-            val byWt = java.lang.Long.compare(cand._1, best._1)
-            if (byWt != 0) byWt > 0
-            else if (cand._2 != best._2) cand._2
-            else ordCmp(cand._3, best._3) > 0
-          }
-          if (wins) best = cand
-        }
+    final class LogRow(val r: InternalRow) {
+      val key: Array[Any] = keyI.indices.map(j =>
+        if (r.isNullAt(keyI(j))) null else norm(r.get(keyI(j), keyT(j)))).toArray
+      def ck(j: Int): Any = key(nPk + j)
+      val wt: Long = r.getLong(wtI)
+      val deleted: Boolean = r.getBoolean(delI)
+      /** prefix length of a partition/range tombstone */
+      val tombLevel: Int = {
+        val k = (0 until nCk).takeWhile(ck(_) != null).size
+        if (deleted && k < nCk && (k until nCk).forall(ck(_) == null)) k
+        else -1
       }
-      c -> (if (best == null || best._2) null else best._3)
     }
-    // (4) row-marker rule: cells survive, or a live INSERT marker does
-    val hasMarker = live.exists(r => !r.isNullAt(mkI) && r.getBoolean(mkI))
-    if (cells.exists(_._2 != null) || hasMarker)
-      Some(cells.toMap ++ keyVals)
-    else None
+    def ckEq(a: LogRow, b: LogRow, j: Int): Boolean =
+      a.ck(j) != null && b.ck(j) != null &&
+        ckOrd(j).compare(a.ck(j), b.ck(j)) == 0
+    val rows = part.map(new LogRow(_))
+    // (1) prefix shadow: a tombstone applies to itself, so each dies here
+    val tombs = rows.filter(_.tombLevel >= 0)
+    val survivors = rows.filter { x =>
+      !tombs.exists(tb => tb.wt >= x.wt &&
+        (0 until tb.tombLevel).forall(ckEq(tb, x, _)))
+    }
+    // declared clustering order; rows of one clustering key end adjacent
+    def cmpCk(a: LogRow, b: LogRow): Int = {
+      var c = 0; var j = 0
+      while (c == 0 && j < nCk) {
+        c = (a.ck(j), b.ck(j)) match {
+          case (null, null) => 0
+          case (null, _) => if (desc(j)) 1 else -1
+          case (_, null) => if (desc(j)) -1 else 1
+          case (x, y) =>
+            val o = ckOrd(j).compare(x, y)
+            if (desc(j)) -o else o
+        }
+        j += 1
+      }
+      c
+    }
+    val sorted = survivors.sortWith(cmpCk(_, _) < 0)
+    val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[LogRow]]
+    var i = 0
+    while (i < sorted.size) {
+      var e = i + 1
+      while (e < sorted.size && cmpCk(sorted(i), sorted(e)) == 0) e += 1
+      groups += sorted.slice(i, e)
+      i = e
+    }
+    val regular = regularCols(t).map(c => (idx(c), ls(idx(c)).dataType,
+      opt(s"_del_$c")))
+    val valOrd = regular.map { case (_, dt, _) => PhysicalDataType.ordering(dt) }
+    val hasMarker = mkI.isDefined && regular.nonEmpty
+    groups.toSeq.flatMap { g =>
+      // (2) the row tombstone
+      val rowTomb = g.filter(_.deleted).map(_.wt).maxOption
+      val live = g.filter(x => !x.deleted && rowTomb.forall(x.wt > _))
+      if (live.isEmpty) None
+      else {
+        // (3) per-cell (writetime, tombstone, value) winner: max_by keeps
+        // the first of equal candidates
+        val cells = regular.indices.map { ci =>
+          val (cI, dt, dI) = regular(ci)
+          var best: (Long, Boolean, Any) = null
+          live.foreach { x =>
+            val tomb = dI.exists(d => !x.r.isNullAt(d) && x.r.getBoolean(d))
+            val v = if (x.r.isNullAt(cI)) null else x.r.get(cI, dt)
+            if (v != null || tomb) {
+              val wins = best == null || {
+                val byWt = java.lang.Long.compare(x.wt, best._1)
+                if (byWt != 0) byWt > 0
+                else if (tomb != best._2) tomb
+                else if (v == null || best._3 == null) v != null
+                else valOrd(ci).compare(v, best._3) > 0
+              }
+              if (wins) best = (x.wt, tomb, v)
+            }
+          }
+          if (best == null || best._2) (null, null) else (best._3, best._1)
+        }
+        // (4) the row-marker rule
+        val exists = !hasMarker || cells.exists(_._1 != null) ||
+          live.exists(x => !x.r.isNullAt(mkI.get) && x.r.getBoolean(mkI.get))
+        if (!exists) None
+        else Some(new GenericInternalRow((g.head.key.toSeq ++
+          cells.map(_._1) ++ cells.map(_._2) :+ live.map(_.wt).max).toArray))
+      }
+    }
+  }
+
+  /** The Catalyst value a SELECT's `pk = v` compares against: the literal
+    * cast to the column type, as the engine casts it. None (the statement
+    * keeps the Spark view) for markers, function bounds, a failing cast or
+    * null. */
+  private def keyValue(v: Any, dt: DataType): Option[Any] = v match {
+    case CqlBindMarker | CqlUnset | _: CqlNamedMarker | _: CqlFnLit |
+         _: CqlDuration => None
+    case _ =>
+      val tz = spark.conf.get("spark.sql.session.timeZone")
+      scala.util.Try(Cast(Literal(v), dt, Some(tz)).eval())
+        .toOption.filter(_ != null)
+  }
+
+  /** A SELECT that pins one partition of a scalar base table (no masks,
+    * not a system table): the partition's log rows ([[partitionLog]]: one
+    * scan job with the key filter pushed into parquet, none while the
+    * table is localOnly) fold on the driver ([[foldPartition]]), and the
+    * engine runs the statement over that one-partition LocalRelation with
+    * the table's real metadata, so validation is unchanged. Upstream reads
+    * one partition the same way: merge the memtable and the SSTables that
+    * hold it [U db/SinglePartitionReadCommand]. Table-wide reads, and
+    * every other SELECT (None here), run the Spark view's fold. */
+  private def partitionRead(sel: CqlSelect): Option[DataFrame] = {
+    val key = sel.table.toLowerCase
+    for {
+      t <- state.get(key)
+      if !forceSparkRead && scalarTable(t) &&
+        !SystemKeyspaces.contains(keyspaceOf(key))
+      pins <- CqlEngine.pinnedPartition(sel, t.partitionKeys)
+      pk = pins.flatMap(p => p.values match {
+        case Seq(v) => keyValue(v, logField(t, p.column).dataType)
+        case _ => None
+      })
+      if pk.size == pins.size
+      table <- engine.catalogTables.get(key)
+    } yield {
+      val log = partitionLog(t, pk)
+      val rows = foldPartition(t, log)
+      foldReads += 1
+      traceNote(s"Read path: driver partition fold (${log.size} log rows " +
+        s"scanned, ${rows.size} rows out)")
+      engine.execute(sel, table.overPartition(
+        org.apache.spark.sql.GraftShim.localFrame(spark, foldSchema(t), rows)),
+        pins)
+    }
+  }
+
+  /** A SELECT through the engine's Spark view (the table-wide fold). */
+  private def viewRead(sel: CqlSelect): DataFrame = {
+    traceNote("Read path: Spark view")
+    engine.execute(sel)
+  }
+
+  /** LWT's read of the row at full primary key `kv` (column → value, as
+    * the statement's cells carry them) of a localOnly scalar table: the
+    * partition fold, then the addressed row's cells as column → value. */
+  private def lwtLocalRead(t: TableState,
+      kv: Map[String, Any]): Option[String => Any] = {
+    def cat(k: String): Any = CatalystTypeConverters
+      .createToCatalystConverter(logField(t, k).dataType)(kv(k))
+    val schema = foldSchema(t)
+    val nPk = t.partitionKeys.size
+    val ck = t.clusteringKeys.map(cat)
+    val ckOrd = t.clusteringKeys.map(k =>
+      PhysicalDataType.ordering(logField(t, k).dataType))
+    foldPartition(t, partitionLog(t, t.partitionKeys.map(cat))).find { r =>
+      ck.indices.forall(j => !r.isNullAt(nPk + j) && ckOrd(j).compare(
+        r.get(nPk + j, schema(nPk + j).dataType), ck(j)) == 0)
+    }.map { r =>
+      val cells = schema.fields.indices.map { i =>
+        val dt = schema(i).dataType
+        schema(i).name -> CatalystTypeConverters.createToScalaConverter(dt)(
+          if (r.isNullAt(i)) null else r.get(i, dt))
+      }.toMap
+      (n: String) => cells.getOrElse(n, null)
+    }
   }
 
   /** LWT condition check — the Paxos read phase collapsed to the single-
@@ -5600,7 +5795,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       val row: Option[String => Any] = keyVals match {
         case Some(kv) if lwtLocalEligible(t) =>
           lwtLocalReads += 1
-          localPointRead(t, kv).map(m => (n: String) => m.getOrElse(n, null))
+          lwtLocalRead(t, kv)
         case _ =>
           var v = view(dml.table)
           keyCols(t).foreach { k =>

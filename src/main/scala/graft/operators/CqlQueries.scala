@@ -356,13 +356,14 @@ object CqlQueries {
         |UNION ALL SELECT 1 AS k, 'D' AS op, CAST(NULL AS DOUBLE) AS v
         |ORDER BY k, op, v""".stripMargin,
     // the invariant projection of the three traced statements: 2 phase
-    // events each (parse + completion), sane measured timings
+    // events each (parse + completion), plus the SELECT's read-path event,
+    // sane measured timings
     "cql12_tracing" ->
       """SELECT request, command, CAST(n_events AS BIGINT) AS n_events,
         |  parsed, completed, timing_sane FROM (VALUES
         |  ('INSERT INTO t12 (k, v) VALUES (1, 10)', 'QUERY', 2,
         |   true, true, true),
-        |  ('SELECT v FROM t12 WHERE k = 1', 'QUERY', 2, true, true, true),
+        |  ('SELECT v FROM t12 WHERE k = 1', 'QUERY', 3, true, true, true),
         |  ('UPDATE t12 SET v = 11 WHERE k = 1', 'QUERY', 2,
         |   true, true, true))
         |AS t(request, command, n_events, parsed, completed, timing_sane)

@@ -48,6 +48,16 @@ object GraftShim {
       Seq(path), Some(schema),
       classOf[execution.datasources.parquet.ParquetFileFormat])
 
+  /** A DataFrame over rows the driver already holds, as a LocalRelation:
+    * the optimizer folds filters, projections and limits over it at plan
+    * time, so collecting such a plan starts no job. `rows` are Catalyst
+    * internal rows of `schema`. */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Block until the listener bus has delivered every posted event (its
     * drain is `private[spark]`): a profiler reads its listeners' totals
     * only after the run's last job, stage and query events have landed. */

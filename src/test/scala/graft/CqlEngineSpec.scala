@@ -896,8 +896,9 @@ class CqlEngineSpec extends SparkSpec {
         "(l_orderkey + l_linenumber) * 2 AS paren, " +
         "-l_linenumber + 10 AS neg " +
         "FROM lineitem WHERE l_orderkey = 1")
+    // a pinned partition reads in clustering order (l_linenumber ASC)
     val native = Tables.lineitem(spark, sf)
-      .filter(col("l_orderkey") === 1)
+      .filter(col("l_orderkey") === 1).orderBy("l_linenumber")
       .select(col("l_orderkey"),
         (col("l_orderkey") + col("l_linenumber") * 2).as("prec"),
         ((col("l_orderkey") + col("l_linenumber")) * 2).as("paren"),

@@ -1744,6 +1744,34 @@ class CqlSessionSpec extends SparkSpec {
       s.execute("CREATE TABLE bad (k bigint, a bigint, b bigint, " +
         "PRIMARY KEY (k, a, b)) WITH CLUSTERING ORDER BY (b DESC)")
     }.getMessage.contains("CLUSTERING ORDER BY must list"))
+    // without ORDER BY a partition reads in its DECLARED order, and LIMIT
+    // keeps the first rows of that order — on the driver fold and on the
+    // Spark view, for localOnly and for file-backed tables
+    s.execute("CREATE TABLE newest (k bigint, ts bigint, v text, " +
+      "PRIMARY KEY (k, ts)) WITH CLUSTERING ORDER BY (ts DESC)")
+    Seq(3L, 1L, 5L, 2L, 4L).foreach(i =>
+      s.execute(s"INSERT INTO newest (k, ts, v) VALUES (1, $i, 'v$i')"))
+    s.execute("INSERT INTO series2 (k, a, b, v) VALUES (1, 1, 3, 'y')")
+    s.execute("INSERT INTO series2 (k, a, b, v) VALUES (1, 0, 2, 'z')")
+    def onBothPaths(want: Seq[Long], wantTop2: Seq[Long],
+        wantMixed: Seq[(Long, Long)]): Unit =
+      for (view <- Seq(false, true)) {
+        s.forceSparkRead = view
+        assert(s.execute("SELECT ts FROM newest WHERE k = 1").collect()
+          .map(_.getLong(0)).toSeq === want, s"Spark view: $view")
+        assert(s.execute("SELECT ts FROM newest WHERE k = 1 LIMIT 2")
+          .collect().map(_.getLong(0)).toSeq === wantTop2)
+        assert(s.execute("SELECT a, b FROM series2 WHERE k = 1").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq === wantMixed)
+        s.forceSparkRead = false
+      }
+    val mixed = Seq((0L, 2L), (1L, 3L), (1L, 1L))
+    onBothPaths(Seq(5L, 4L, 3L, 2L, 1L), Seq(5L, 4L), mixed)
+    s.exposeAsCatalog("ordcat") // a catalog bulk load: file-backed tables
+    spark.sql("INSERT INTO ordcat.default.newest VALUES (1, 6, 'v6')")
+    spark.sql("INSERT INTO ordcat.default.series2 VALUES (1, 1, 2, 'w')")
+    onBothPaths(Seq(6L, 5L, 4L, 3L, 2L, 1L), Seq(6L, 5L),
+      Seq((0L, 2L), (1L, 3L), (1L, 2L), (1L, 1L)))
   }
 
   test("default_time_to_live applies to writes without USING TTL") {

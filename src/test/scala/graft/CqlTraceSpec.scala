@@ -28,7 +28,7 @@ class CqlTraceSpec extends SparkSpec {
     // nondecreasing real elapsed offsets
     val ev = s.execute("SELECT session_id, event_id, activity, " +
       "source_elapsed FROM system_traces.events").collect()
-    assert(ev.length === 4)
+    assert(ev.length === 5) // + the SELECT's read-path event
     ev.groupBy(_.getString(0)).foreach { case (_, es) =>
       val sorted = es.sortBy(_.getString(1))
       assert(sorted.head.getString(2).startsWith("Parsing"))
@@ -37,6 +37,8 @@ class CqlTraceSpec extends SparkSpec {
     assert(ev.exists(_.getString(2) == "Applied mutation to the upsert log"))
     assert(ev.exists(_.getString(2) ==
       "Computed Catalyst plan for statement"))
+    assert(ev.exists(_.getString(2) == "Read path: driver partition fold " +
+      "(1 log rows scanned, 1 rows out)"))
     // OFF: no further rows
     s.execute("INSERT INTO tr_t (k, v) VALUES (3, 'c')")
     assert(s.execute("SELECT count(*) FROM system_traces.sessions")
