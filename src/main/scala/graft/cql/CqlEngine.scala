@@ -838,8 +838,6 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
     t.df.schema.find(_.name.equalsIgnoreCase(name))
       .exists(_.dataType == org.apache.spark.sql.types.StringType)
 
-  /** Literal typed to its column (CQL bind values are typed; Spark's struct
-    * comparison does not coerce). */
   /** The table's declared clustering order (`WITH CLUSTERING ORDER BY`;
     * unlisted keys ASC) as sort columns. */
   private def declaredOrder(t: CqlTable): Seq[Column] = {
@@ -863,6 +861,8 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
       s"invalid $what value: $other")
   }
 
+  /** Literal typed to its column (CQL bind values are typed; Spark's struct
+    * comparison does not coerce). */
   private def typedLit(t: CqlTable, column: String, v: Any): Column = v match {
     case CqlDuration(m, d, n) => struct(
       lit(m).as("months"), lit(d).as("days"), lit(n).as("nanos"))
@@ -875,12 +875,6 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
       .map(f => lit(v).cast(f.dataType)).getOrElse(lit(v))
   }
 
-  /** (lhs, rhs) for a predicate whose bound is a function literal:
-    * min/maxTimeuuid bounds compare in timeuuid order — (ticks, tail), NOT
-    * string order, which would sort by time_low and scramble the timeline —
-    * and toTimestamp bounds compare as timestamps. */
-  /** The uuid Column a min/maxTimeuuid literal builds (`ts` overrides the
-    * literal argument when the caller already resolved it). */
   /** A function-literal timestamp argument as a Column: CQL integer
     * timestamps are epoch MILLISECONDS [U cql3/functions/TimeFcts] —
     * a bare long cast to Spark timestamp would be read as SECONDS and
@@ -894,6 +888,8 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
     case other => lit(other).cast("timestamp")
   }
 
+  /** The uuid Column a min/maxTimeuuid literal builds (`ts` overrides the
+    * literal argument when the caller already resolved it). */
   private def fnLitUuid(f: CqlFnLit, ts: Option[Column] = None): Column = {
     import graft.functions.TimeuuidFunctions._
     val arg = ts.getOrElse(tsArg(f.arg))
@@ -905,6 +901,10 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
     }
   }
 
+  /** (lhs, rhs) for a predicate whose bound is a function literal:
+    * min/maxTimeuuid bounds compare in timeuuid order — (ticks, tail), NOT
+    * string order, which would sort by time_low and scramble the timeline —
+    * and toTimestamp bounds compare as timestamps. */
   private def fnBound(p: ColumnPredicate, f: CqlFnLit): (Column, Column) = {
     import graft.functions.TimeuuidFunctions._
     f.fn match {

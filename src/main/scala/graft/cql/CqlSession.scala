@@ -1016,32 +1016,46 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   def view(table: String, nowUs: Option[Long] = None): DataFrame =
     viewOf(tableState(table), nowUs)
 
-  private def viewOf(t: TableState, nowUs: Option[Long] = None): DataFrame = {
-    val lg = {
-      // Partition and range tombstones (row deletes with a null clustering
-      // SUFFIX) shadow every strictly-older cell under their prefix
-      // (upstream `DeletionTime` / `RangeTombstone` [U]). One window per
-      // prefix length k: tombstones with exactly k clustering keys set
-      // shadow within their (pk, ck1..ckk) group; each tombstone row dies
-      // in its own fold (wt > wt is false), so downstream reconciles see
-      // only surviving cells. Static rows (all-null clustering) sit in the
-      // null groups of k ≥ 1 windows, where no such tombstone can exist —
-      // so ONLY the k=0 (partition) tombstone shadows statics, as
-      // upstream. Clustering depth is schema-bounded (≤3 in practice), so
-      // this is a fixed, small number of same-keyed windows.
-      (0 until math.max(t.clusteringKeys.size, 0)).foldLeft(log(t)) { (cur, k) =>
-        val setCks = t.clusteringKeys.take(k)
-        val nullCks = t.clusteringKeys.drop(k)
-        val isTomb = (col("_deleted") +: (
-          setCks.map(col(_).isNotNull) ++ nullCks.map(col(_).isNull)))
-          .reduce(_ && _)
-        val w = Window.partitionBy((t.partitionKeys ++ setCks).map(col): _*)
-        val wt = max(when(isTomb, col("_writetime"))).over(w)
-        cur.withColumn("_rt_wt", wt)
-          .filter(col("_rt_wt").isNull || col("_writetime") > col("_rt_wt"))
-          .drop("_rt_wt")
-      }
+  /** Partition and range tombstones (row deletes with a null clustering
+    * SUFFIX) shadow every strictly-older cell under their prefix (upstream
+    * `DeletionTime` / `RangeTombstone` [U]). One window per prefix length
+    * k: tombstones with exactly k clustering keys set shadow within their
+    * (pk, ck1..ckk) group. Static rows (all-null clustering) sit in the
+    * null groups of k ≥ 1 windows, where no such tombstone can exist — so
+    * ONLY the k=0 (partition) tombstone shadows statics, as upstream.
+    * Clustering depth is schema-bounded (≤3 in practice), so this is a
+    * fixed, small number of same-keyed windows.
+    *
+    * The read view drops each tombstone row in its own fold (wt > wt is
+    * false), so downstream reconciles see only surviving cells; the row
+    * reconcile handles a no-clustering table's row deletes itself.
+    * Compaction (`keepTombstones`) retains the tombstone rows and also runs
+    * the k=0 window on a no-clustering table, so partition tombstones
+    * shadow there too. */
+  private def prefixShadowed(t: TableState, lg: DataFrame,
+      keepTombstones: Boolean): DataFrame = {
+    val depth =
+      if (keepTombstones) math.max(t.clusteringKeys.size, 1)
+      else t.clusteringKeys.size
+    (0 until depth).foldLeft(lg) { (cur, k) =>
+      val setCks = t.clusteringKeys.take(k)
+      val nullCks = t.clusteringKeys.drop(k)
+      val isTomb = (col("_deleted") +: (
+        setCks.map(col(_).isNotNull) ++ nullCks.map(col(_).isNull)))
+        .reduce(_ && _)
+      val w = Window.partitionBy((t.partitionKeys ++ setCks).map(col): _*)
+      val wt = max(when(isTomb, col("_writetime"))).over(w)
+      val unshadowed =
+        if (keepTombstones) col("_deleted") || col("_rt_wt").isNull
+        else col("_rt_wt").isNull
+      cur.withColumn("_rt_wt", wt)
+        .filter(unshadowed || col("_writetime") > col("_rt_wt"))
+        .drop("_rt_wt")
     }
+  }
+
+  private def viewOf(t: TableState, nowUs: Option[Long] = None): DataFrame = {
+    val lg = prefixShadowed(t, log(t), keepTombstones = false)
     val regular = regularCols(t)
     if (t.staticKeys.isEmpty)
       CassandraModel.reconcileView(lg, keyCols(t), regular, nowUs)
@@ -1086,22 +1100,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * for every SELECT / writetime() / ttl() at every future `nowUs`
     * (CqlCompactionSpec pins this over random mutation scripts). */
   private def compactedLog(t: TableState, lg0: DataFrame): DataFrame = {
-    // prefix-shadow fold, k=0 included so partition tombstones shadow on
-    // no-clustering tables too; `_deleted` rows always survive the fold
-    val folded =
-      (0 until math.max(t.clusteringKeys.size, 1)).foldLeft(lg0) { (cur, k) =>
-        val setCks = t.clusteringKeys.take(k)
-        val nullCks = t.clusteringKeys.drop(k)
-        val isTomb = (col("_deleted") +: (
-          setCks.map(col(_).isNotNull) ++ nullCks.map(col(_).isNull)))
-          .reduce(_ && _)
-        val w = Window.partitionBy((t.partitionKeys ++ setCks).map(col): _*)
-        val wt = max(when(isTomb, col("_writetime"))).over(w)
-        cur.withColumn("_rt_wt", wt)
-          .filter(col("_deleted") ||
-            col("_rt_wt").isNull || col("_writetime") > col("_rt_wt"))
-          .drop("_rt_wt")
-      }
+    val folded = prefixShadowed(t, lg0, keepTombstones = true)
     val fields = t.logSchema.fieldNames.toSeq
     val opColumns = fields.filter(_.startsWith("_op_"))
     def chan(event: Column, wkeys: Seq[String]): Column = {
@@ -3664,6 +3663,39 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     }
   }
 
+  /** Replay this session's full-query log, in order, into a FRESH
+    * session — the loop REPLAY and COMPARE share. A login switches the
+    * fresh session's role; a statement re-executes; a prepared execution
+    * re-prepares under its PREPARE-time keyspace, then restores it
+    * (replayed USE statements must not re-target the template), and
+    * re-binds. `visit` gets each statement's text, recorded outcome and
+    * recorded result digest, and the replayed result or the replay
+    * error's class name. Returns the fresh session and the event count. */
+  private def replayFql(
+      visit: (String, Boolean, Option[String], Either[String, DataFrame]) => Unit)
+      : (CqlSession, Int) = {
+    val events = fqlLog.toVector
+    val fresh = new CqlSession(spark, Map.empty)
+    def attempt(run: => DataFrame): Either[String, DataFrame] =
+      try Right(run)
+      catch { case scala.util.control.NonFatal(e) =>
+        Left(e.getClass.getSimpleName) }
+    events.foreach {
+      case CqlSession.FqlLogin(role) => fresh.forceRole(role)
+      case CqlSession.FqlStmt(text, ok, dg) =>
+        visit(text, ok, dg, attempt(fresh.execute(text)))
+      case CqlSession.FqlPrep(text, ks, binds, named, ok, dg) =>
+        visit(text, ok, dg, attempt {
+          val saved = fresh.currentKeyspace
+          fresh.forceKeyspace(ks)
+          val p = try fresh.prepare(text)
+            finally fresh.forceKeyspace(saved)
+          if (named.nonEmpty) p.executeNamed(named) else p.execute(binds: _*)
+        })
+    }
+    (fresh, events.size)
+  }
+
   /** `REPLAY AUDIT` [U tools/fqltool replay, 4.0]: re-execute this
     * session's recorded full-query log, in order, into a FRESH session,
     * then report (a) how many replayed statements reproduced their
@@ -3678,31 +3710,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * driver-side row diff. */
   def replayAudit(): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val events = fqlLog.toVector
-    val fresh = new CqlSession(spark, Map.empty)
     var nStmt = 0
     var outcomeMatches = 0
-    events.foreach {
-      case CqlSession.FqlLogin(role) => fresh.forceRole(role)
-      case CqlSession.FqlStmt(text, ok, _) =>
-        nStmt += 1
-        val rep = try { fresh.execute(text); true }
-          catch { case scala.util.control.NonFatal(_) => false }
-        if (rep == ok) outcomeMatches += 1
-      case CqlSession.FqlPrep(text, ks, binds, named, ok, _) =>
-        nStmt += 1
-        val rep = try {
-          // re-prepare under the PREPARE-time keyspace, then restore —
-          // replayed USE statements must not re-target the template
-          val saved = fresh.currentKeyspace
-          fresh.forceKeyspace(ks)
-          val p = try fresh.prepare(text)
-            finally fresh.forceKeyspace(saved)
-          if (named.nonEmpty) p.executeNamed(named)
-          else p.execute(binds: _*)
-          true
-        } catch { case scala.util.control.NonFatal(_) => false }
-        if (rep == ok) outcomeMatches += 1
+    val (fresh, nEvents) = replayFql { (_, ok, _, replayed) =>
+      nStmt += 1
+      if (replayed.isRight == ok) outcomeMatches += 1
     }
     val aT = state.keys.toSet
     val bT = fresh.state.keys.toSet
@@ -3728,7 +3740,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       }
     }
     spark.createDataFrame(Seq(
-      Row("replay", "events", s"n=${events.size}"),
+      Row("replay", "events", s"n=$nEvents"),
       Row("replay", "outcome_match", s"$outcomeMatches/$nStmt"),
       Row("replay", "state_equal", stateEqual.toString),
       Row("replay", "tables_compared", s"n=${common.size}")).asJava,
@@ -3829,8 +3841,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * even when the divergence itself is a nondeterministic value. */
   def compareAudit(): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val events = fqlLog.toVector
-    val fresh = new CqlSession(spark, Map.empty)
     var nStmt = 0
     var outcomeMatches = 0
     var nDigested = 0
@@ -3851,26 +3861,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           firstDivergence = Some(text.take(100))
       }
     }
-    events.foreach {
-      case CqlSession.FqlLogin(role) => fresh.forceRole(role)
-      case CqlSession.FqlStmt(text, ok, dg) =>
-        score(text, ok,
-          dg, try Right(fresh.execute(text))
-            catch { case scala.util.control.NonFatal(e) =>
-              Left(e.getClass.getSimpleName) })
-      case CqlSession.FqlPrep(text, ks, binds, named, ok, dg) =>
-        score(text, ok, dg, try {
-          val saved = fresh.currentKeyspace
-          fresh.forceKeyspace(ks)
-          val p = try fresh.prepare(text)
-            finally fresh.forceKeyspace(saved)
-          Right(if (named.nonEmpty) p.executeNamed(named)
-            else p.execute(binds: _*))
-        } catch { case scala.util.control.NonFatal(e) =>
-          Left(e.getClass.getSimpleName) })
-    }
+    val (_, nEvents) = replayFql(score)
     spark.createDataFrame(Seq(
-      Row("compare", "events", s"n=${events.size}"),
+      Row("compare", "events", s"n=$nEvents"),
       Row("compare", "outcome_match", s"$outcomeMatches/$nStmt"),
       Row("compare", "digest_match", s"$digestMatches/$nDigested"),
       Row("compare", "first_divergence",
@@ -4122,29 +4115,17 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         StructField("success", BooleanType, nullable = false),
         StructField("error", StringType, nullable = true))))
     }
-    if (kw0 == "replay") {
+    if (kw0 == "replay" || kw0 == "compare" || kw0 == "dump") {
       head.stripSuffix(";").split("\\s+").lift(1).map(_.toLowerCase) match {
         case Some("audit") => ()
         case other => throw new CqlInvalidQueryException(
-          s"REPLAY expects AUDIT, got ${other.getOrElse("nothing")}")
+          s"${kw0.toUpperCase} expects AUDIT, got ${other.getOrElse("nothing")}")
       }
-      return replayAudit()
-    }
-    if (kw0 == "compare") {
-      head.stripSuffix(";").split("\\s+").lift(1).map(_.toLowerCase) match {
-        case Some("audit") => ()
-        case other => throw new CqlInvalidQueryException(
-          s"COMPARE expects AUDIT, got ${other.getOrElse("nothing")}")
+      return kw0 match {
+        case "replay" => replayAudit()
+        case "compare" => compareAudit()
+        case _ => dumpAudit()
       }
-      return compareAudit()
-    }
-    if (kw0 == "dump") {
-      head.stripSuffix(";").split("\\s+").lift(1).map(_.toLowerCase) match {
-        case Some("audit") => ()
-        case other => throw new CqlInvalidQueryException(
-          s"DUMP expects AUDIT, got ${other.getOrElse("nothing")}")
-      }
-      return dumpAudit()
     }
     val tid = registerInFlight(head)
     try audited(head, kw0) {
@@ -5463,13 +5444,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * serve (partition SELECTs and LWT condition reads) through the Spark
     * view, so specs can pin fold ≡ Spark view. */
   private[graft] var forceSparkRead: Boolean = false
-  /** CqlLwtFastPathSpec's name for [[forceSparkRead]]. */
-  private[graft] def lwtForceSparkRead_=(b: Boolean): Unit = forceSparkRead = b
-  private[graft] def lwtForceSparkRead: Boolean = forceSparkRead
-  /** Count of LWT reads served driver-locally (spec instrumentation). */
-  private[graft] var lwtLocalReads: Long = 0L
-  /** Count of SELECTs served by the driver-side partition fold
-    * ([[partitionRead]]; spec instrumentation). */
+  /** Count of reads served by the driver-side partition fold: SELECTs
+    * ([[partitionRead]]) and LWT condition reads ([[lwtLocalRead]]; spec
+    * instrumentation). */
   private[graft] var foldReads: Long = 0L
 
   /** Every cell resolves by the scalar reconcile rule: no collection/UDT/
@@ -5478,11 +5455,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private def scalarTable(t: TableState): Boolean =
     t.staticKeys.isEmpty && t.counterKeys.isEmpty &&
       !t.logSchema.fieldNames.exists(_.startsWith("_op_"))
-
-  /** The LWT local fast path applies while ALL table data sits in
-    * `pending` (driver-local rows) of a scalar table. */
-  private def lwtLocalEligible(t: TableState): Boolean =
-    t.localOnly && !forceSparkRead && scalarTable(t)
 
   /** Generic scalar ordering of LWT condition operands; null sorts
     * lowest. */
@@ -5729,7 +5701,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   }
 
   /** LWT's read of the row at full primary key `kv` (column → value, as
-    * the statement's cells carry them) of a localOnly scalar table: the
+    * the statement's cells carry them) of a scalar table — driver-local or
+    * file-backed, the same eligibility as a partition SELECT: the
     * partition fold, then the addressed row's cells as column → value. */
   private def lwtLocalRead(t: TableState,
       kv: Map[String, Any]): Option[String => Any] = {
@@ -5755,10 +5728,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   /** LWT condition check — the Paxos read phase collapsed to the single-
     * writer case: a point read of the addressed row from the reconciled
-    * view (upstream `StorageProxy.cas` [U]). Session-local scalar tables
-    * serve it driver-locally (upstream LWT reads one partition from local
-    * storage — a distributed scan per CAS would never hold at scale);
-    * everything else falls back to the Spark view. */
+    * view (upstream `StorageProxy.cas` [U]). Scalar tables serve it from
+    * the driver-side partition fold (upstream LWT reads one partition from
+    * local storage — a distributed scan per CAS would never hold at
+    * scale); everything else falls back to the Spark view. */
   private def conditionHolds(dml: CqlDml): Boolean = dml.condition match {
     case None => true
     case Some(cond) =>
@@ -5793,8 +5766,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         else None
       }
       val row: Option[String => Any] = keyVals match {
-        case Some(kv) if lwtLocalEligible(t) =>
-          lwtLocalReads += 1
+        case Some(kv) if scalarTable(t) && !forceSparkRead =>
+          foldReads += 1
           lwtLocalRead(t, kv)
         case _ =>
           var v = view(dml.table)

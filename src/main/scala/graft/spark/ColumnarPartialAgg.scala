@@ -36,12 +36,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *   HashAggregate(Partial, [Project,] [Filter,] columnar parquet scan)
   * where the scan is a V1 FileSourceScan(parquet) or a DSv2
   * BatchScan(ParquetScan, no pushed aggregate) — the latter serves every
-  * GraftCatalog snapshot read — and whose grouping keys, filter and
+  * GraftCatalog snapshot read — with at most MaxKeys grouping keys and
+  * MaxAggs aggregates, and whose grouping keys, filter and
   * aggregate inputs compile to the typed column programs below; anything
   * else returns the plan unchanged. The row
-  * loop is allocation-free: group keys evaluate into a reused long[]
-  * (strings interned to dense ids per partition, nulls in a bitmask),
-  * sum inputs stay primitive, and decimal quantization runs an exact
+  * loop is allocation-free: a single long key probes a primitive map, and
+  * any other shape (0–6 keys) interns each key to a dense per-partition
+  * id packed into one or two longs (field 0 = null); sum inputs stay
+  * primitive, and decimal quantization runs an exact
   * guard-banded long fast path (see DecimalSumAcc). Null group keys and
   * null sum inputs follow Sum/Count's documented buffer semantics
   * (sum-null-until-first-value, isEmpty flag for decimal); double/long
@@ -576,17 +578,6 @@ object ColumnarPartialAgg {
     extends KeySpec
   private[spark] final case class StringKey(col: StringCol) extends KeySpec
 
-  /** Dense group key: per-key long slots (string keys hold interned ids)
-    * plus a null bitmask in the last slot. No boxing on probe. */
-  private[spark] final class LKey(val vals: Array[Long]) extends Serializable {
-    override def hashCode(): Int = java.util.Arrays.hashCode(vals)
-    override def equals(o: Any): Boolean = o match {
-      case k: LKey => java.util.Arrays.equals(vals, k.vals)
-      case _ => false
-    }
-    def frozen: LKey = new LKey(java.util.Arrays.copyOf(vals, vals.length))
-  }
-
   // ——— aggregate accumulators: SLOT-INDEXED, BATCH-AT-A-TIME ———
   // The first (per-row `accs(a).update(b, i)`) layout measured slower
   // than whole-stage codegen on wide aggregates: every row paid one
@@ -979,12 +970,44 @@ object ColumnarPartialAgg {
     pred: Option[(ColumnarBatch, Int) => Byte],
     nShared: Int) extends Serializable
 
+  /** The shapes the kernel runs, decided once by GraftColumnarRule: the
+    * packed slot path holds at most two words of key fields, and the
+    * aggregate width gate is a constant (re-measured r14 with honest
+    * forcing: a1's 8 aggregates ran 1.04 s swapped vs 4.69 s stock at
+    * sf10 — the kernel's fixed-point decimal sums win by more on wide
+    * shapes; the old limit of 2 came from a count()-pruned comparison). */
+  private[spark] val MaxKeys = 6
+  private[spark] val MaxAggs = 16
+
+  /** Bits per packed key field: 1–3 keys share one word, 4–6 split over
+    * two (63 bits is too tight for 4+ fields); a global aggregate has no
+    * field and probes the word 0. */
+  private[spark] def fieldBits(nKeys: Int): Int =
+    63 / (if (nKeys > 3) (nKeys + 1) / 2 else math.max(nKeys, 1))
+
+  /** Per-key ids a flush window may hold beyond the live group count:
+    * between two post-batch flush checks one reader batch can add at most
+    * its row count, and spark.sql.parquet.columnarReaderBatchSize is
+    * user-settable above the old fixed 1<<17 (r15 advisor note). */
+  private[spark] def idHeadroom(): Int = math.max(1 << 17,
+    org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.sql.parquet.columnarReaderBatchSize", "4096")
+      .toInt + 1)
+
+  /** Whether `nKeys` packed fields leave that headroom below their
+    * capacity: at 3, 5 or 6 keys (21-bit fields) a reader batch of ~2^21
+    * rows or more does not, and the shape stays a stock aggregate
+    * (r16 advisor note) instead of tripping the exec's overflow guard. */
+  private[spark] def packFeasible(nKeys: Int, headroom: Int): Boolean = {
+    val fb = fieldBits(nKeys)
+    fb >= 31 || headroom < (1 << fb)
+  }
+
   /** Open-addressed long → slot map (linear probing, power-of-two
     * capacity, 0.7 load): the probe path for the dominant
-    * single-long-group-key shape. The generic path's
-    * HashMap[LKey, Integer] allocates a boxed Integer + hashes a long[]
-    * per NEW group and per-row boxes on probe — fine at t1's hundreds of
-    * groups, a 2× whole-query loss on j10's 15 M (measured r12, sf10:
+    * single-long-group-key shape. A boxed HashMap key allocates a boxed
+    * Integer + hashes a long[] per NEW group and boxes per row on probe —
+    * fine at t1's hundreds of groups, a 2× whole-query loss on j10's 15 M (measured r12, sf10:
     * swapped 2.0–3.2 s vs stock 1.0 s before this map; at-or-below
     * stock after). Zero allocation per row and per group. */
   private[spark] final class LongToSlot(initCap: Int) {
@@ -1311,29 +1334,19 @@ case class ColumnarPartialAggExec(
     // pass-through instead of OOMing
     val maxGroups = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.columnarAgg.maxGroups", "1048576").toInt
-    // packed-field id headroom (r15 advisor note): between two post-batch
-    // flush checks a batch can add at most batch-size new per-key ids
-    // beyond the live group count, so the headroom reserved below the
-    // pack-field capacity must dominate the CONFIGURED reader batch size —
-    // spark.sql.parquet.columnarReaderBatchSize is user-settable above the
-    // old fixed 1<<17. Captured on the driver with the other plan confs.
-    val idHeadroom = math.max(1 << 17,
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.sql.parquet.columnarReaderBatchSize", "4096")
-        .toInt + 1)
+    // captured on the driver with the other plan confs; the rule already
+    // declined every shape whose packed fields cannot hold this headroom
+    val idHeadroom = ColumnarPartialAgg.idHeadroom()
     scan.executeColumnar().mapPartitions { batches =>
       val keys = kernel.keys
-      // slot assignment: LKey → dense slot id; accumulator state lives in
-      // slot-indexed parallel arrays inside each Acc (batch-at-a-time
+      // slot assignment: group key → dense slot id; accumulator state lives
+      // in slot-indexed parallel arrays inside each Acc (batch-at-a-time
       // updates, one virtual call per acc per batch)
-      val slotMap = new java.util.HashMap[LKey, Integer]()
-      val slotKeys = new scala.collection.mutable.ArrayBuffer[LKey]()
       // one shared-fill cache per partition, generation-bumped per batch
       val sharedFills = new SharedFills(kernel.nShared)
       val accs = kernel.accFactory(sharedFills)
       var slots = new Array[Int](8192)
-      val probe = new LKey(new Array[Long](nKeys + 1)) // last slot: null bits
-      // single-long-key fast path: primitive open-addressed probes (the
+      // single-long-key fast path: primitive open-addressed probes (a
       // boxed map is a measured 2× whole-query loss at 15 M groups)
       val fastKey: LongCol = keys match {
         case Array(LongKey(c0, _)) => c0
@@ -1342,7 +1355,7 @@ case class ColumnarPartialAggExec(
       val fastMap = if (fastKey != null) new LongToSlot(8192) else null
       var nullSlotId = -1 // the single null-key group's slot (fast path)
       // fast-path group keys live in a primitive growing array — zero
-      // object allocation per group (an LKey + buffer entry per group
+      // object allocation per group (a key object + buffer entry per group
       // showed up as first-run GC spikes at j10's 15 M groups)
       var fastKeys = if (fastMap != null) new Array[Long](8192) else null
       var fastN = 0
@@ -1350,37 +1363,24 @@ case class ColumnarPartialAggExec(
         case Array(LongKey(_, ei)) => ei
         case _ => false
       }
-      // PACKED composite path (r15): for 1–3 keys (the single-LongKey
-      // shape keeps its own fast path), every key's value is interned to
-      // a dense per-key id (strings via the intern table — resolved once
-      // per distinct DICTIONARY id per batch when the column arrives
-      // dictionary-encoded; longs via a primitive LongToSlot), the ids
-      // packed into one long (field 0 = null), and the composite probed
-      // through LongToSlot. Replaces the legacy per-row path's boxed
-      // HashMap<LKey> probe + per-row UTF8String materialize/hash —
-      // measured at the 100 M-row fixture as the dominant term above the
-      // decode floor for a1 (0.57 s of 1.45 s) and t1 (0.5 s of 0.88 s).
-      // Exactness: per-key ids never exceed the live composite count, and
-      // the flush threshold is capped below the field capacity (minus one
-      // max batch of headroom), so a field can never overflow. 4-6 keys
-      // (r16) pack into TWO words probed through Long2ToSlot — 63 bits is
-      // too tight for 4+ fields (the r15 cardinality cliff); the legacy
-      // boxed-LKey path remains only past 6 keys.
-      // feasibility gate (r16 advisor note): at 5-6 keys fieldBits=21
-      // gives ~2M of field capacity — a columnarReaderBatchSize configured
-      // above that would make the per-batch headroom unsatisfiable
-      // (packedCap negative, the runtime guard throwing on a query stock
-      // Spark runs fine). Such shapes take the legacy boxed-LKey path
-      // instead of relying on a runtime throw.
-      val packedFeasible = nKeys >= 1 && nKeys <= 6 && {
-        val hk = if (nKeys > 3) (nKeys + 1) / 2 else nKeys
-        val fb = 63 / hk
-        fb >= 31 || idHeadroom < (1 << fb)
-      }
-      val packedMode = fastMap == null && packedFeasible
+      // PACKED composite path (r15), every other shape: each key's value
+      // is interned to a dense per-key id (strings via the intern table —
+      // resolved once per distinct DICTIONARY id per batch when the column
+      // arrives dictionary-encoded; longs via a primitive LongToSlot), the
+      // ids packed into one long (field 0 = null), and the composite
+      // probed through LongToSlot. It replaced a boxed per-row key map +
+      // per-row UTF8String materialize/hash — measured at the 100 M-row
+      // fixture as the dominant term above the decode floor for a1 (0.57 s
+      // of 1.45 s) and t1 (0.5 s of 0.88 s). Exactness: per-key ids never
+      // exceed the live composite count, and the flush threshold is capped
+      // below the field capacity (minus one max batch of headroom), so a
+      // field can never overflow. 4-6 keys (r16) pack into TWO words
+      // probed through Long2ToSlot. A global aggregate (0 keys) packs no
+      // field: every kept row probes the word 0, its one slot.
+      val packedMode = fastMap == null
       val packedWide = packedMode && nKeys > 3 // two-word pack
       val halfKeys = if (packedWide) (nKeys + 1) / 2 else nKeys
-      val fieldBits = if (packedMode) 63 / halfKeys else 1
+      val fieldBits = ColumnarPartialAgg.fieldBits(nKeys)
       val fieldMask = (1L << fieldBits) - 1 // fieldBits=63: Long.MaxValue
       val packedCap: Int =
         if (!packedMode) Int.MaxValue
@@ -1406,10 +1406,7 @@ case class ColumnarPartialAggExec(
       val dictMemo = new Array[Array[Int]](nKeys)
       val dictMemoGen = new Array[Array[Int]](nKeys)
       var batchGen = 0
-      def numGroups: Int =
-        if (fastMap != null) fastN
-        else if (packedMode) packN
-        else slotKeys.length
+      def numGroups: Int = if (packedMode) packN else fastN
       // per string-key interning (dense ids; UTF8Strings cloned once per
       // flush window; tables reset WITH the accumulators at each
       // memory-bound flush so per-task memory stays O(maxGroups), not
@@ -1430,28 +1427,6 @@ case class ColumnarPartialAggExec(
       // 15 M groups a per-group GenericInternalRow + UnsafeRow copy() was
       // a measured ~30% of the swapped wall.
       val reusedRow = new GenericInternalRow(output.length)
-      def emitAll(ks: IndexedSeq[LKey]): Iterator[InternalRow] =
-        ks.indices.iterator.map { slot =>
-          val row = reusedRow
-          val kv = ks(slot).vals
-          val bits = kv(nKeys)
-          var k = 0
-          while (k < nKeys) {
-            if ((bits & (1L << k)) != 0L) row.update(k, null)
-            else keys(k) match {
-              case LongKey(_, emitInt) =>
-                if (emitInt) row.update(k, kv(k).toInt)
-                else row.update(k, kv(k))
-              case StringKey(_) =>
-                row.update(k, names(k)(kv(k).toInt))
-            }
-            k += 1
-          }
-          var off = nKeys
-          var a = 0
-          while (a < accs.length) { off = accs(a).emit(slot, row, off); a += 1 }
-          proj(row): InternalRow
-        }
       def emitAllFast(ks: Array[Long], n: Int, nullSlot: Int)
           : Iterator[InternalRow] =
         Iterator.range(0, n).map { slot =>
@@ -1500,7 +1475,7 @@ case class ColumnarPartialAggExec(
           val out = emitAllFast(ksnap, fastN, nullSlotId)
           fastMap.clear(); fastN = 0; nullSlotId = -1
           out
-        } else if (packedMode) {
+        } else {
           // per-key value tables (keyVals/names/interns) stay live until
           // the iterator drains — they reset with the accumulators
           val ksnap = java.util.Arrays.copyOf(packKeys, packN)
@@ -1509,11 +1484,6 @@ case class ColumnarPartialAggExec(
           val out = emitAllPacked(ksnap, ksnap2, packN)
           if (packedWide) packMap2.clear() else packMap.clear()
           packN = 0
-          out
-        } else {
-          val ks = slotKeys.toIndexedSeq
-          val out = emitAll(ks)
-          slotMap.clear(); slotKeys.clear()
           out
         }
       }
@@ -1533,8 +1503,8 @@ case class ColumnarPartialAggExec(
       // field buffers, then one combine+probe loop. Pred is evaluated
       // FIRST so filtered rows never intern (keeps the ids ≤ live-groups
       // invariant packedCap relies on, and skips work under selective
-      // filters).
-      var fieldBufs = Array.fill(nKeys)(new Array[Long](8192))
+      // filters). A global aggregate keeps one all-zero buffer: its word 0.
+      var fieldBufs = Array.fill(math.max(nKeys, 1))(new Array[Long](8192))
       var predBuf = new Array[Byte](8192)
       def fillLongKey(k: Int, col: LongCol, batch: ColumnarBatch, n: Int,
           havePred: Boolean): Unit = {
@@ -1610,7 +1580,7 @@ case class ColumnarPartialAggExec(
         if (slots.length < n) slots = new Array[Int](n)
         if (predBuf.length < n) predBuf = new Array[Byte](n)
         if (fieldBufs(0).length < n)
-          fieldBufs = Array.fill(nKeys)(new Array[Long](n))
+          fieldBufs = Array.fill(math.max(nKeys, 1))(new Array[Long](n))
         val havePred = pred != null
         if (havePred) {
           var i = 0
@@ -1684,83 +1654,37 @@ case class ColumnarPartialAggExec(
       }
       def consume(batch: ColumnarBatch): Unit = {
         sharedFills.newBatch()
-        if (packedMode) { consumePacked(batch); return }
+        if (packedMode) consumePacked(batch) else consumeFast(batch)
+      }
+      def consumeFast(batch: ColumnarBatch): Unit = {
         val n = batch.numRows()
         if (slots.length < n) slots = new Array[Int](n)
         var i = 0
-        if (fastMap != null) {
-          while (i < n) {
-            if (pred != null && pred(batch, i) != 1) slots(i) = -1
-            else if (fastKey.isNull(batch, i)) {
-              if (nullSlotId < 0) {
-                nullSlotId = fastN
-                if (fastN == fastKeys.length)
-                  fastKeys = java.util.Arrays.copyOf(fastKeys, fastN * 2)
-                fastKeys(fastN) = 0L
-                fastN += 1
-              }
-              slots(i) = nullSlotId
-            } else {
-              val k = fastKey.get(batch, i)
-              val s = fastMap.getOrInsert(k, fastN)
-              if (s == fastN) { // new group: record its key for emit
-                if (fastN == fastKeys.length)
-                  fastKeys = java.util.Arrays.copyOf(fastKeys, fastN * 2)
-                fastKeys(fastN) = k
-                fastN += 1
-              }
-              slots(i) = s
-            }
-            i += 1
-          }
-          val nSlots = fastN
-          var a = 0
-          while (a < accs.length) {
-            accs(a).grow(nSlots)
-            accs(a).updateBatch(batch, n, slots)
-            a += 1
-          }
-          return
-        }
         while (i < n) {
           if (pred != null && pred(batch, i) != 1) slots(i) = -1
-          else {
-            var bits = 0L
-            var k = 0
-            while (k < nKeys) {
-              keys(k) match {
-                case LongKey(col, _) =>
-                  if (col.isNull(batch, i)) { bits |= (1L << k); probe.vals(k) = 0L }
-                  else probe.vals(k) = col.get(batch, i)
-                case StringKey(col) =>
-                  if (col.isNull(batch, i)) { bits |= (1L << k); probe.vals(k) = 0L }
-                  else {
-                    val s = col.get(batch, i)
-                    var id = interns(k).get(s)
-                    if (id == null) {
-                      id = Integer.valueOf(names(k).length)
-                      val copy = s.clone()
-                      interns(k).put(copy, id)
-                      names(k) += copy
-                    }
-                    probe.vals(k) = id.intValue().toLong
-                  }
-              }
-              k += 1
+          else if (fastKey.isNull(batch, i)) {
+            if (nullSlotId < 0) {
+              nullSlotId = fastN
+              if (fastN == fastKeys.length)
+                fastKeys = java.util.Arrays.copyOf(fastKeys, fastN * 2)
+              fastKeys(fastN) = 0L
+              fastN += 1
             }
-            probe.vals(nKeys) = bits
-            var id = slotMap.get(probe)
-            if (id == null) {
-              id = Integer.valueOf(slotKeys.length)
-              val frozen = probe.frozen
-              slotMap.put(frozen, id)
-              slotKeys += frozen
+            slots(i) = nullSlotId
+          } else {
+            val k = fastKey.get(batch, i)
+            val s = fastMap.getOrInsert(k, fastN)
+            if (s == fastN) { // new group: record its key for emit
+              if (fastN == fastKeys.length)
+                fastKeys = java.util.Arrays.copyOf(fastKeys, fastN * 2)
+              fastKeys(fastN) = k
+              fastN += 1
             }
-            slots(i) = id.intValue()
+            slots(i) = s
           }
           i += 1
         }
-        val nSlots = slotKeys.length
+        val nSlots = fastN
         var a = 0
         while (a < accs.length) {
           accs(a).grow(nSlots)
@@ -1820,8 +1744,9 @@ case class ColumnarPartialAggExec(
               // one initial-values buffer row per partition even when
               // the partition is empty (that row is what makes count(*)
               // over an empty relation return 0, not no-rows)
-              if (nKeys == 0 && slotKeys.isEmpty) {
-                slotKeys += probe.frozen
+              if (nKeys == 0 && packN == 0) {
+                packKeys(0) = 0L
+                packN = 1
                 accs.foreach(_.grow(1))
               }
               cur = flush()
@@ -1848,22 +1773,24 @@ case class GraftColumnarRule() extends ColumnarRule with Logging {
           .getConfString("spark.graft.columnarAgg.enabled", "true")
           .toBoolean) plan
       else plan.transformUp {
-        case agg: HashAggregateExec if isPartial(agg) => agg.child match {
-          case _ if !withinWidth(agg) => kept(agg, "wider than the width gate")
-          case scan if columnarParquet(scan) =>
-            swap(agg, scan, None, None)
-          case ProjectExec(pl, scan)
-              if columnarParquet(scan) && pl.forall(_.deterministic) =>
-            swap(agg, scan, Some(pl), None)
-          case FilterExec(cond, scan)
-              if columnarParquet(scan) && cond.deterministic =>
-            swap(agg, scan, None, Some(cond))
-          case ProjectExec(pl, FilterExec(cond, scan))
-              if columnarParquet(scan) && cond.deterministic &&
-                pl.forall(_.deterministic) =>
-            swap(agg, scan, Some(pl), Some(cond))
-          case child => kept(agg, "input is not a columnar parquet scan " +
-            s"under at most a deterministic Project and Filter: ${child.nodeName}")
+        case agg: HashAggregateExec if isPartial(agg) => declined(agg) match {
+          case Some(why) => kept(agg, why)
+          case None => agg.child match {
+            case scan if columnarParquet(scan) =>
+              swap(agg, scan, None, None)
+            case ProjectExec(pl, scan)
+                if columnarParquet(scan) && pl.forall(_.deterministic) =>
+              swap(agg, scan, Some(pl), None)
+            case FilterExec(cond, scan)
+                if columnarParquet(scan) && cond.deterministic =>
+              swap(agg, scan, None, Some(cond))
+            case ProjectExec(pl, FilterExec(cond, scan))
+                if columnarParquet(scan) && cond.deterministic &&
+                  pl.forall(_.deterministic) =>
+              swap(agg, scan, Some(pl), Some(cond))
+            case child => kept(agg, "input is not a columnar parquet scan " +
+              s"under at most a deterministic Project and Filter: ${child.nodeName}")
+          }
         }
       }
     }
@@ -1872,21 +1799,20 @@ case class GraftColumnarRule() extends ColumnarRule with Logging {
     agg.aggregateExpressions.forall(_.mode == Partial) &&
       agg.requiredChildDistributionExpressions.isEmpty
 
-  private def withinWidth(agg: HashAggregateExec): Boolean =
-    agg.groupingExpressions.length <= 60 && // null bitmask is one long
-      // WIDTH GATE (re-measured r14, sf10 fixture, HONEST forcing): the
-      // original maxAggs=2 default came from a count()-forced comparison
-      // (swapped 0.60 vs stock 0.47) in which the optimizer had PRUNED the
-      // aggregate expressions out of both plans — neither side was doing
-      // the decimal math being "measured" (Q.force's scaladoc). Under the
-      // noop-sink forcing the decision inverts hard: a1's 8 aggregates
-      // (4 decimal sums among them) run 1.04 s swapped vs 4.69 s stock —
-      // the kernel's fixed-point decimal accumulation beats codegen'd
-      // BigDecimal by more on WIDE shapes, not less. Default now admits
-      // wide aggregates; the conf remains a test/tuning dial.
-      agg.aggregateExpressions.length <=
-        org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.columnarAgg.maxAggs", "16").toInt
+  /** Why the kernel does not take this shape, or None when it does: the
+    * whole admission decision, made here at plan time, so the exec never
+    * meets a shape without a slot path. */
+  private def declined(agg: HashAggregateExec): Option[String] = {
+    import ColumnarPartialAgg.{MaxAggs, MaxKeys, idHeadroom, packFeasible}
+    val nKeys = agg.groupingExpressions.length
+    val nAggs = agg.aggregateExpressions.length
+    if (nKeys > MaxKeys) Some(s"$nKeys grouping keys, more than $MaxKeys")
+    else if (nAggs > MaxAggs) Some(s"$nAggs aggregates, more than $MaxAggs")
+    else if (!packFeasible(nKeys, idHeadroom()))
+      Some(s"$nKeys packed key fields cannot hold one reader batch " +
+        "(spark.sql.parquet.columnarReaderBatchSize) of id headroom")
+    else None
+  }
 
   /** A vectorized parquet scan of either kind: V1 FileSourceScanExec, or a
     * DSv2 BatchScanExec over a ParquetScan (catalog snapshots, and

@@ -116,7 +116,6 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("avg compiles to the (sum, count) partial buffer and equals stock " +
     "at identical partitioning (a1's shape, width gate lifted)") {
-    spark.conf.set("spark.graft.columnarAgg.maxAggs", "10")
     def agg() = Tables.lineitem(spark, sf)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(avg(col("l_quantity")).as("aq"), count(lit(1)).as("n"),
@@ -126,34 +125,27 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val swapped = agg()
     spark.conf.set("spark.graft.columnarAgg.enabled", "false")
     val stock = try agg()
-      finally {
-        spark.conf.set("spark.graft.columnarAgg.enabled", "true")
-        spark.conf.unset("spark.graft.columnarAgg.maxAggs")
-      }
+      finally spark.conf.set("spark.graft.columnarAgg.enabled", "true")
     assert(swapped === stock)
   }
 
-  test("the width gate admits WIDE aggregates by default (r14 honest " +
-    "re-measure: a1 swapped 1.04s vs stock 4.69s at sf10 — the original " +
-    "maxAggs=2 came from a count()-pruned comparison) and still bounds " +
-    "when lowered by conf") {
+  test("the width gate admits WIDE aggregates (r14 honest re-measure: a1 " +
+    "swapped 1.04s vs stock 4.69s at sf10 — the original limit of 2 came " +
+    "from a count()-pruned comparison) up to 16 and declines 17") {
     val before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    def widePlan() = Tables.lineitem(spark, sf)
-      .groupBy(col("l_returnflag"))
-      .agg(sum(col("l_quantity")).as("a"), sum(col("l_discount")).as("b"),
-        sum(col("l_tax")).as("c"), count(lit(1)).as("n"))
+    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    // 16 distinct aggregates: sum, min, max and count of four columns
+    val sixteen = cols.flatMap(c =>
+      Seq(sum(col(c)), min(col(c)), max(col(c)), count(col(c))))
+    def plan(aggs: Seq[org.apache.spark.sql.Column]) = Tables.lineitem(spark, sf)
+      .groupBy(col("l_returnflag")).agg(aggs.head, aggs.tail: _*)
       .queryExecution.executedPlan.toString
     try {
-      assert(widePlan().contains("GraftColumnarPartialAgg"), widePlan())
-      spark.conf.set("spark.graft.columnarAgg.maxAggs", "2")
-      try assert(!widePlan().contains("GraftColumnarPartialAgg"), widePlan())
-      finally spark.conf.unset("spark.graft.columnarAgg.maxAggs")
-      val narrow = Tables.lineitem(spark, sf)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), sum(col("l_orderkey")).as("s"))
-        .queryExecution.executedPlan.toString
-      assert(narrow.contains("GraftColumnarPartialAgg"), narrow)
+      assert(plan(sixteen).contains("GraftColumnarPartialAgg"), plan(sixteen))
+      val seventeen = sixteen :+ count(lit(1))
+      assert(!plan(seventeen).contains("GraftColumnarPartialAgg"),
+        plan(seventeen))
     } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 
@@ -196,7 +188,7 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val keyCands: Seq[() => Column] = Seq(
       () => col("s1"), () => col("s2"), () => col("l1"), () => col("i1"),
       () => date_trunc("hour", col("t1")), () => date_trunc("day", col("t1")),
-      () => col("j1")) // 7th key: draws past 6 exercise the legacy path
+      () => col("j1")) // 7th key: draws past 6 must be declined
     val aggCands: Seq[() => Column] = Seq(
       () => count(lit(1)).as("c"),
       () => count(col("d1")).as("cd"),
@@ -215,7 +207,6 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       () => max(col("s2")).as("mxs"),
       () => min(col("i1")).as("mni"),
       () => max(col("t1")).as("mxt"))
-    spark.conf.set("spark.graft.columnarAgg.maxAggs", "10")
     val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
     var v2Swapped = 0
     // sweep BOTH ANSI modes: the sum kernels compile mode-specific
@@ -224,14 +215,17 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try for (ansi <- Seq(true, false); draw <- 1 to nDraws) {
       spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
       // 1–3 keys ride the r15 one-word PACKED path, 4–6 the r16 two-word
-      // pack, 7 the legacy boxed-LKey path — all three must stay
+      // pack; 7 keys stay a stock partial aggregate — all must stay
       // fuzz-covered
       val nK = 1 + rnd.nextInt(7)
       val keys = rnd.shuffle(keyCands).take(nK).map(_())
       val aggs = rnd.shuffle(aggCands).take(1 + rnd.nextInt(3)).map(_())
-      def run() = t().groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-        .collect().map(_.toString).sorted.toSeq
-      val swapped = run()
+      def query() = t().groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      def run() = query().collect().map(_.toString).sorted.toSeq
+      val df = query()
+      val swapped = df.collect().map(_.toString).sorted.toSeq
+      if (nK > 6) assert(kernels(df).isEmpty,
+        s"draw $draw: a 7-key shape must be declined: keys=$keys")
       spark.conf.set("spark.graft.columnarAgg.enabled", "false")
       val stock = try run()
         finally spark.conf.set("spark.graft.columnarAgg.enabled", "true")
@@ -240,18 +234,17 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // the same draw through the DSv2 reader: spark.read.parquet plans a
       // BatchScan(ParquetScan), the scan kind every catalog read has
       withConf(dsv2) {
-        val df = t().groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+        val df = query()
         val swappedV2 = df.collect().map(_.toString).sorted.toSeq
         if (kernels(df).exists(_.scan.isInstanceOf[BatchScanExec]))
           v2Swapped += 1
+        if (nK > 6) assert(kernels(df).isEmpty,
+          s"draw $draw (DSv2): a 7-key shape must be declined: keys=$keys")
         val stockV2 = withConf(stockAgg)(run())
         assert(swappedV2 === stockV2,
           s"draw $draw (ansi=$ansi, DSv2) diverged: keys=$keys aggs=$aggs")
       }
-    } finally {
-      spark.conf.unset("spark.graft.columnarAgg.maxAggs")
-      spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
-    }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
     assert(v2Swapped > 0, "no DSv2 draw ran the kernel")
   }
 
@@ -352,17 +345,13 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .agg(count(lit(1)).as("n"), sum(col("j")).as("sj"),
         min(col("j")).as("mn"))
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.columnarAgg.maxAggs", "10")
     spark.conf.set("spark.graft.columnarAgg.maxGroups", "4")
     val flushed = try agg()
       finally spark.conf.unset("spark.graft.columnarAgg.maxGroups")
     val unbounded = agg()
     spark.conf.set("spark.graft.columnarAgg.enabled", "false")
     val stock = try agg()
-      finally {
-        spark.conf.set("spark.graft.columnarAgg.enabled", "true")
-        spark.conf.unset("spark.graft.columnarAgg.maxAggs")
-      }
+      finally spark.conf.set("spark.graft.columnarAgg.enabled", "true")
     assert(flushed === stock)
     assert(unbounded === stock)
   }
@@ -387,34 +376,60 @@ class ColumnarAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(r.getLong(0) === 0L && r.isNullAt(1))
   }
 
-  test("r16-advice: a reader batch size above the 5-6-key field capacity " +
-    "falls back to the legacy boxed path instead of throwing (the query " +
-    "stock Spark runs must run here too)") {
+  test("global aggregate over a filter that rejects every row of a " +
+    "non-empty file, and over several files: equal to stock") {
+    val dir = Tables.tempRoot("graft-colagg-global")
+    spark.range(3000).selectExpr(
+      "id AS j", "CASE WHEN id % 7 = 0 THEN NULL ELSE id % 100 END AS l",
+      "CAST(id % 9 AS DOUBLE) AS d")
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    assert(spark.read.parquet(dir).inputFiles.length === 4)
+    def q(keep: String) = () => spark.read.parquet(dir).filter(expr(keep))
+      .agg(count(lit(1)).as("n"), count(col("l")).as("nl"),
+        sum(col("j")).as("sj"), min(col("l")).as("ml"), max(col("d")).as("xd"))
+    // `j < l` holds on no row, and row-group statistics cannot prune a
+    // column-to-column comparison: every batch reaches the kernel and
+    // every row is rejected there
+    for (keep <- Seq("j < l", "j >= 0", "j >= 1000 AND j < 1500");
+         (scanConf, scanKind) <- Seq(None -> classOf[FileSourceScanExec],
+           Some(dsv2) -> classOf[BatchScanExec])) {
+      val (swapped, stock) = withConf(scanConf.toSeq: _*)(
+        swappedVsStock(q(keep), Some(scanKind)))
+      assert(swapped === stock, s"filter $keep over $scanKind")
+    }
+    val none = q("j < l")().head()
+    assert(none.getLong(0) === 0L && none.getLong(1) === 0L &&
+      (2 to 4).forall(none.isNullAt), none)
+  }
+
+  test("a reader batch size above the 5-6-key field capacity declines " +
+    "the shape at plan time (the query stock Spark runs must run here too)") {
     val dir = Tables.tempRoot("graft-colagg-headroom")
     spark.range(2000).selectExpr(
       "id % 3 AS k1", "id % 5 AS k2", "id % 7 AS k3",
       "id % 2 AS k4", "CAST(id % 4 AS STRING) AS k5", "id AS v")
       .write.mode("overwrite").parquet(dir)
-    def agg(df: org.apache.spark.sql.DataFrame) = df
+    def q() = spark.read.parquet(dir)
       .groupBy("k1", "k2", "k3", "k4", "k5")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
       .orderBy("k1", "k2", "k3", "k4", "k5")
-      .collect().map(_.toString).toSeq
-    val stock = agg(spark.read.parquet(dir).repartition(3))
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq
+    val stock = rows(spark.read.parquet(dir).repartition(3)
+      .groupBy("k1", "k2", "k3", "k4", "k5")
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
+      .orderBy("k1", "k2", "k3", "k4", "k5"))
     // 5 keys → two-word pack, fieldBits=21, capacity 2^21: a 4M-row
-    // reader batch makes the per-batch id headroom unsatisfiable —
-    // packed mode must be skipped (boxed LKey path), results identical
-    val before = spark.conf
-      .getOption("spark.sql.parquet.columnarReaderBatchSize")
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize",
-      (4 * 1024 * 1024).toString)
-    try assert(agg(spark.read.parquet(dir)) === stock)
-    finally before match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", v)
-      case None =>
-        spark.conf.unset("spark.sql.parquet.columnarReaderBatchSize")
+    // reader batch leaves no per-batch id headroom, so the rule keeps the
+    // stock partial aggregate; results identical
+    withConf("spark.sql.parquet.columnarReaderBatchSize" ->
+        Some((4 * 1024 * 1024).toString)) {
+      val df = q()
+      assert(rows(df) === stock)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("GraftColumnarPartialAgg"), plan)
     }
+    assert(kernels({ val df = q(); df.collect(); df }).nonEmpty,
+      "the same shape at the default batch size runs the kernel")
   }
 
   /** Rows of `q` swapped and stock, asserting the swapped plan ran the

@@ -2,8 +2,8 @@ package graft
 
 import graft.cql.{CqlSession, CqlInvalidQueryException}
 
-/** Pins the LWT local point-read fast path (CqlSession.localPointRead) to
-  * the Spark view path it replaces: the SAME random mutation script — two
+/** Pins the LWT condition read through the driver-side partition fold
+  * (CqlSession.lwtLocalRead) to the Spark view path it replaces: the SAME random mutation script — two
   * clustering levels, partition/range/row/cell tombstones, colliding
   * USING TIMESTAMP writes, bare-marker inserts, every condition form —
   * must produce identical per-op `[applied]` outcomes and an identical
@@ -13,7 +13,7 @@ class CqlLwtFastPathSpec extends SparkSpec {
 
   private def runScript(forceSpark: Boolean): (Seq[Option[Boolean]], Seq[String], Long) = {
     val s = CqlSession(spark)
-    s.lwtForceSparkRead = forceSpark
+    s.forceSparkRead = forceSpark
     s.execute("CREATE TABLE lp (pk bigint, c1 bigint, c2 bigint, " +
       "a bigint, b text, PRIMARY KEY (pk, c1, c2))")
     val rnd = new scala.util.Random(20260813L)
@@ -53,7 +53,7 @@ class CqlLwtFastPathSpec extends SparkSpec {
     }
     val fin = s.execute("SELECT pk, c1, c2, a, b FROM lp ALLOW FILTERING")
       .orderBy("pk", "c1", "c2").collect().map(_.toString).toSeq
-    (applied.toSeq, fin, s.lwtLocalReads)
+    (applied.toSeq, fin, s.foldReads)
   }
 
   test("LWT local point read ≡ Spark view read over a random mutation script") {
@@ -65,15 +65,39 @@ class CqlLwtFastPathSpec extends SparkSpec {
     assert(finFast === finSpark)
   }
 
-  test("bulk-loaded tables fall back to the Spark read path") {
+  test("bulk-loaded tables take the partition fold, and it equals the " +
+    "forced Spark read") {
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select("o_orderkey", "o_totalprice")
-    val s = new CqlSession(spark,
-      Map("ord" -> graft.cql.CqlTable(orders, Seq("o_orderkey"))))
-    val r = s.execute(
-      "UPDATE ord SET o_totalprice = 1.5 WHERE o_orderkey = 1 IF EXISTS")
-    assert(r.collect()(0).getBoolean(0))
-    assert(s.lwtLocalReads === 0L, "fixture-backed tables are not local-only")
+    def run(forceSpark: Boolean): (Seq[Boolean], Long, Seq[String]) = {
+      val s = new CqlSession(spark,
+        Map("ord" -> graft.cql.CqlTable(orders, Seq("o_orderkey"))))
+      s.forceSparkRead = forceSpark
+      val applied = Seq(
+        "UPDATE ord SET o_totalprice = 1.5 WHERE o_orderkey = 1 IF EXISTS",
+        "UPDATE ord SET o_totalprice = 2.5 WHERE o_orderkey = 1 " +
+          "IF o_totalprice = 1.5",
+        "UPDATE ord SET o_totalprice = 9.0 WHERE o_orderkey = 2 " +
+          "IF o_totalprice < 0",
+        "INSERT INTO ord (o_orderkey, o_totalprice) VALUES (3, 1.0) " +
+          "IF NOT EXISTS",
+        "INSERT INTO ord (o_orderkey, o_totalprice) VALUES (-7, 1.0) " +
+          "IF NOT EXISTS",
+        "DELETE FROM ord WHERE o_orderkey = -8 IF EXISTS"
+      ).map(q => s.execute(q).collect()(0).getBoolean(0))
+      val folds = s.foldReads
+      val fin = s.execute("SELECT o_orderkey, o_totalprice FROM ord " +
+        "WHERE o_orderkey IN (-8, -7, 1, 2, 3)")
+        .orderBy("o_orderkey").collect().map(_.toString).toSeq
+      (applied, folds, fin)
+    }
+    val (aFold, folds, finFold) = run(forceSpark = false)
+    val (aSpark, sparkFolds, finSpark) = run(forceSpark = true)
+    assert(folds === 6L, "every LWT read of a file-backed table must fold")
+    assert(sparkFolds === 0L)
+    assert(aFold === Seq(true, true, false, false, true, false))
+    assert(aFold === aSpark)
+    assert(finFold === finSpark)
   }
 
   test("conditional writes reject client timestamps, as upstream") {

@@ -157,7 +157,7 @@ class CqlPartitionFoldSpec extends SparkSpec {
     def applied(cql: String) = s.execute(cql).collect()(0).getBoolean(0)
     assert(!applied("UPDATE pflwt SET v = 'x' WHERE pk = 1 AND c = 1 IF EXISTS"))
     assert(applied("UPDATE pflwt SET v = 'y' WHERE pk = 1 AND c = 2 IF v = 'b'"))
-    assert(s.lwtLocalReads === 2L)
+    assert(s.foldReads === 2L)
     assert(s.execute("SELECT c, v FROM pflwt WHERE pk = 1").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((2L, "y")))
   }
