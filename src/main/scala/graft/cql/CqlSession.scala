@@ -1,14 +1,14 @@
 package graft.cql
 
-import graft.operators.CassandraModel
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow,
-  Literal}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.storage.{TableState, TableStore}
+import graft.storage.TableStore.{VectorDimKey, dataCols, foldPartition,
+  foldSchema, keyCols, logField, scalarTable}
 
 /** Collection literal values (CQL `[..]`, `{..}`, `{k: v, ..}`; upstream
   * `cql3/Lists|Sets|Maps.java` [U]). */
@@ -374,78 +374,27 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   CqlSession.ensureTaskListener(spark.sparkContext)
 
-  private case class TableState(schema: StructType, partitionKeys: Seq[String],
-    clusteringKeys: Seq[String], staticKeys: Seq[String],
-    counterKeys: Seq[String], logSchema: StructType, base: DataFrame,
-    var pending: Vector[Row],
-    /** per-clustering-key DESC flag (`WITH CLUSTERING ORDER BY`) */
-    clusteringDesc: Seq[Boolean] = Nil,
-    /** table-level `default_time_to_live` (seconds), applied to writes
-      * that carry no `USING TTL` — upstream TableParams [U] */
-    defaultTtl: Option[Long] = None,
-    /** true while EVERY row of the table lives in `pending` (created in
-      * this session, never bulk-loaded/reshaped) — the precondition for
-      * serving LWT point reads driver-locally instead of via a Spark job */
-    localOnly: Boolean = false)
-
-  private def opCol(c: String) = s"_op_$c"
+  /** The storage layer: every table's log, its files and their lifetime. */
+  private[graft] val store = new TableStore(spark)
+  store.tables ++= defs.map { case (name, t) =>
+    name.toLowerCase -> store.mkState(t)
+  }
+  private def state = store.tables
 
   /** StructField for a declared column — a `vector<T, n>` dimension rides
     * in the field METADATA (`cql_vector_dim`), so it survives every
     * schema copy (reshape/ALTER) without widening TableState. */
   private def fieldFor(cd: CqlColumnDef): StructField = {
     val md = cd.vectorDim.fold(Metadata.empty)(n =>
-      new MetadataBuilder().putLong(CqlSession.VectorDimKey, n.toLong).build())
+      new MetadataBuilder().putLong(VectorDimKey, n.toLong).build())
     StructField(cd.name, cd.dataType, nullable = true, metadata = md)
   }
 
   /** The declared `vector<T, n>` dimension of a column, if any. */
   private def vectorDimOf(t: TableState, c: String): Option[Int] =
     t.schema.fields.find(_.name.equalsIgnoreCase(c))
-      .filter(_.metadata.contains(CqlSession.VectorDimKey))
-      .map(_.metadata.getLong(CqlSession.VectorDimKey).toInt)
-
-  private def mkState(t: CqlTable): TableState = {
-    val schema = t.df.schema
-    val collCols = schema.fields.collect {
-      case f if f.dataType.isInstanceOf[ArrayType] ||
-        f.dataType.isInstanceOf[MapType] ||
-        f.dataType.isInstanceOf[StructType] => f.name
-    }.toSeq
-    // collection AND counter columns carry a per-cell op marker; scalar
-    // non-key non-counter columns carry a per-cell tombstone marker
-    // (`_del_<c>`) so `DELETE col FROM …` can kill ONE cell (collections
-    // express it as a `set`-to-null op; counter deletes are not modeled)
-    val opCols = collCols ++ t.counterKeys
-    val keyset = (t.partitionKeys ++ t.clusteringKeys).map(_.toLowerCase).toSet
-    val tombCols = schema.fields.collect {
-      case f if !keyset(f.name.toLowerCase) && !opCols.contains(f.name) =>
-        f.name
-    }.toSeq
-    val logSchema = StructType(
-      schema.fields.toSeq ++
-        opCols.map(c => StructField(opCol(c), StringType)) ++
-        tombCols.map(c => StructField(s"_del_$c", BooleanType)) ++
-        Seq(StructField("_marker", BooleanType),
-          StructField("_writetime", LongType, nullable = false),
-          StructField("_ttl", LongType),
-          StructField("_deleted", BooleanType, nullable = false)))
-    val base = t.df.select(
-      schema.fieldNames.map(col).toSeq ++
-        collCols.map(c => when(col(c).isNotNull, lit("set")).as(opCol(c))) ++
-        t.counterKeys.map(c => when(col(c).isNotNull, lit("incr")).as(opCol(c))) ++
-        tombCols.map(c => lit(null).cast("boolean").as(s"_del_$c")) ++
-        Seq(lit(true).as("_marker"), // seeded rows are full rows (INSERTs)
-          lit(0L).as("_writetime"), lit(null).cast("long").as("_ttl"),
-          lit(false).as("_deleted")): _*)
-    TableState(schema, t.partitionKeys, t.clusteringKeys,
-      t.staticKeys, t.counterKeys, logSchema, base, Vector.empty)
-  }
-
-  private val state: scala.collection.mutable.Map[String, TableState] =
-    scala.collection.mutable.Map(defs.toSeq.map { case (name, t) =>
-      name.toLowerCase -> mkState(t)
-    }: _*)
+      .filter(_.metadata.contains(VectorDimKey))
+      .map(_.metadata.getLong(VectorDimKey).toInt)
 
   private var clock: Long = 1L
 
@@ -1000,137 +949,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     "fromjson", "tojson", "cast", "similarity_cosine", "similarity_euclidean",
     "similarity_dot_product")
 
-  private def dataCols(t: TableState): Seq[String] = t.schema.fieldNames.toSeq
-
-  private def keyCols(t: TableState): Seq[String] =
-    t.partitionKeys ++ t.clusteringKeys
-
-  /** The table's full log: initial data plus ONE local-rows union. */
-  private def log(t: TableState): DataFrame =
-    if (t.pending.isEmpty) t.base
-    else t.base.unionByName(spark.createDataFrame(
-      java.util.Arrays.asList(t.pending: _*), t.logSchema))
-
   /** Reconciled read view of a table's current log. `nowUs` (epoch micros)
     * enables cell-level TTL expiry for cells written `USING TTL`. */
   def view(table: String, nowUs: Option[Long] = None): DataFrame =
-    viewOf(tableState(table), nowUs)
-
-  /** Partition and range tombstones (row deletes with a null clustering
-    * SUFFIX) shadow every strictly-older cell under their prefix (upstream
-    * `DeletionTime` / `RangeTombstone` [U]). One window per prefix length
-    * k: tombstones with exactly k clustering keys set shadow within their
-    * (pk, ck1..ckk) group. Static rows (all-null clustering) sit in the
-    * null groups of k ≥ 1 windows, where no such tombstone can exist — so
-    * ONLY the k=0 (partition) tombstone shadows statics, as upstream.
-    * Clustering depth is schema-bounded (≤3 in practice), so this is a
-    * fixed, small number of same-keyed windows.
-    *
-    * The read view drops each tombstone row in its own fold (wt > wt is
-    * false), so downstream reconciles see only surviving cells; the row
-    * reconcile handles a no-clustering table's row deletes itself.
-    * Compaction (`keepTombstones`) retains the tombstone rows and also runs
-    * the k=0 window on a no-clustering table, so partition tombstones
-    * shadow there too. */
-  private def prefixShadowed(t: TableState, lg: DataFrame,
-      keepTombstones: Boolean): DataFrame = {
-    val depth =
-      if (keepTombstones) math.max(t.clusteringKeys.size, 1)
-      else t.clusteringKeys.size
-    (0 until depth).foldLeft(lg) { (cur, k) =>
-      val setCks = t.clusteringKeys.take(k)
-      val nullCks = t.clusteringKeys.drop(k)
-      val isTomb = (col("_deleted") +: (
-        setCks.map(col(_).isNotNull) ++ nullCks.map(col(_).isNull)))
-        .reduce(_ && _)
-      val w = Window.partitionBy((t.partitionKeys ++ setCks).map(col): _*)
-      val wt = max(when(isTomb, col("_writetime"))).over(w)
-      val unshadowed =
-        if (keepTombstones) col("_deleted") || col("_rt_wt").isNull
-        else col("_rt_wt").isNull
-      cur.withColumn("_rt_wt", wt)
-        .filter(unshadowed || col("_writetime") > col("_rt_wt"))
-        .drop("_rt_wt")
-    }
-  }
-
-  private def viewOf(t: TableState, nowUs: Option[Long] = None): DataFrame = {
-    val lg = prefixShadowed(t, log(t), keepTombstones = false)
-    val regular = regularCols(t)
-    if (t.staticKeys.isEmpty)
-      CassandraModel.reconcileView(lg, keyCols(t), regular, nowUs)
-    else {
-      // Regular cells resolve per (pk, ck); static cells per pk across the
-      // whole partition — and row tombstones do NOT shadow them (upstream:
-      // a row delete is not a partition delete [U db/rows/Row.java]).
-      val regLog =
-        if (t.clusteringKeys.isEmpty) lg
-        else lg.filter(t.clusteringKeys.map(col(_).isNotNull).reduce(_ && _))
-      val reg = CassandraModel.reconcileView(regLog, keyCols(t), regular, nowUs)
-      val st = CassandraModel.reconcileView(
-          lg.filter(!col("_deleted")), t.partitionKeys, t.staticKeys, nowUs)
-        .drop("_writetime")
-      // FULL outer: a partition whose rows are all gone but whose static
-      // cell lives still answers with one "phantom" row of null clustering
-      // and regular columns (upstream static-row semantics)
-      reg.join(st, t.partitionKeys, "full")
-    }
-  }
-
-  /** The surviving subset of a table's op-log under latest-wins — the
-    * session's major-compaction kernel [U db/compaction/CompactionTask]:
-    *
-    *  - rows strictly older than a covering partition/range tombstone die
-    *    (the same prefix-shadow fold the read path applies), tombstone
-    *    rows themselves are RETAINED — a retained tombstone still shadows
-    *    a late-arriving older write, exactly why upstream keeps them
-    *    through gc_grace (the session never purges; the grace-purge
-    *    decision is the c11/c12 operator surface);
-    *  - a data row is retained iff it still CONTRIBUTES: some scalar cell
-    *    or the INSERT row-marker of it is the newest no-TTL-shadowed
-    *    event of that channel for its key (ties retained — at equal
-    *    writetimes reconcile breaks ties by value/delete, so both sides
-    *    stay), or it carries any collection/counter op (those fold
-    *    order-dependently and are never dropped);
-    *  - a channel event younger than every no-TTL event survives even
-    *    when currently shadowed by a TTL'd write: when that write
-    *    expires, the read view falls back to it.
-    *
-    * Reconciling the surviving subset equals reconciling the full log
-    * for every SELECT / writetime() / ttl() at every future `nowUs`
-    * (CqlCompactionSpec pins this over random mutation scripts). */
-  private def compactedLog(t: TableState, lg0: DataFrame): DataFrame = {
-    val folded = prefixShadowed(t, lg0, keepTombstones = true)
-    val fields = t.logSchema.fieldNames.toSeq
-    val opColumns = fields.filter(_.startsWith("_op_"))
-    def chan(event: Column, wkeys: Seq[String]): Column = {
-      val w = Window.partitionBy(wkeys.map(col): _*)
-      // only a NO-TTL event permanently shadows: a TTL'd winner expires
-      // and the next-newest cell resurfaces at read time
-      val killWt = max(when(event && col("_ttl").isNull,
-        col("_writetime"))).over(w)
-      event && (killWt.isNull || col("_writetime") >= killWt)
-    }
-    def cellEvent(c: String): Column = {
-      val del =
-        if (fields.contains(s"_del_$c")) coalesce(col(s"_del_$c"), lit(false))
-        else lit(false)
-      col(c).isNotNull || del
-    }
-    val regulars = dataCols(t)
-      .filterNot(c => keyCols(t).contains(c) || t.staticKeys.contains(c))
-      .filterNot(c => opColumns.contains(opCol(c)))
-    val statics = t.staticKeys.filterNot(c => opColumns.contains(opCol(c)))
-    val keeps =
-      Seq(col("_deleted"),
-        chan(coalesce(col("_marker"), lit(false)), keyCols(t))) ++
-        opColumns.map(oc => col(oc).isNotNull) ++
-        regulars.map(c => chan(cellEvent(c), keyCols(t))) ++
-        statics.map(c => chan(cellEvent(c), t.partitionKeys))
-    // window expressions must materialize before the filter sees them
-    folded.withColumn("_keep", keeps.reduce(_ || _))
-      .filter(col("_keep")).select(fields.map(col): _*)
-  }
+    store.viewOf(tableState(table), nowUs)
 
   /** cqlsh `SOURCE` analogue: run a multi-statement CQL script (statements
     * separated by `;`, `--` line comments, `BEGIN BATCH … APPLY BATCH`
@@ -1142,7 +964,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   // compiles every MV definition — O(tables + views) analysis work. Cache
   // it per mutation epoch so statement N+1 reuses statement N's engine
   // unless something was actually written.
-  private var mutationEpoch = 0L
   private var engineCache: Option[(Long, CqlEngine)] = None
 
   /** The read engine over the current session state — exposes the
@@ -1171,7 +992,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
 
   private[graft] def sparkSession: SparkSession = spark
   private[graft] def userKeyspaceName: String = UserKeyspace
-  private[graft] def snapshotRootDir: String = snapshotRoot
 
   /** Does the keyspace hold ANY schema object (table, view, type,
     * function, aggregate)? The catalog's non-cascade drop guard — a
@@ -1211,14 +1031,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private[graft] def cqlTypeNameOf(dt: DataType): String =
     cqlTypeName(dt, Set.empty)
 
-  /** Per-epoch parquet snapshot of a table's reconciled read view — the
-    * flush/SSTable analogue the Spark catalog serves. Rewritten only when
-    * the mutation epoch moved; the epoch is part of the directory name so
-    * Spark-side file-index caches never see a mutated directory. */
-  private val snapshotCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, String, StructType)]()
-  private lazy val snapshotRoot =
-    CqlSession.tempRoot("graft-catalog")
+  /** The catalog's read of `table`: the per-epoch parquet snapshot of its
+    * reconciled view ([[TableStore.writeSnapshot]]) in this reader's
+    * rendering, after the same read enforcement as a CQL SELECT. */
   private[graft] def catalogSnapshot(table: String): (String, StructType) = {
     val key = table.toLowerCase
     // the runtime virtual tables (settings/clients) change without a
@@ -1239,57 +1054,41 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     val tableMasks = masksFor(key)
     val maskedView = tableMasks.nonEmpty &&
       !hasPermBool("unmask", authRes(key))
-    val cacheKey = if (maskedView) s"$key#masked" else key
-    val cur = snapshotCache.get(cacheKey)
-    if (!volatileKey && cur != null && cur._1 == mutationEpoch) {
-      checkRead(key) // a cache hit must not skip enforcement
-      (cur._2, cur._3)
-    } else {
-      if (volatileKey) {
-        engineCache = None // rebuild → live conf/role rows
-        // volatile snapshots are single-read: reap the previous dir so a
-        // polling client doesn't accumulate one dir per read
-        if (cur != null)
-          try {
-            import scala.reflect.io.Directory
-            new Directory(new java.io.File(cur._2)).deleteRecursively()
-          } catch { case _: Exception => () }
-      }
-      val t = engineCatalog.getOrElse(key,
-        throw new CqlInvalidQueryException(s"unknown table $table"))
-      // catalog reads carry the session's authenticated role: same SELECT
-      // enforcement (and system-keyspace carve-out) as the CQL text path —
-      // the DSv2 bridge must not be a side door around checkPerm. After
-      // the existence check, so an unknown table still maps to
-      // NoSuchTableException in the catalog.
-      checkRead(key)
-      val visible = t.df.columns.filterNot(_.startsWith("_")).toSeq
-      val clear = t.df.select(visible.map(col): _*)
-      val df =
-        if (!maskedView) clear
-        else clear.select(clear.schema.fields.toSeq.map { f =>
-          tableMasks.get(f.name.toLowerCase) match {
-            case Some(m) => maskedValue(m, col(s"`${f.name}`"), f.dataType)
-              .as(f.name)
-            case None => col(s"`${f.name}`")
-          }
-        }: _*)
-      val epochDir =
-        if (volatileKey) s"${mutationEpoch}_${System.nanoTime()}"
-        else mutationEpoch.toString
-      val renderDir = key.replace('.', '_') + (if (maskedView) "_masked" else "")
-      val dir = s"$snapshotRoot/$renderDir/$epochDir"
-      df.write.mode("overwrite").parquet(dir)
-      snapshotCache.put(cacheKey, (mutationEpoch, dir, df.schema))
-      (dir, df.schema)
+    val rendering = if (maskedView) "masked" else "clear"
+    store.cachedSnapshot(key, rendering).filter(_ => !volatileKey) match {
+      case Some(hit) =>
+        checkRead(key) // a cache hit must not skip enforcement
+        hit
+      case None =>
+        if (volatileKey) engineCache = None // rebuild → live conf/role rows
+        val t = engineCatalog.getOrElse(key,
+          throw new CqlInvalidQueryException(s"unknown table $table"))
+        // catalog reads carry the session's authenticated role: same
+        // SELECT enforcement (and system-keyspace carve-out) as the CQL
+        // text path — the DSv2 bridge must not be a side door around
+        // checkPerm. After the existence check, so an unknown table still
+        // maps to NoSuchTableException in the catalog.
+        checkRead(key)
+        val visible = t.df.columns.filterNot(_.startsWith("_")).toSeq
+        val clear = t.df.select(visible.map(col): _*)
+        val df =
+          if (!maskedView) clear
+          else clear.select(clear.schema.fields.toSeq.map { f =>
+            tableMasks.get(f.name.toLowerCase) match {
+              case Some(m) => maskedValue(m, col(s"`${f.name}`"), f.dataType)
+                .as(f.name)
+              case None => col(s"`${f.name}`")
+            }
+          }: _*)
+        store.writeSnapshot(key, rendering, volatileKey, df)
     }
   }
 
   private def engine: CqlEngine = engineCache match {
-    case Some((e, eng)) if e == mutationEpoch => eng
+    case Some((e, eng)) if e == store.epoch => eng
     case _ =>
       val eng = buildEngine
-      engineCache = Some((mutationEpoch, eng))
+      engineCache = Some((store.epoch, eng))
       eng
   }
 
@@ -1325,7 +1124,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       // at 100 TB. A file-backed table's partition reads fold on the
       // driver instead; its table-wide reads re-run the Spark fold.
       name -> CqlTable(
-        if (t.localOnly) viewOf(t).localCheckpoint(false) else viewOf(t),
+        if (t.localOnly) store.viewOf(t).localCheckpoint(false)
+        else store.viewOf(t),
         t.partitionKeys, t.clusteringKeys,
         t.staticKeys, t.counterKeys, indexed, t.clusteringDesc,
         annSimilarity = annSimReg.collect {
@@ -1477,11 +1277,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     // a declared vector renders back as vector<elem, n> (r9 — the
     // set→list style canonicalization no longer applies to vectors, the
     // dimension is tracked and DESCRIBE round-trips the real type)
-    else if (f.metadata.contains(CqlSession.VectorDimKey))
+    else if (f.metadata.contains(VectorDimKey))
       (f.dataType match {
         case ArrayType(e, _) =>
           s"vector<${cqlTypeName(e, Set.empty)}, " +
-            s"${f.metadata.getLong(CqlSession.VectorDimKey)}>"
+            s"${f.metadata.getLong(VectorDimKey)}>"
         case _ => cqlTypeName(f.dataType, Set.empty)
       })
     else cqlTypeName(f.dataType,
@@ -1512,7 +1312,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         }.mkString(", ") + ")")
       else Nil) ++
         t.defaultTtl.map(n => s"default_time_to_live = $n") ++
-        (if (cdcEnabled.contains(name.toLowerCase)) Seq("cdc = true")
+        (if (store.cdcTables.contains(name.toLowerCase)) Seq("cdc = true")
          else Nil)
     val withClause =
       if (withParts.isEmpty) "" else withParts.mkString(" WITH ", " AND ", "")
@@ -1808,16 +1608,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("name", StringType),
       StructField("entry_count", LongType),
       StructField("size_bytes", LongType)))
-    val snapBytes = snapshotCache.values().asScala.map { case (_, dir, _) =>
-      // listFiles() is null if the dir vanished (the volatile-snapshot
-      // reaper may have deleted it between reads) — treat as empty
-      Option(new java.io.File(dir).listFiles())
-        .map(_.map(_.length()).sum).getOrElse(0L)
-    }.sum
+    val (snapCount, snapBytes) = store.snapshotStats
     val caRows = Seq(
-      Row("catalog_snapshots", snapshotCache.size().toLong, snapBytes),
+      Row("catalog_snapshots", snapCount, snapBytes),
       Row("engine_plan_cache",
-        engineCache.count(_._1 == mutationEpoch).toLong, 0L))
+        engineCache.count(_._1 == store.epoch).toLong, 0L))
     // `audit_log` [U audit/AuditLogManager]: role-attributed per-statement
     // records (category, success, error class), ring-buffered; `queries`
     // [U db/virtual/QueriesTable]: the LIVE in-flight statements — a
@@ -1840,69 +1635,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       case (tid, (stmt, role, t0)) =>
         Row(tid, role, (nowNs - t0) / 1000L, stmt)
     }
-    // `sstable_tasks` [U db/virtual/SSTableTasksTable]: the ACTIVE
-    // compaction tasks (empty at rest, as upstream); unit = log rows
-    val sstSchema = StructType(Seq(
-      StructField("keyspace_name", StringType),
-      StructField("table_name", StringType),
-      StructField("task_id", LongType),
-      StructField("kind", StringType),
-      StructField("progress", LongType),
-      StructField("total", LongType),
-      StructField("unit", StringType)))
-    val sstRows = compactionTasks.asScala.toSeq.sortBy(_._1).map {
-      case (id, (ks, tbl, kind, total)) =>
-        Row(ks, tbl, id, kind, 0L, total, "rows")
-    }
-    // `snapshots` [U db/virtual/SnapshotsTable, 4.1]: created_at is the
-    // session clock (deterministic), sizes are real on-disk bytes
-    val snapSchema = StructType(Seq(
-      StructField("name", StringType),
-      StructField("keyspace_name", StringType),
-      StructField("table_name", StringType),
-      StructField("created_at", LongType),
-      StructField("true_size", LongType),
-      StructField("ephemeral", BooleanType)))
-    val snapRows = snapshotsReg.toSeq.sortBy(_._1).map {
-      case ((n, _), (ks, tbl, at, size)) =>
-        Row(n, ks, tbl, at, size, false)
-    }
-    // `disk_usage` [U db/virtual/TableMetricTables, 4.1]: REAL on-disk
-    // bytes of each table's materialized segments — the compacted base
-    // (the sstable analogue) plus its snapshots — and the driver-held
-    // pending row count (the memtable analogue). Tables never compacted
-    // or snapshotted report 0 bytes, honestly: their log is a lazy plan.
-    val duSchema = StructType(Seq(
-      StructField("keyspace_name", StringType),
-      StructField("table_name", StringType),
-      StructField("base_bytes", LongType),
-      StructField("snapshot_bytes", LongType),
-      StructField("memtable_rows", LongType)))
-    val duRows = state.toSeq.sortBy(_._1).map { case (k, t) =>
-      val snapBytesT = snapshotsReg.collect {
-        case ((_, key), (_, _, _, sz)) if key == k => sz
-      }.sum
-      Row(keyspaceOf(k), tableOf(k),
-        compactedDirs.get(k).map(dirBytes).getOrElse(0L),
-        snapBytesT, t.pending.size.toLong)
-    }
-    // `cdc` — per cdc-enabled table disk accounting (the disk_usage
-    // pattern over cdc_raw): live segment bytes on disk vs cumulative
-    // bytes consumers have REAPed. The pair is what an operator watches
-    // against cdc_total_space before writes start rejecting.
-    val cdcSchema = StructType(Seq(
-      StructField("keyspace_name", StringType),
-      StructField("table_name", StringType),
-      StructField("raw_bytes", LongType),
-      StructField("reaped_bytes", LongType)))
-    val cdcRows = cdcEnabled.toSeq.sorted.map { k =>
-      Row(keyspaceOf(k), tableOf(k), dirBytes(cdcDirOf(k)),
-        cdcReapedBytes.getOrElse(k, 0L))
-    }
     Map(
-      "system_views.cdc" -> CqlTable(
-        spark.createDataFrame(cdcRows.asJava, cdcSchema),
-        Seq("keyspace_name"), Seq("table_name")),
       "system_views.settings" -> CqlTable(
         spark.createDataFrame(setRows.asJava, setSchema), Seq("name")),
       "system_views.clients" -> CqlTable(
@@ -1916,16 +1649,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         spark.createDataFrame(auditRows.toSeq.asJava, auSchema),
         Seq("seq")),
       "system_views.queries" -> CqlTable(
-        spark.createDataFrame(qRows.asJava, qSchema), Seq("thread_id")),
-      "system_views.sstable_tasks" -> CqlTable(
-        spark.createDataFrame(sstRows.asJava, sstSchema),
-        Seq("keyspace_name"), Seq("table_name", "task_id")),
-      "system_views.snapshots" -> CqlTable(
-        spark.createDataFrame(snapRows.asJava, snapSchema),
-        Seq("name"), Seq("keyspace_name", "table_name")),
-      "system_views.disk_usage" -> CqlTable(
-        spark.createDataFrame(duRows.asJava, duSchema),
-        Seq("keyspace_name"), Seq("table_name")))
+        spark.createDataFrame(qRows.asJava, qSchema), Seq("thread_id"))) ++
+      store.storageViews(k => (keyspaceOf(k), tableOf(k)))
   }
 
   /** `system_traces.{sessions,events}` — the coordinator trace rows
@@ -1986,17 +1711,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("rack", StringType),
       StructField("release_version", StringType)))
     // `compaction_history` [U db/SystemKeyspace.compaction_history]:
-    // completed compactions, ring-bounded; compacted_at is the session
-    // clock, bytes_in/out are LOG ROW counts (deviation: the session's
-    // sstable analogue is row-granular), rows_merged the fold histogram
-    val chSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("keyspace_name", StringType),
-      StructField("columnfamily_name", StringType),
-      StructField("compacted_at", LongType),
-      StructField("bytes_in", LongType),
-      StructField("bytes_out", LongType),
-      StructField("rows_merged", MapType(IntegerType, LongType))))
     val psSchema = StructType(Seq(
       StructField("prepared_id", StringType),
       StructField("logged_keyspace", StringType),
@@ -2010,9 +1724,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       "system.prepared_statements" ->
         CqlTable(spark.createDataFrame(psRows.asJava, psSchema),
           Seq("prepared_id")),
-      "system.compaction_history" ->
-        CqlTable(spark.createDataFrame(
-          compactionHistory.toSeq.asJava, chSchema), Seq("id")),
       "system.peers" ->
         CqlTable(spark.createDataFrame(
           Seq.empty[Row].asJava, pSchema), Seq("peer"))) ++ sizeEstimates
@@ -2035,42 +1746,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private var wantSizeEstimates = false
 
   private def sizeEstimates: Map[String, CqlTable] = {
-    val sSchema = StructType(Seq(
-      StructField("keyspace_name", StringType),
-      StructField("table_name", StringType),
-      StructField("range_start", StringType),
-      StructField("range_end", StringType),
-      StructField("mean_partition_size", LongType),
-      StructField("partitions_count", LongType)))
-    import org.apache.spark.sql.functions._
-    val ring = Long.MinValue.toString
-    if (!wantSizeEstimates)
-      // placeholder rows are never served: every size_estimates read path
-      // (text, prepared, Spark catalog) sets the flag and rebuilds first
-      return Map("system.size_estimates" -> CqlTable(
-        spark.createDataFrame(new java.util.ArrayList[Row](), sSchema),
-        Seq("keyspace_name"), Seq("table_name", "range_start", "range_end")))
+    val want = wantSizeEstimates
     wantSizeEstimates = false
-    val perTable = state.toSeq.sortBy(_._1).map { case (n, t) =>
-      val v = view(n)
-      val bytes = BigInt(v.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong)
-      v.agg(count_distinct(
-          struct(t.partitionKeys.map(col): _*)).as("pc"))
-        .select(lit(keyspaceOf(n)).as("keyspace_name"),
-          lit(tableOf(n)).as("table_name"),
-          lit(ring).as("range_start"), lit(ring).as("range_end"),
-          when(col("pc") > 0, lit(bytes.toLong) / col("pc"))
-            .otherwise(0L).cast(LongType).as("mean_partition_size"),
-          col("pc").cast(LongType).as("partitions_count"))
-    }
-    val df0 =
-      if (perTable.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](), sSchema)
-      else perTable.reduce(_ unionByName _)
-    Map("system.size_estimates" -> CqlTable(df0, Seq("keyspace_name"),
-      Seq("table_name", "range_start", "range_end")))
+    store.sizeEstimates(k => (keyspaceOf(k), tableOf(k)), want)
   }
 
   /** cqlsh `COPY TO/FROM` as a statement — upstream it is a client-side
@@ -2140,130 +1818,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         else col(f.name)
       }: _*)
       val n = df.count()
-      bulkAppendLog(cp.table, df, "COPY FROM")
+      store.bulkLoad(cp.table.toLowerCase, t, df, nextTs(None), "COPY FROM")
       countResult(n)
     }
   }
 
-  /** Bulk-append `df` — already validated to be a subset of the table's
-    * data columns including the full primary key — to the table's upsert
-    * log under ONE fresh server-side writetime. One lazy union, never
-    * per-row inserts (the plan stays flat regardless of load size). Shared
-    * by cqlsh `COPY FROM` and the Spark-catalog `INSERT INTO` bridge
-    * ([[catalogAppend]]): both are the bulk-load surface, which upstream
-    * also stamps with a single mutation timestamp per batch
-    * [U pylib/cqlshlib/copyutil.py]. The materialized load commits through
-    * [[commitLogFiles]] (`surface` names the verb in its errors;
-    * `beforeCommit` is the catalog's INSERT OVERWRITE truncate). */
-  private def bulkAppendLog(table: String, df: DataFrame, surface: String,
-      beforeCommit: () => Unit = () => ()): Unit = {
-    val t = tableState(table)
-    val ts = nextTs(None)
-    val shaped0 = df.select(t.logSchema.fields.toSeq.map { f =>
-      val n0 = f.name
-      if (df.columns.exists(_.equalsIgnoreCase(n0)))
-        col(df.columns.find(_.equalsIgnoreCase(n0)).get)
-          .cast(f.dataType).as(n0)
-      else if (n0.startsWith("_op_")) {
-        val src = n0.stripPrefix("_op_")
-        if (df.columns.exists(_.equalsIgnoreCase(src)))
-          when(col(src).isNotNull, lit("set")).as(n0)
-        else lit(null).cast(StringType).as(n0)
-      }
-      else if (n0 == "_marker") lit(true).as(n0)
-      else if (n0 == "_writetime") lit(ts).as(n0)
-      else if (n0 == "_ttl")
-        t.defaultTtl.map(v => lit(v)).getOrElse(lit(null))
-          .cast(LongType).as(n0)
-      else if (n0 == "_deleted") lit(false).as(n0)
-      else lit(null).cast(f.dataType).as(n0)
-    }: _*)
-    // MATERIALIZE the load before appending (the memtable-flush moment):
-    // a lazy union would re-execute the source plan on every later read —
-    // wrong for a non-deterministic insert query (rand() keys would change
-    // between reads) and fragile for a source file later deleted. One
-    // distributed parquet write, then the log references immutable bytes.
-    val dir = s"$bulkLoadRoot/${table.toLowerCase}/$ts"
-    shaped0.write.mode("overwrite").parquet(dir)
-    commitLogFiles(table.toLowerCase, spark.read.schema(t.logSchema)
-      .parquet(dir), surface, "bulk load", beforeCommit)
-  }
-
-  /** The one log commit of bulk loads ([[bulkAppendLog]]) and catalog
-    * deltas ([[catalogApplyDeltaStaged]]): `rows` reads materialized
-    * log-schema parquet files under the statement's timestamps. Every
-    * check runs against the exact bytes that become the log — not a
-    * re-execution of a possibly non-deterministic source — and fails
-    * BEFORE any visible state change: the row checks ([[checkLogRows]]),
-    * then the CDC space bound. `beforeCommit` (a destructive prelude:
-    * INSERT OVERWRITE's truncate) runs only once the replacement data
-    * exists and has passed them.
-    *
-    * A CDC table gets its segment BEFORE the state swap (per-row parity: a
-    * statement never commits state without its CDC durability —
-    * withPendingRollback rolls the per-row path back when emission fails;
-    * here the lesser evil on a mid-write crash is a phantom segment, the
-    * same exposure upstream's commitlog-first ordering has). The files
-    * already ARE log-schema parquet, so the emission is a FILE-LEVEL copy
-    * of `rows.inputFiles`: one cdc file per load part file or delta
-    * segment under one shared `_writetime`, with the write's own
-    * parallelism and no re-serialization job. Every CDC contract is
-    * file-granular already: cdcStream's file source reads the files in
-    * order with _writetime totally ordering rows, cdcReap deletes by file
-    * mtime, and the system_views.cdc accounting is dirBytes, not a file
-    * count. Hadoop FS API: the source and cdc dirs may be shared
-    * filesystems on a cluster. Driver memory is O(files), never O(rows). */
-  private def commitLogFiles(key: String, rows: DataFrame,
-      surface: String, carrier: String,
-      beforeCommit: () => Unit = () => ()): Unit = {
-    checkLogRows(tableState(key), rows, surface, carrier)
-    val cdc = cdcEnabled.contains(key)
-    if (cdc) cdcGuardSpace(key)
-    mutationEpoch += 1
-    if (cdc) {
-      val hconf = org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)
-      val dstDir = new org.apache.hadoop.fs.Path(cdcDirOf(key))
-      val dstFs = dstDir.getFileSystem(hconf)
-      dstFs.mkdirs(dstDir)
-      rows.inputFiles.zipWithIndex.foreach { case (p, i) =>
-        val src = new org.apache.hadoop.fs.Path(p)
-        org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(hconf), src,
-          dstFs, new org.apache.hadoop.fs.Path(dstDir,
-            s"commit-$mutationEpoch-$i.parquet"),
-          false, hconf)
-      }
-    }
-    beforeCommit()
-    // re-read the state: beforeCommit may have truncated (INSERT OVERWRITE)
-    val t = tableState(key)
-    state(key) = t.copy(base = log(t).unionByName(rows),
-      pending = Vector.empty, localOnly = false)
-  }
-
-  private lazy val bulkLoadRoot =
-    CqlSession.tempRoot("graft-bulkload")
-
-  /** The row checks of every bulk and delta commit, run on the
-    * MATERIALIZED log rows before any state change: no null primary key
-    * (the COPY FROM contract), and declared vector<T, n> dimensions hold
-    * — the same invariant as cellFor's per-cell check. `surface` and
-    * `carrier` name the statement in the errors. */
-  private def checkLogRows(t: TableState, rows: DataFrame, surface: String,
-      carrier: String): Unit = {
-    if (!rows.filter(keyCols(t).map(col(_).isNull).reduce(_ || _)).isEmpty)
-      throw new CqlInvalidQueryException(
-        s"$surface: a row carries a null primary key value")
-    t.schema.fields.foreach { f =>
-      if (f.metadata.contains(CqlSession.VectorDimKey)) {
-        val dim = f.metadata.getLong(CqlSession.VectorDimKey).toInt
-        if (!rows.filter(col(f.name).isNotNull &&
-            size(col(f.name)) =!= dim).isEmpty)
-          throw new CqlInvalidQueryException(
-            s"Invalid vector value for ${f.name}: expected $dim elements " +
-              s"($carrier carries a wrong-dimension vector)")
-      }
-    }
-  }
 
   /** DSv2 write bridge: `INSERT INTO` / `INSERT OVERWRITE` against a
     * [[graft.spark.GraftCatalog]] table routes HERE, not to a parquet
@@ -2297,11 +1856,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           s"INSERT through the Spark catalog requires primary key column $k")
     }
     // Null-key validation and the overwrite truncate both run inside
-    // bulkAppendLog — i.e. against the MATERIALIZED load, after its
+    // the store's bulk load — i.e. against the MATERIALIZED load, after its
     // parquet write succeeded: a non-deterministic source cannot validate
     // clean yet materialize null keys, and a failed write can no longer
     // leave an INSERT OVERWRITE target truncated-but-empty.
-    bulkAppendLog(key, df, "catalog INSERT",
+    store.bulkLoad(key, t, df, nextTs(None), "catalog INSERT",
       beforeCommit = () => if (overwrite) truncateState(key))
   }
 
@@ -2337,7 +1896,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * HERE as upserts + row tombstones under ONE coordinator timestamp
     * (runDml's multi-key rule: a statement is one mutation batch).
     * This is the TRIGGER-TABLE apply path ([[catalogApplyDeltaStaged]]
-    * routes every other delta to [[commitLogFiles]]): a trigger's
+    * routes every other delta to [[TableStore.commitLogFiles]]): a trigger's
     * `augment` is per-mutation by contract, so every mutation replays
     * through `applyDml` — MODIFY enforcement, key validation, guardrails,
     * triggers, CDC and the reconcile fold hold exactly as for CQL DML, and
@@ -2359,7 +1918,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private def catalogApplyDelta(key: String,
       dataCols: Seq[String], idCols: Seq[String],
       upserts: Seq[Seq[Any]], deletes: Seq[Seq[Any]]): Unit =
-    withPendingRollback {
+    store.withPendingRollback {
       // a delete whose key is ALSO upserted in this delta is a key-move
       // chain (UPDATE SET k = k + 1 moves row 1→2 while row 2 moves 3:
       // delete(2) refers to the PRE-state row that upsert(2) fully
@@ -2391,92 +1950,13 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       ()
     }
 
-  /** One unique staging prefix for a DSv2 delta write's executor-spilled
-    * parquet segments. Local temp by default; on a real cluster
-    * `spark.graft.catalog.deltaStagingDir` must point at a shared
-    * filesystem (the same requirement every DSv2 commit protocol's
-    * staging area has). */
-  private[graft] def newDeltaStagingDir(table: String): String = {
-    val root = spark.conf.getOption("spark.graft.catalog.deltaStagingDir")
-      .getOrElse(deltaStagingRoot)
-    // resolve through the Hadoop FS API with the SESSION's conf (r14,
-    // advisor): java.io.File.getAbsolutePath mangles URI-style roots
-    // (hdfs://, s3a://) into bogus local paths, and a bare Configuration
-    // would drop spark.hadoop.* FS settings/credentials — the staging
-    // prefix must be creatable on the shared filesystem the conf names
-    val hconf = org.apache.spark.sql.GraftShim.sessionHadoopConf(spark)
-    val dir = new org.apache.hadoop.fs.Path(
-      s"$root/${table.toLowerCase.replace('.', '_')}-" +
-        java.util.UUID.randomUUID().toString)
-    val fs = dir.getFileSystem(hconf)
-    fs.mkdirs(dir)
-    fs.makeQualified(dir).toString
-  }
-  private lazy val deltaStagingRoot = CqlSession.tempRoot("graft-delta")
-
-  /** Compile the writer-side shaping plan for a DSv2 delta write (r18
-    * single-write — guide §5/§6 "write once": the executor spill becomes
-    * the fold's materialization, so no distributed MERGE/UPDATE/DELETE
-    * runs a commit-side delta-sized read+shape+rewrite job). The writer
-    * copies Catalyst values VERBATIM, with no cast machinery, so every
-    * mapped data/id column's type must equal its log-schema field's type.
-    * The rewrite projects the table's own columns, so that parity holds
-    * for every table shape; a miss is an engine bug and fails loudly.
-    *
-    * Allocates the statement's two coordinator timestamps HERE, on the
-    * driver, before the job: deletes commit at `tsDel`, upserts at
-    * `tsUp = tsDel + 1`. That order is the key-move collision rule (r18 —
-    * it replaced the r17 count-based anti-join elision, which was UNSOUND
-    * for MERGE with a non-key-equality ON condition: a NOT-MATCHED source
-    * row can INSERT a key that a MATCHED / NOT-MATCHED-BY-SOURCE branch
-    * simultaneously DELETEs with zero key-moving UPDATEs, and at one
-    * shared timestamp the tombstone wins the tie and silently erases the
-    * inserted row — advisor find). The statement's semantics — a delete
-    * whose key is also upserted is redundant against the complete
-    * post-image (the per-row path's `effDeletes` filter) — hold by
-    * TIMESTAMP ORDER instead of a join: the reconcile's strict writetime
-    * comparison resolves every same-statement delete/upsert key collision
-    * toward the upsert, with NO collision-set computation at any delta
-    * size. Deletes at tsDel still shadow every pre-statement write
-    * (tsDel > all prior timestamps), and the visible cells of one
-    * statement still carry ONE writetime — tombstoned rows answer no
-    * WRITETIME query. */
+  /** The writer-side shaping plan of a DSv2 delta write on `table`
+    * ([[TableStore.deltaShapePlan]]), stamped with the statement's two
+    * coordinator timestamps from the session clock. */
   private[graft] def deltaShapePlan(table: String, dataSchema: StructType,
-      idSchema: StructType): graft.spark.GraftDeltaShapePlan = {
-    val t = tableState(table)
-    val dataSet = dataSchema.fieldNames.map(_.toLowerCase).toSet
-    def dataIdx(n: String): Int =
-      dataSchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-    def idIdx(n: String): Int =
-      idSchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-    for (f <- t.logSchema.fields;
-         (sch, i) <- Seq(dataSchema -> dataIdx(f.name),
-           idSchema -> idIdx(f.name))
-         if i >= 0 && sch(i).dataType != f.dataType)
-      throw new IllegalStateException(
-        s"delta write on $table: column ${f.name} arrives as " +
-          s"${sch(i).dataType.catalogString} but the log stores " +
-          s"${f.dataType.catalogString}")
-    val fields = t.logSchema.fields.map { f =>
-      val n0 = f.name
-      if (n0 == "_marker") graft.spark.GraftDeltaFieldSpec(3, -1, -1)
-      else if (n0 == "_writetime") graft.spark.GraftDeltaFieldSpec(4, -1, -1)
-      else if (n0 == "_ttl") graft.spark.GraftDeltaFieldSpec(5, -1, -1)
-      else if (n0 == "_deleted") graft.spark.GraftDeltaFieldSpec(6, -1, -1)
-      else if (n0.startsWith("_op_")) {
-        val src = n0.stripPrefix("_op_")
-        graft.spark.GraftDeltaFieldSpec(1,
-          if (dataSet(src.toLowerCase)) 0 else -1, -1)
-      } else if (n0.startsWith("_del_")) {
-        val src = n0.stripPrefix("_del_")
-        graft.spark.GraftDeltaFieldSpec(2, dataIdx(src), -1)
-      } else graft.spark.GraftDeltaFieldSpec(0, dataIdx(n0), idIdx(n0))
-    }
-    val tsDel = nextTs(None)
-    val tsUp = nextTs(None)
-    graft.spark.GraftDeltaShapePlan(t.logSchema, fields, tsDel, tsUp,
-      t.defaultTtl)
-  }
+      idSchema: StructType): graft.spark.GraftDeltaShapePlan =
+    store.deltaShapePlan(table, tableState(table), dataSchema, idSchema,
+      () => nextTs(None))
 
   /** A catalog DELETE or delta may only target a base table outside the
     * system keyspaces. */
@@ -2525,7 +2005,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * row tombstones (`_deleted`) under the statement's two timestamps.
     * The apply path is decided by triggers alone: a table without
     * triggers commits the segments themselves as log bytes
-    * ([[commitLogFiles]]), whatever the delta's size; a table with
+    * ([[TableStore.commitLogFiles]]), whatever the delta's size; a table with
     * triggers replays per-row ([[catalogApplyDelta]]) so `augment` sees
     * every mutation. */
   private[graft] def catalogApplyDeltaStaged(table: String,
@@ -2540,13 +2020,13 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     val triggers = triggerReg.keys.collect { case (`key`, n) => n }.toSeq
     val seg = spark.read.schema(tableState(key).logSchema)
       .parquet(segments: _*)
-    // segments committed by commitLogFiles become the table's LIVE log
+    // segments committed by the store become the table's LIVE log
     // bytes (the single-write point) — every other outcome leaves them
     // dead and they are reaped in the finally
     var segmentsLive = false
     try {
       if (triggers.isEmpty) {
-        commitLogFiles(key, seg, "catalog MERGE/UPDATE", "delta")
+        store.commitLogFiles(key, seg, "catalog MERGE/UPDATE", "delta")
         segmentsLive = true
       } else {
         // trigger replay is per-mutation, so it collects the delta to the
@@ -2573,62 +2053,20 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     } finally
       // unless the segments just BECAME the live log bytes, the staged
       // files are dead (the per-row path collected, or the statement
-      // failed); best-effort — tempRoot's shutdown hook and DFS lifecycle
-      // rules are the backstop
-      if (!segmentsLive)
-        segments.foreach(graft.spark.GraftDeltaWriter.deleteSegment(_,
-          spark.sparkContext.hadoopConfiguration))
+      // failed)
+      if (!segmentsLive) store.discardSegments(segments)
   }
 
   /** TRUNCATE semantics, shared by CQL `TRUNCATE` and the catalog's
     * `INSERT OVERWRITE` so the two surfaces cannot diverge. */
-  private def truncateState(table: String): Unit = {
-    val t = tableState(table)
-    state(table.toLowerCase) = t.copy(
-      base = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], t.logSchema),
-      pending = Vector.empty, localOnly = true)
-    retireCompactedDir(table.toLowerCase)
-  }
+  private def truncateState(table: String): Unit =
+    store.truncate(table.toLowerCase, tableState(table))
 
-  // ——— snapshots [U service/SnapshotManager, db/virtual/SnapshotsTable
-  // (4.1), cassandra.yaml auto_snapshot] ———
-  // name → (keyspace, table, dir, created_at session clock, true_size)
-  private val snapshotsReg = scala.collection.mutable.LinkedHashMap
-    .empty[(String, String), (String, String, Long, Long)]
-  // (name, canonicalTable) → (ks, bareTable, createdAt, trueSize)
 
-  /** Auto/unnamed snapshot tags carry a session-unique sequence (the
-    * upstream analogue is a millis timestamp tag): the session CLOCK
-    * only moves on writes, so clock-stamped names would collide on
-    * back-to-back TRUNCATEs of an unwritten table. */
-  private val snapshotSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
+  // ——— snapshots (the registry and files: [[TableStore.takeSnapshot]]) ———
   private def autoSnapshotEnabled: Boolean =
     spark.conf.getOption("spark.graft.auto_snapshot")
       .forall(_.trim.toBoolean) // default TRUE, upstream's default
-
-  /** Materialize the table's current op-log as an immutable parquet
-    * snapshot — the sstable-hardlink analogue (a real copy here: the log
-    * is partly driver-held rows, not yet files). Idempotent per
-    * (name, table): upstream rejects a duplicate snapshot name. */
-  private def takeSnapshot(name: String, key: String): Unit = {
-    // the name becomes a directory segment — never a path expression:
-    // it must START with a non-dot so '.' and '..' cannot pass
-    if (!name.matches("[A-Za-z0-9_-][A-Za-z0-9._-]*"))
-      throw new CqlInvalidQueryException(
-        s"invalid snapshot name '$name' (letters, digits, . _ -; must " +
-          "not start with a dot)")
-    if (snapshotsReg.contains((name, key)))
-      throw new CqlInvalidQueryException(
-        s"Snapshot $name already exists for table $key")
-    val t = tableState(key)
-    val dir = s"$snapshotRoot/snapshots/${key.replace('.', '_')}/$name"
-    log(t).write.mode("errorifexists").parquet(dir)
-    val size = dirBytes(dir)
-    snapshotsReg((name, key)) =
-      (keyspaceOf(key), tableOf(key), clock, size)
-  }
 
   /** `SNAPSHOT [TABLE] t [AS name]` / `CLEAR SNAPSHOT name` — the
     * nodetool snapshot/clearsnapshot analogues, admin verbs like
@@ -2649,9 +2087,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     tableState(key) // must exist
     if (!isSuperuser) checkPerm("modify", authRes(key))
     val name = nameOpt.map(_.stripPrefix("'").stripSuffix("'"))
-      .getOrElse(s"snapshot-${snapshotSeq.incrementAndGet()}")
-    takeSnapshot(name, key)
-    val (_, _, at, size) = snapshotsReg((name, key))
+      .getOrElse(s"snapshot-${store.snapshotSeq.incrementAndGet()}")
+    store.takeSnapshot(name, key, clock)
+    val (at, size) = store.snapshots((name, key))
     spark.createDataFrame(Seq(
       Row(name, keyspaceOf(key), tableOf(key), at, size)).asJava,
       StructType(Seq(
@@ -2670,13 +2108,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     if (!isSuperuser) throw new CqlInvalidQueryException(
       "Only superusers may clear snapshots")
     val name = toks(2).stripPrefix("'").stripSuffix("'")
-    val hit = snapshotsReg.keys.filter(_._1 == name).toSeq
-    if (hit.isEmpty) throw new CqlInvalidQueryException(
+    if (!store.clearSnapshot(name)) throw new CqlInvalidQueryException(
       s"unknown snapshot $name")
-    hit.foreach { k =>
-      removeDir(s"$snapshotRoot/snapshots/${k._2.replace('.', '_')}/$name")
-      snapshotsReg.remove(k)
-    }
     spark.emptyDataFrame
   }
 
@@ -3171,90 +2604,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     }
   }
 
-  /** Statement-level all-or-nothing: snapshot every table's pending
-    * vector (immutable — O(tables) references) and restore on ANY
-    * failure, so a mid-statement error (e.g. a trigger failing on the
-    * 2nd statement of a BATCH or of an IN-expanded write) cannot leave
-    * the earlier mutations applied. Upstream TriggerExecutor likewise
-    * augments the COMPLETE mutation set before applying any of it. */
-  private def withPendingRollback[A](f: => A): A = {
-    val snap = state.toSeq.map { case (n, st) => (n, st.pending) }
-    try {
-      val out = f
-      // CDC hook (4.0 `cdc = true` [U db/commitlog/CommitLogSegment-
-      // ManagerCDC]): the statement COMMITTED — its newly appended
-      // mutation rows are exactly the pending-vector delta vs the
-      // snapshot, so a rolled-back statement (the catch below) can never
-      // leak a phantom segment, trigger-augmented writes ride along, and
-      // a BATCH lands as one segment per touched table (upstream: one
-      // mutation per table per batch).
-      if (cdcEnabled.nonEmpty) emitCdcDeltas(snap)
-      out
-    } catch {
-      case e: Throwable =>
-        snap.foreach { case (n, p) => state.get(n).foreach(_.pending = p) }
-        throw e
-    }
-  }
-
-  // ——— change-data-capture (4.0 `cdc` table option [U TableParams.cdc,
-  // db/commitlog/CommitLogSegmentManagerCDC]): committed mutations of a
-  // cdc-enabled table also land, in commit order, as parquet segments in
-  // the table's cdc_raw-analogue directory — which a Spark streaming
-  // consumer tails via [[cdcStream]] (file source; at real scale the dir
-  // is an object-store prefix and maxFilesPerTrigger bounds each batch).
-  // Segments carry the RAW mutation rows (the upsert-log schema: data
-  // cells + _marker/_writetime/_ttl/_deleted/_op_*/_del_*) — the same
-  // granularity upstream CDC consumers read from commitlog segments. ———
-  private val cdcEnabled = scala.collection.mutable.Set.empty[String]
-  private lazy val cdcRoot = CqlSession.tempRoot("graft-cdc")
-  private def cdcDirOf(table: String): String =
-    s"$cdcRoot/${table.toLowerCase.replace('.', '_')}"
-
-  /** `spark.graft.cdc.total_space_in_mb` — the cdc_raw space bound
-    * (upstream `cdc_total_space` [U db/commitlog/
-    * CommitLogSegmentManagerCDC]: when the consumer falls behind and the
-    * dir fills, writes to CDC-enabled tables are REJECTED, not silently
-    * dropped — the backpressure that makes CDC safe to enable). Unset =
-    * unbounded (the engine deviates from upstream's 4 GiB default so
-    * fixture sessions never trip it unconfigured; operators set it).
-    * Surfaces in `system_views.settings` like every live conf. */
-  private def cdcSpaceLimitBytes: Option[Long] =
-    spark.conf.getOption("spark.graft.cdc.total_space_in_mb")
-      .map(_.trim.toLong).filter(_ >= 0).map(_ * 1024L * 1024L)
-
-  /** Reject the mutation when the cdc dir is at the configured bound.
-    * Thrown INSIDE withPendingRollback, so the whole statement rolls
-    * back — the upstream contract (the write fails; it is never applied
-    * locally but lost to CDC). */
-  private def cdcGuardSpace(tbl: String): Unit =
-    cdcSpaceLimitBytes.foreach { lim =>
-      if (dirBytes(cdcRoot) >= lim)
-        throw new CqlInvalidQueryException(
-          s"Rejecting mutation to CDC-enabled table $tbl: cdc_raw is at " +
-            s"cdc_total_space (${lim / 1048576L} MiB) — consume and reap " +
-            "segments (cdcReap) to free space")
-    }
-
-  private def emitCdcDeltas(snap: Seq[(String, Vector[Row])]): Unit = {
-    val before = snap.toMap
-    // collect every table's fresh rows FIRST and space-check before any
-    // segment is written: a multi-table batch must reject atomically,
-    // never leave a phantom segment for the first table and roll back
-    // the second
-    val fresh = cdcEnabled.toSeq.sorted.flatMap { tbl =>
-      state.get(tbl).toSeq.map { st =>
-        (tbl, st.logSchema,
-          st.pending.drop(before.get(tbl).map(_.length).getOrElse(0)))
-      }
-    }.filter(_._3.nonEmpty)
-    fresh.headOption.foreach { case (tbl, _, _) => cdcGuardSpace(tbl) }
-    fresh.foreach { case (tbl, schema, rows) =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
-        .coalesce(1).write.mode("append").parquet(cdcDirOf(tbl))
-    }
-  }
+  // ——— change-data-capture: the session surface (reap, stream, replica
+  // apply) over the store's cdc segments ———
 
   /** Consumer segment REAP — the delete-after-consume half of the CDC
     * contract (upstream consumers remove processed segments from
@@ -3271,27 +2622,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     // permission FIRST: an unprivileged caller learns nothing about the
     // table's cdc state from the error shape
     checkPerm("modify", authRes(key))
-    if (!cdcEnabled.contains(key))
+    if (!store.cdcTables.contains(key))
       throw new CqlInvalidQueryException(
         s"cdc is not enabled on $table (CREATE/ALTER ... WITH cdc = true)")
-    val dir = new java.io.File(cdcDirOf(key))
-    if (!dir.isDirectory) return 0L
-    var freed = 0L
-    dir.listFiles().foreach { f =>
-      if (f.isFile && f.lastModified() <= throughMillis) {
-        val n = f.length()
-        if (f.delete()) freed += n
-      }
-    }
-    if (freed > 0)
-      cdcReapedBytes(key) = cdcReapedBytes.getOrElse(key, 0L) + freed
-    freed
+    store.reapCdc(key, throughMillis)
   }
-
-  /** Cumulative bytes each table's consumers have reaped from cdc_raw —
-    * the other half of `system_views.cdc`'s disk accounting. */
-  private val cdcReapedBytes =
-    scala.collection.mutable.Map.empty[String, Long]
 
   /** `REAP CDC [TABLE] t [THROUGH <millis>]` — the statement surface of
     * [[cdcReap]] (r13; upstream's analogue is operator tooling that
@@ -3337,7 +2672,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * orders them across segments. */
   def cdcStream(table: String, maxFilesPerTrigger: Int = 0): DataFrame = {
     val key = canonical(table).toLowerCase
-    if (!cdcEnabled.contains(key))
+    if (!store.cdcTables.contains(key))
       throw new CqlInvalidQueryException(
         s"cdc is not enabled on $table (CREATE/ALTER ... WITH cdc = true)")
     // CDC segments carry CLEAR mutation bytes (upstream cdc_raw is raw
@@ -3351,17 +2686,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         s"User $currentRole has no UNMASK permission on " +
           s"${authRes(key).display}: cdc segments carry clear values of " +
           "masked columns")
-    val st = tableState(key)
-    // the dir exists once the first segment lands; stage it so stream
-    // construction over a brand-new cdc table does not throw
-    new java.io.File(cdcDirOf(key)).mkdirs()
-    val reader = spark.readStream.schema(st.logSchema)
-    (if (maxFilesPerTrigger > 0)
-       reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-     else reader).parquet(cdcDirOf(key))
+    store.cdcStream(key, tableState(key), maxFilesPerTrigger)
   }
 
-  private[cql] def runDml(dml: CqlDml): DataFrame = withPendingRollback {
+  private[cql] def runDml(dml: CqlDml): DataFrame = store.withPendingRollback {
     checkPerm("modify", authRes(dml.table))
     val expanded = expandInPredicates(dml)
     if (expanded.lengthCompare(1) == 0 && (expanded.head eq dml)) {
@@ -3469,7 +2797,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * allowed only when the batch itself carries none. CAS batch: all
     * conditions evaluate against the PRE-batch state (one Paxos round
     * upstream); the batch applies all-or-nothing. */
-  private[cql] def runBatch(b0: CqlBatch): DataFrame = withPendingRollback {
+  private[cql] def runBatch(b0: CqlBatch): DataFrame = store.withPendingRollback {
     b0.statements.map(_.table).distinct
       .foreach(t => checkPerm("modify", authRes(t)))
     val b = b0.copy(statements = b0.statements.flatMap(expandInPredicates))
@@ -3798,32 +3126,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * already-replicated ones. */
   def applyCdcBatch(table: String, batch: DataFrame): Unit = {
     checkPerm("modify", authRes(table))
-    val t = tableState(table)
-    val expect = t.logSchema.fields.map(f => f.name -> f.dataType).toSeq
-    val got = batch.schema.fields.map(f => f.name -> f.dataType).toSeq
-    if (got != expect)
-      throw new CqlInvalidQueryException(
-        s"applyCdcBatch($table): batch schema does not match the " +
-          s"table's mutation log (got ${got.map(_._1).mkString(",")})")
-    val rows = batch.collect().toVector // a micro-batch: bounded by design
-    if (rows.nonEmpty) {
-      mutationEpoch += 1
-      val wtIdx = t.logSchema.fieldIndex("_writetime")
-      val maxTs = rows.iterator.map(_.getLong(wtIdx)).max
-      val key = table.toLowerCase
-      // chain replication: if THIS table is cdc-enabled too, the applied
-      // batch surfaces to downstream consumers as one segment — space
-      // bound checked BEFORE the state commit so a rejected apply leaves
-      // the replica untouched (the upstream contract)
-      if (cdcEnabled.contains(key)) cdcGuardSpace(key)
-      if (maxTs >= clock) clock = maxTs + 1
-      state(key) = t.copy(pending = t.pending ++ rows)
-      if (cdcEnabled.contains(key)) {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(rows.asJava, t.logSchema)
-          .coalesce(1).write.mode("append").parquet(cdcDirOf(key))
-      }
-    }
+    store.applyLogRows(table, tableState(table), batch)
+      .foreach(maxTs => if (maxTs >= clock) clock = maxTs + 1)
   }
 
   /** `COMPARE AUDIT` [U tools/fqltool compare, 4.0]: replay this
@@ -3889,50 +3193,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   }
 
   // ——— COMPACT: the major-compaction admin surface ———
-  // `system_views.sstable_tasks` serves the ACTIVE tasks [U db/virtual/
-  // SSTableTasksTable.java]; `system.compaction_history` the completed
-  // ring [U db/SystemKeyspace.compaction_history]. Units are LOG ROWS,
-  // not bytes — the session's sstable analogue is the row-granular
-  // op-log (documented deviation; deterministic, hash-gateable).
-  private val compactionSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val compactionTasks = new java.util.concurrent.ConcurrentHashMap[
-    Long, (String, String, String, Long)]() // id → (ks, table, kind, total)
-  private val compactionHistory =
-    scala.collection.mutable.ArrayBuffer.empty[Row]
-  private val CompactionHistoryMax = 256
-  /** Live compacted-base dir per table, plus a ONE-GENERATION grace
-    * slot: a retired segment survives one more retirement before its
-    * files delete, so a lazy DataFrame returned before the retiring
-    * statement can still be collected. Growth stays bounded at two
-    * generations per table; the session temp-root shutdown hook reaps
-    * everything at exit. */
-  private val compactedDirs =
-    scala.collection.mutable.Map.empty[String, String]
-  private val condemnedDirs =
-    scala.collection.mutable.Map.empty[String, String]
-
-  private[cql] def dirBytes(dir: String): Long =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.map(_.length()).sum).getOrElse(0L)
-
-  private def removeDir(dir: String): Unit =
-    try {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively(); ()
-    } catch { case _: Exception => () }
-
-  /** Retire a table's live compacted segment into the grace slot
-    * (deleting whatever occupied it) — called by COMPACT, TRUNCATE,
-    * and DROP TABLE when the base stops reading the segment. */
-  private def retireCompactedDir(key: String): Unit = {
-    condemnedDirs.remove(key).foreach(removeDir)
-    compactedDirs.remove(key).foreach(d => condemnedDirs(key) = d)
-  }
-
   /** `COMPACT [TABLE] t` — fold the table's op-log to its surviving
-    * subset ([[compactedLog]]), materialize it as one parquet segment
-    * (the flushed-sstable analogue: bounds the driver-held pending rows
-    * AND the lineage depth), and swap it in as the new base. Upstream
+    * subset, materialize it as one parquet segment and swap it in as the
+    * new base ([[TableStore.compact]]). Upstream
     * reaches this through `nodetool compact`; the façade exposes it as
     * an admin verb like AUDIT/TRACING. Requires MODIFY on the table. */
   private def runCompact(cql: String): DataFrame = {
@@ -3947,40 +3210,16 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     val key = canonical(name)
     val t = tableState(key)
     if (!isSuperuser) checkPerm("modify", authRes(key))
-    val lg = log(t)
-    val rowsIn = lg.count()
-    val taskId = compactionSeq.incrementAndGet()
-    compactionTasks.put(taskId,
-      (keyspaceOf(key), tableOf(key), "Compaction", rowsIn))
-    try {
-      val survivors = compactedLog(t, lg)
-      val dir = s"$snapshotRoot/compacted_${key.replace('.', '_')}/$taskId"
-      survivors.write.mode("overwrite").parquet(dir)
-      val compacted = spark.read.schema(t.logSchema).parquet(dir)
-      val rowsOut = compacted.count()
-      // rows_merged histogram: how many log rows folded into each key —
-      // upstream's sstables-merged histogram at row granularity. Bounded
-      // by the distinct per-key row counts (small); driver-side by design.
-      val hist = lg.groupBy(keyCols(t).map(col): _*).count()
-        .groupBy("count").count().collect()
-        .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-      mutationEpoch += 1
-      state(key) = t.copy(base = compacted, pending = Vector.empty,
-        localOnly = false)
-      retireCompactedDir(key)
-      compactedDirs(key) = dir
-      if (compactionHistory.size >= CompactionHistoryMax)
-        compactionHistory.remove(0)
-      compactionHistory += Row(taskId, keyspaceOf(key), tableOf(key),
-        clock, rowsIn, rowsOut, hist) // session-clock stamp: deterministic
-      spark.createDataFrame(Seq(
-        Row(keyspaceOf(key), tableOf(key), rowsIn, rowsOut)).asJava,
-        StructType(Seq(
-          StructField("keyspace_name", StringType),
-          StructField("table_name", StringType),
-          StructField("rows_in", LongType),
-          StructField("rows_out", LongType))))
-    } finally compactionTasks.remove(taskId)
+    // session-clock stamp: deterministic
+    val (rowsIn, rowsOut) =
+      store.compact(key, t, keyspaceOf(key), tableOf(key), clock)
+    spark.createDataFrame(Seq(
+      Row(keyspaceOf(key), tableOf(key), rowsIn, rowsOut)).asJava,
+      StructType(Seq(
+        StructField("keyspace_name", StringType),
+        StructField("table_name", StringType),
+        StructField("rows_in", LongType),
+        StructField("rows_out", LongType))))
   }
 
   /** Run a CQL statement: SELECT returns rows; DML and BATCH mutate and
@@ -4296,7 +3535,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         currentKs = name
         // bare user-function bindings follow the current keyspace — the
         // engine's alias map must rebuild (cheap; USE is rare)
-        mutationEpoch += 1
+        store.epoch += 1
         spark.emptyDataFrame
       case other =>
         throw new CqlInvalidQueryException(s"unsupported statement: $other")
@@ -4307,7 +3546,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * user's DDL scripts need (static columns, collections, vector<>,
     * compound keys all land in the same upsert-log model). */
   private def applyDdl(ddl: CqlDdl): Unit = {
-    mutationEpoch += 1
+    store.epoch += 1
     applyDdl0(ddl)
   }
 
@@ -4423,7 +3662,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
             throw new CqlInvalidQueryException(
               s"PRIMARY KEY column $s cannot be static")
         }
-        state(table.toLowerCase) = mkState(CqlTable(
+        state(table.toLowerCase) = store.mkState(CqlTable(
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[Row], schema), pk, ck, statics,
           cols.filter(_.counter).map(_.name)))
@@ -4436,15 +3675,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           maskReg((table.toLowerCase, cd.name.toLowerCase)) = m
         })
         if (cdc) {
-          cdcEnabled += table.toLowerCase
-          // a FRESH cdc table must not inherit a dropped predecessor's
-          // segments (ALTER re-enable, by contrast, keeps them — upstream
-          // cdc_raw files survive a toggle)
-          try {
-            import scala.reflect.io.Directory
-            new Directory(new java.io.File(cdcDirOf(table.toLowerCase)))
-              .deleteRecursively()
-          } catch { case _: Exception => () }
+          store.cdcTables += table.toLowerCase
+          store.clearCdc(table.toLowerCase)
         }
       }
     case CqlDropTable(table, ifExists) =>
@@ -4454,13 +3686,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       }.foreach(mv => throw new CqlInvalidQueryException(
         s"Cannot drop table $table: materialized view $mv still depends on it"))
       if (autoSnapshotEnabled && state.contains(table.toLowerCase))
-        takeSnapshot(
-          s"dropped-${snapshotSeq.incrementAndGet()}-" +
-            tableOf(table.toLowerCase),
-          table.toLowerCase)
-      if (state.remove(table.toLowerCase).isEmpty && !ifExists)
+        store.takeSnapshot(
+          s"dropped-${store.snapshotSeq.incrementAndGet()}-" +
+            tableOf(table.toLowerCase), table.toLowerCase, clock)
+      if (!store.drop(table.toLowerCase) && !ifExists)
         throw new CqlInvalidQueryException(s"unknown table $table")
-      retireCompactedDir(table.toLowerCase)
       indexReg.filterInPlace { case (n, (tbl, _, _, _)) =>
         val keep = tbl != table.toLowerCase
         if (!keep) idxOptionsReg.remove(n)
@@ -4470,7 +3700,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       udtCols.filterInPlace { case ((tbl, _), _) => tbl != table.toLowerCase }
       triggerReg.filterInPlace { case ((tbl, _), _) => tbl != table.toLowerCase }
       maskReg.filterInPlace { case ((tbl, _), _) => tbl != table.toLowerCase }
-      cdcEnabled -= table.toLowerCase // segments stay on disk, like cdc_raw
+      store.cdcTables -= table.toLowerCase // segments stay on disk, like cdc_raw
     case CqlCreateMv(name, sel, pk, ck, ifNotExists) =>
       if (state.contains(name.toLowerCase) || mvReg.contains(name.toLowerCase)) {
         if (!ifNotExists)
@@ -4817,20 +4047,14 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           udtCols.getOrElse((tbl, f.name.toLowerCase), Set.empty)
             .contains(lname)).map(_.name)
         if (structCols.nonEmpty) {
-          var flushed = log(t)
-          structCols.foreach { c0 =>
-            flushed = flushed.withColumn(c0,
-              fields.fields.foldLeft(col(c0))((cc, f) =>
-                cc.withField(f.name, lit(null).cast(f.dataType))))
+          val flushed = structCols.foldLeft(store.log(t)) { (lg, c0) =>
+            lg.withColumn(c0, fields.fields.foldLeft(col(c0))((cc, f) =>
+              cc.withField(f.name, lit(null).cast(f.dataType))))
           }
           val newSchema = StructType(t.schema.fields.toSeq.map(f =>
             if (structCols.contains(f.name)) f.copy(dataType = widened) else f))
-          val shell = mkState(CqlTable(
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], newSchema),
-            t.partitionKeys, t.clusteringKeys, t.staticKeys, t.counterKeys))
-          state(tbl) = shell.copy(base = flushed.select(
-            shell.logSchema.fieldNames.map(col).toSeq: _*),
-            clusteringDesc = t.clusteringDesc, defaultTtl = t.defaultTtl)
+          state(tbl) = store.reshape(t, flushed, newSchema, t.staticKeys,
+            t.counterKeys)
         }
       }
       udtReg(name.toLowerCase) = widened
@@ -4861,10 +4085,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       // auto_snapshot [U cassandra.yaml, default true]: data-destroying
       // DDL snapshots first — the famous drop-safety net
       if (autoSnapshotEnabled && state.contains(table.toLowerCase))
-        takeSnapshot(
-          s"truncated-${snapshotSeq.incrementAndGet()}-" +
-            tableOf(table.toLowerCase),
-          table.toLowerCase)
+        store.takeSnapshot(
+          s"truncated-${store.snapshotSeq.incrementAndGet()}-" +
+            tableOf(table.toLowerCase), table.toLowerCase, clock)
       truncateState(table)
     case CqlAlterAdd(table, cols) =>
       val t = tableState(table)
@@ -4874,7 +4097,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           throw new CqlInvalidQueryException(s"column ${cd.name} already exists")
       }
       val newSchema = StructType(t.schema.fields.toSeq ++ cols.map(fieldFor))
-      state(table.toLowerCase) = reshape(t, newSchema,
+      state(table.toLowerCase) = store.reshape(t, store.log(t), newSchema,
         t.staticKeys ++ cols.filter(_.static).map(_.name),
         t.counterKeys ++ cols.filter(_.counter).map(_.name))
       cols.foreach(cd => if (cd.udtRefs.nonEmpty)
@@ -4952,7 +4175,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       }
       val newSchema = StructType(t.schema.fields.toSeq
         .filterNot(f => cols.exists(_.equalsIgnoreCase(f.name))))
-      state(table.toLowerCase) = reshape(t, newSchema,
+      state(table.toLowerCase) = store.reshape(t, store.log(t), newSchema,
         t.staticKeys.filterNot(s => cols.exists(_.equalsIgnoreCase(s))),
         t.counterKeys.filterNot(k => cols.exists(_.equalsIgnoreCase(k))))
       // dropping a column drops its indexes (upstream: rejected while an
@@ -4970,8 +4193,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       val t = tableState(table) // validates existence even for no-op options
       dttl.foreach(v => state(table.toLowerCase) = t.copy(defaultTtl = v))
       cdc.foreach { on =>
-        if (on) cdcEnabled += table.toLowerCase
-        else cdcEnabled -= table.toLowerCase
+        if (on) store.cdcTables += table.toLowerCase
+        else store.cdcTables -= table.toLowerCase
       }
     case CqlAlterRename(table, pairs) =>
       // upstream renames exist for PRIMARY KEY columns only (regular cells
@@ -5000,37 +4223,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         }.foreach(mv => throw new CqlInvalidQueryException(
           s"Cannot rename column $from on base table $table: " +
             s"materialized view $mv depends on it"))
-        def ren(f: StructField) =
-          if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f
-        def renSeq(xs: Seq[String]) =
-          xs.map(n => if (n.equalsIgnoreCase(from)) to else n)
-        state(table.toLowerCase) = t.copy(
-          schema = StructType(t.schema.fields.map(ren)),
-          logSchema = StructType(t.logSchema.fields.map(ren)),
-          base = t.base.withColumnRenamed(actual, to),
-          partitionKeys = renSeq(t.partitionKeys),
-          clusteringKeys = renSeq(t.clusteringKeys))
+        state(table.toLowerCase) = store.renameKey(t, actual, to)
         udtCols.remove((table.toLowerCase, actual.toLowerCase))
           .foreach(refs => udtCols((table.toLowerCase, to.toLowerCase)) = refs)
       }
-  }
-
-  /** ALTER support: flush the current log and reshape it to the data model
-    * with columns added/dropped (added cells read null until written —
-    * upstream's lazily-null new column; dropped cells are discarded, the
-    * `DroppedColumn` record's effect). */
-  private def reshape(t: TableState, newSchema: StructType,
-      statics: Seq[String], counters: Seq[String]): TableState = {
-    val flushed = log(t)
-    val shell = mkState(CqlTable(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], newSchema),
-      t.partitionKeys, t.clusteringKeys, statics, counters))
-      .copy(clusteringDesc = t.clusteringDesc, defaultTtl = t.defaultTtl)
-    val base = flushed.select(shell.logSchema.fields.toSeq.map { f =>
-      if (flushed.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    shell.copy(base = base)
   }
 
   private def tableState(name: String): TableState =
@@ -5445,16 +4641,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * view, so specs can pin fold ≡ Spark view. */
   private[graft] var forceSparkRead: Boolean = false
   /** Count of reads served by the driver-side partition fold: SELECTs
-    * ([[partitionRead]]) and LWT condition reads ([[lwtLocalRead]]; spec
+    * ([[partitionRead]]) and LWT condition reads ([[TableStore.rowAt]]; spec
     * instrumentation). */
   private[graft] var foldReads: Long = 0L
-
-  /** Every cell resolves by the scalar reconcile rule: no collection/UDT/
-    * counter op-logs, no per-partition statics. The driver-side partition
-    * fold covers exactly these tables. */
-  private def scalarTable(t: TableState): Boolean =
-    t.staticKeys.isEmpty && t.counterKeys.isEmpty &&
-      !t.logSchema.fieldNames.exists(_.startsWith("_op_"))
 
   /** Generic scalar ordering of LWT condition operands; null sorts
     * lowest. */
@@ -5482,171 +4671,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       s"cannot order-compare ${a.getClass} cells")
   }
 
-  private def logField(t: TableState, n: String): StructField =
-    t.logSchema.fields.find(_.name.equalsIgnoreCase(n)).get
-
-  /** Non-key, non-static columns: the cells [[view]] reconciles per row. */
-  private def regularCols(t: TableState): Seq[String] = dataCols(t)
-    .filterNot(c => keyCols(t).contains(c) || t.staticKeys.contains(c))
-
-  /** The schema of [[view]] on a scalar table: primary key, regular cells,
-    * their per-cell writetimes, then the row writetime. */
-  private def foldSchema(t: TableState): StructType = {
-    val regular = regularCols(t)
-    StructType(
-      (keyCols(t) ++ regular).map(logField(t, _).copy(nullable = true)) ++
-        regular.map(c => StructField(s"_writetime_$c", LongType)) :+
-        StructField("_writetime", LongType))
-  }
-
-  /** The log rows of one partition as Catalyst rows: the base log through
-    * a scan with the key filter pushed down (no scan while the table is
-    * localOnly), plus the matching pending rows, filtered on the driver.
-    * `pk` holds one non-null Catalyst value per partition-key column. */
-  private def partitionLog(t: TableState, pk: Seq[Any]): Seq[InternalRow] = {
-    val toCat = CatalystTypeConverters.createToCatalystConverter(t.logSchema)
-    val pkF = t.partitionKeys.map(logField(t, _))
-    val base =
-      if (t.localOnly) Seq.empty[Row]
-      else t.base.filter(pkF.zip(pk).map { case (f, v) =>
-        col(f.name) === org.apache.spark.sql.GraftShim.column(
-          Literal(v, f.dataType))
-      }.reduce(_ && _)).collect().toSeq
-    val pkI = pkF.map(f => t.logSchema.fieldIndex(f.name))
-    val pkCat = pkF.map(f =>
-      CatalystTypeConverters.createToCatalystConverter(f.dataType))
-    val pkOrd = pkF.map(f => PhysicalDataType.ordering(f.dataType))
-    val pending = t.pending.filter(r => pkI.indices.forall { j =>
-      !r.isNullAt(pkI(j)) &&
-        pkOrd(j).compare(pkCat(j)(r.get(pkI(j))), pk(j)) == 0
-    })
-    (base ++ pending).map(r => toCat(r).asInstanceOf[InternalRow])
-  }
-
-  /** Driver-side reconcile of ONE partition's log rows — the same algebra
-    * as [[view]] + reconcileView, collapsed to the addressed partition:
-    * (1) partition/range tombstones (null clustering suffix) shadow
-    * strictly-older rows under their prefix (view()'s cascaded prefix
-    * windows collapse to one max per row: a tombstone a shallower one
-    * shadows could only shadow rows that one shadows already); (2) a row
-    * tombstone shadows strictly-older cells of its row; (3) each cell
-    * resolves to the (writetime, tombstone-wins-tie, value) winner, values
-    * compared by Spark's own ordering of the column type, as max_by does;
-    * (4) with an INSERT marker column, a row exists iff a cell or a live
-    * marker survives. Rows come out in [[foldSchema]], in DECLARED
-    * clustering order (Spark's null placement: first under ASC, last under
-    * DESC). Scalar tables only ([[scalarTable]]); TTL is not applied, as
-    * in the engine's view. Equivalence with the Spark view is pinned by
-    * CqlPartitionFoldSpec and CqlLwtFastPathSpec. */
-  private def foldPartition(t: TableState,
-      part: Seq[InternalRow]): Seq[InternalRow] = {
-    val ls = t.logSchema
-    def idx(n: String) = ls.fieldIndex(logField(t, n).name)
-    val wtI = idx("_writetime"); val delI = idx("_deleted")
-    def opt(n: String) = Some(ls.fieldNames.indexOf(n)).filter(_ >= 0)
-    val mkI = opt("_marker")
-    val keyI = keyCols(t).map(idx).toArray
-    val keyT = keyI.map(ls(_).dataType)
-    val nPk = t.partitionKeys.size
-    val nCk = t.clusteringKeys.size
-    val ckOrd = keyT.drop(nPk).map(PhysicalDataType.ordering)
-    val desc = (t.clusteringDesc ++ Seq.fill(nCk)(false)).take(nCk)
-    // grouping keys compare as Spark groups them: -0.0 = 0.0, NaN = NaN,
-    // emitted in normal form
-    def norm(v: Any): Any = v match {
-      case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
-      case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
-      case o => o
-    }
-    final class LogRow(val r: InternalRow) {
-      val key: Array[Any] = keyI.indices.map(j =>
-        if (r.isNullAt(keyI(j))) null else norm(r.get(keyI(j), keyT(j)))).toArray
-      def ck(j: Int): Any = key(nPk + j)
-      val wt: Long = r.getLong(wtI)
-      val deleted: Boolean = r.getBoolean(delI)
-      /** prefix length of a partition/range tombstone */
-      val tombLevel: Int = {
-        val k = (0 until nCk).takeWhile(ck(_) != null).size
-        if (deleted && k < nCk && (k until nCk).forall(ck(_) == null)) k
-        else -1
-      }
-    }
-    def ckEq(a: LogRow, b: LogRow, j: Int): Boolean =
-      a.ck(j) != null && b.ck(j) != null &&
-        ckOrd(j).compare(a.ck(j), b.ck(j)) == 0
-    val rows = part.map(new LogRow(_))
-    // (1) prefix shadow: a tombstone applies to itself, so each dies here
-    val tombs = rows.filter(_.tombLevel >= 0)
-    val survivors = rows.filter { x =>
-      !tombs.exists(tb => tb.wt >= x.wt &&
-        (0 until tb.tombLevel).forall(ckEq(tb, x, _)))
-    }
-    // declared clustering order; rows of one clustering key end adjacent
-    def cmpCk(a: LogRow, b: LogRow): Int = {
-      var c = 0; var j = 0
-      while (c == 0 && j < nCk) {
-        c = (a.ck(j), b.ck(j)) match {
-          case (null, null) => 0
-          case (null, _) => if (desc(j)) 1 else -1
-          case (_, null) => if (desc(j)) -1 else 1
-          case (x, y) =>
-            val o = ckOrd(j).compare(x, y)
-            if (desc(j)) -o else o
-        }
-        j += 1
-      }
-      c
-    }
-    val sorted = survivors.sortWith(cmpCk(_, _) < 0)
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[LogRow]]
-    var i = 0
-    while (i < sorted.size) {
-      var e = i + 1
-      while (e < sorted.size && cmpCk(sorted(i), sorted(e)) == 0) e += 1
-      groups += sorted.slice(i, e)
-      i = e
-    }
-    val regular = regularCols(t).map(c => (idx(c), ls(idx(c)).dataType,
-      opt(s"_del_$c")))
-    val valOrd = regular.map { case (_, dt, _) => PhysicalDataType.ordering(dt) }
-    val hasMarker = mkI.isDefined && regular.nonEmpty
-    groups.toSeq.flatMap { g =>
-      // (2) the row tombstone
-      val rowTomb = g.filter(_.deleted).map(_.wt).maxOption
-      val live = g.filter(x => !x.deleted && rowTomb.forall(x.wt > _))
-      if (live.isEmpty) None
-      else {
-        // (3) per-cell (writetime, tombstone, value) winner: max_by keeps
-        // the first of equal candidates
-        val cells = regular.indices.map { ci =>
-          val (cI, dt, dI) = regular(ci)
-          var best: (Long, Boolean, Any) = null
-          live.foreach { x =>
-            val tomb = dI.exists(d => !x.r.isNullAt(d) && x.r.getBoolean(d))
-            val v = if (x.r.isNullAt(cI)) null else x.r.get(cI, dt)
-            if (v != null || tomb) {
-              val wins = best == null || {
-                val byWt = java.lang.Long.compare(x.wt, best._1)
-                if (byWt != 0) byWt > 0
-                else if (tomb != best._2) tomb
-                else if (v == null || best._3 == null) v != null
-                else valOrd(ci).compare(v, best._3) > 0
-              }
-              if (wins) best = (x.wt, tomb, v)
-            }
-          }
-          if (best == null || best._2) (null, null) else (best._3, best._1)
-        }
-        // (4) the row-marker rule
-        val exists = !hasMarker || cells.exists(_._1 != null) ||
-          live.exists(x => !x.r.isNullAt(mkI.get) && x.r.getBoolean(mkI.get))
-        if (!exists) None
-        else Some(new GenericInternalRow((g.head.key.toSeq ++
-          cells.map(_._1) ++ cells.map(_._2) :+ live.map(_.wt).max).toArray))
-      }
-    }
-  }
-
   /** The Catalyst value a SELECT's `pk = v` compares against: the literal
     * cast to the column type, as the engine casts it. None (the statement
     * keeps the Spark view) for markers, function bounds, a failing cast or
@@ -5661,11 +4685,12 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   }
 
   /** A SELECT that pins one partition of a scalar base table (no masks,
-    * not a system table): the partition's log rows ([[partitionLog]]: one
-    * scan job with the key filter pushed into parquet, none while the
-    * table is localOnly) fold on the driver ([[foldPartition]]), and the
-    * engine runs the statement over that one-partition LocalRelation with
-    * the table's real metadata, so validation is unchanged. Upstream reads
+    * not a system table): the partition's log rows
+    * ([[TableStore.partitionLog]]: one scan job with the key filter pushed
+    * into parquet, none while the table is localOnly) fold on the driver
+    * ([[TableStore.foldPartition]]), and the engine runs the statement
+    * over that one-partition LocalRelation with the table's real
+    * metadata, so validation is unchanged. Upstream reads
     * one partition the same way: merge the memtable and the SSTables that
     * hold it [U db/SinglePartitionReadCommand]. Table-wide reads, and
     * every other SELECT (None here), run the Spark view's fold. */
@@ -5683,7 +4708,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       if pk.size == pins.size
       table <- engine.catalogTables.get(key)
     } yield {
-      val log = partitionLog(t, pk)
+      val log = store.partitionLog(t, pk)
       val rows = foldPartition(t, log)
       foldReads += 1
       traceNote(s"Read path: driver partition fold (${log.size} log rows " +
@@ -5698,32 +4723,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private def viewRead(sel: CqlSelect): DataFrame = {
     traceNote("Read path: Spark view")
     engine.execute(sel)
-  }
-
-  /** LWT's read of the row at full primary key `kv` (column → value, as
-    * the statement's cells carry them) of a scalar table — driver-local or
-    * file-backed, the same eligibility as a partition SELECT: the
-    * partition fold, then the addressed row's cells as column → value. */
-  private def lwtLocalRead(t: TableState,
-      kv: Map[String, Any]): Option[String => Any] = {
-    def cat(k: String): Any = CatalystTypeConverters
-      .createToCatalystConverter(logField(t, k).dataType)(kv(k))
-    val schema = foldSchema(t)
-    val nPk = t.partitionKeys.size
-    val ck = t.clusteringKeys.map(cat)
-    val ckOrd = t.clusteringKeys.map(k =>
-      PhysicalDataType.ordering(logField(t, k).dataType))
-    foldPartition(t, partitionLog(t, t.partitionKeys.map(cat))).find { r =>
-      ck.indices.forall(j => !r.isNullAt(nPk + j) && ckOrd(j).compare(
-        r.get(nPk + j, schema(nPk + j).dataType), ck(j)) == 0)
-    }.map { r =>
-      val cells = schema.fields.indices.map { i =>
-        val dt = schema(i).dataType
-        schema(i).name -> CatalystTypeConverters.createToScalaConverter(dt)(
-          if (r.isNullAt(i)) null else r.get(i, dt))
-      }.toMap
-      (n: String) => cells.getOrElse(n, null)
-    }
   }
 
   /** LWT condition check — the Paxos read phase collapsed to the single-
@@ -5768,7 +4767,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       val row: Option[String => Any] = keyVals match {
         case Some(kv) if scalarTable(t) && !forceSparkRead =>
           foldReads += 1
-          lwtLocalRead(t, kv)
+          store.rowAt(t, kv)
         case _ =>
           var v = view(dml.table)
           keyCols(t).foreach { k =>
@@ -5928,7 +4927,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       throw new CqlInvalidQueryException(
         "Cannot provide custom timestamp for conditional updates")
     if (!skipCondition && !conditionHolds(dml)) return false
-    mutationEpoch += 1
+    store.epoch += 1
     val t = tableState(dml.table)
     // counter mutations carry server timestamps only (upstream
     // "Cannot provide custom timestamp for counter updates")
@@ -6334,14 +5333,6 @@ object CqlSession {
   /** The largest catalog MERGE/UPDATE/DELETE delta a table with triggers
     * accepts: trigger replay collects the delta to the driver. */
   private[cql] val TriggerDeltaRowCap = 10000L
-
-  /** StructField metadata key carrying a vector column's declared dim. */
-  private[cql] val VectorDimKey = "cql_vector_dim"
-
-  /** A session temp dir removed on JVM exit — snapshot and bulk-load
-    * roots otherwise accumulate one tree per session per process. */
-  private[cql] def tempRoot(prefix: String): String =
-    graft.Tables.tempRoot(prefix)
 
   /** The CQL consistency-level names `CONSISTENCY` accepts
     * [U db/ConsistencyLevel.java]. */

@@ -466,7 +466,8 @@ private[spark] class GraftRowLevelOperation(session: CqlSession,
           // advisor): the executor-side segment writers must open the
           // staging FS with the same spark.hadoop.* settings/credentials
           // the driver resolved the prefix with, not a bare Configuration
-          private val stagingDir = session.newDeltaStagingDir(registryKey)
+          private val stagingDir =
+            session.store.newDeltaStagingDir(registryKey.toLowerCase)
           private val hconf = new GraftSerializableConf(
             GraftShim.sessionHadoopConf(session.sparkSession))
           // r18 single-write: the writers shape rows STRAIGHT into the
@@ -538,7 +539,7 @@ private[graft] class GraftSerializableConf(
   * timestamps, allocated on the driver BEFORE the job: deletes commit one
   * tick below upserts, which is what makes same-statement delete/upsert
   * key collisions resolve toward the upsert with no anti-join (see
-  * [[graft.cql.CqlSession.deltaShapePlan]]). */
+  * [[graft.storage.TableStore.deltaShapePlan]]). */
 private[graft] final case class GraftDeltaShapePlan(
     logSchema: StructType,
     fields: Array[GraftDeltaFieldSpec],

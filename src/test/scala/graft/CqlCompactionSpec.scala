@@ -219,8 +219,9 @@ class CqlCompactionSpec extends SparkSpec {
     val gens = s.execute("SELECT count(*) FROM system.compaction_history " +
       "WHERE columnfamily_name = 'du' ALLOW FILTERING").head().getLong(0)
     assert(gens === 4L)
-    val genDirs = Option(new java.io.File(
-      s.snapshotRootDir, "compacted_du").listFiles()).getOrElse(Array.empty)
+    val genDirs = Option(new java.io.File(s.store.dirFor(
+      graft.storage.DirKind.Compacted, "du", "", 0)).getParentFile
+      .listFiles()).getOrElse(Array.empty)
     assert(genDirs.length === 2, genDirs.mkString(", "))
     // snapshot bytes appear in the same row
     s.execute("SNAPSHOT du AS du_snap")
@@ -228,6 +229,17 @@ class CqlCompactionSpec extends SparkSpec {
       "system_views.disk_usage WHERE table_name = 'du' ALLOW FILTERING")
       .head().getLong(0)
     assert(snap > 0L)
+    // a bulk-loaded table reports the bytes of its load files before any
+    // COMPACT
+    s.exposeAsCatalog("graftdu")
+    s.execute("CREATE TABLE du_load (pk bigint PRIMARY KEY, v bigint)")
+    spark.sql("INSERT INTO graftdu.default.du_load " +
+      "SELECT id AS pk, id AS v FROM range(50)")
+    val loaded = s.execute("SELECT base_bytes, memtable_rows FROM " +
+      "system_views.disk_usage WHERE table_name = 'du_load' ALLOW FILTERING")
+      .head()
+    assert(loaded.getLong(0) > 0L)
+    assert(loaded.getLong(1) === 0L)
   }
 
   test("compaction_history records the fold; sstable_tasks is empty at " +

@@ -1214,4 +1214,59 @@ class GraftCatalogSpec extends SparkSpec {
     assert(freed > 0L,
       "the distributed delta fold must emit a CDC segment")
   }
+
+  test("two tables whose names differ only by the keyspace dot read " +
+    "their own catalog snapshots") {
+    val s = CqlSession(spark)
+    s.execute("CREATE KEYSPACE ks WITH replication = " +
+      "{'class': 'SimpleStrategy', 'replication_factor': 1}")
+    s.execute("CREATE TABLE ks.a_b (k bigint PRIMARY KEY, v text)")
+    s.execute("CREATE TABLE default.ks_a_b (k bigint PRIMARY KEY, v text)")
+    s.execute("INSERT INTO ks.a_b (k, v) VALUES (1, 'from ks.a_b')")
+    s.execute("INSERT INTO default.ks_a_b (k, v) VALUES (2, " +
+      "'from default.ks_a_b')")
+    s.exposeAsCatalog("graftns")
+    def read(t: String) = spark.sql(s"SELECT k, v FROM graftns.$t")
+      .collect().map(_.toString).toSeq
+    assert(read("ks.a_b") === Seq("[1,from ks.a_b]"))
+    assert(read("default.ks_a_b") === Seq("[2,from default.ks_a_b]"))
+    assert(read("ks.a_b") === Seq("[1,from ks.a_b]"))
+  }
+
+  test("epoch snapshots and bulk-load files are retired with one " +
+    "generation of grace") {
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE cat_bound (k bigint PRIMARY KEY, v bigint)")
+    s.exposeAsCatalog("graftbound")
+    spark.sql("INSERT INTO graftbound.default.cat_bound " +
+      "SELECT id AS k, id AS v FROM range(100)")
+    def dirOf(files: Array[String]) =
+      new java.io.File(new java.net.URI(files.head)).getParentFile
+    val loadDir = dirOf(s.view("cat_bound").inputFiles)
+    def table() = spark.table("graftbound.default.cat_bound")
+    def snapshotDir() = table().queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.collect {
+      case f: org.apache.spark.sql.execution.datasources.v2.FileScan =>
+        f.fileIndex.rootPaths.head
+    }.get
+    var held = table()
+    for (i <- 1 to 6) {
+      held = table()
+      s.execute(s"INSERT INTO cat_bound (k, v) VALUES (${1000 + i}, $i)")
+      assert(table().count() === 100L + i)
+      // this rendering's epoch snapshots: the live one and one in grace
+      val epochs = new java.io.File(snapshotDir().toUri.getPath).getParentFile
+        .listFiles()
+      assert(epochs.length <= 2, epochs.mkString(", "))
+    }
+    // a DataFrame analyzed one epoch back still reads its snapshot
+    assert(held.count() === 105L)
+    s.execute("COMPACT cat_bound")
+    assert(loadDir.isDirectory) // in the grace slot
+    s.execute("COMPACT cat_bound")
+    assert(!loadDir.exists())
+    assert(table().count() === 106L)
+  }
 }

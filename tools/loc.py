@@ -2,11 +2,12 @@
 """Count non-blank, non-comment source lines.
 
 Usage (from the repo root):
-    python3 tools/loc.py [file ...]
+    python3 tools/loc.py [file-or-directory ...]
 
 Prints the total over every `*.scala` file under `src/main`, then one line
-per file named on the command line. A line counts unless it is blank, a
-`//` line, or inside a `/* ... */` block that starts a line.
+per path named on the command line: a file's own count, or a directory's
+total over the `*.scala` files under it. A line counts unless it is blank,
+a `//` line, or inside a `/* ... */` block that starts a line.
 """
 import pathlib
 import sys
@@ -24,11 +25,17 @@ def count(path):
     return n
 
 
+def total(path):
+    p = pathlib.Path(path)
+    if p.is_dir():
+        return sum(count(f) for f in p.rglob("*.scala"))
+    return count(p)
+
+
 def main(argv):
-    total = sum(count(f) for f in pathlib.Path("src/main").rglob("*.scala"))
-    print(f"src/main {total}")
+    print(f"src/main {total('src/main')}")
     for f in argv:
-        print(f"{f} {count(f)}")
+        print(f"{f} {total(f)}")
 
 
 if __name__ == "__main__":
