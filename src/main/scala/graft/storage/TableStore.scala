@@ -754,8 +754,9 @@ private[graft] final class TableStore(spark: SparkSession) {
   /** Per-epoch parquet snapshot of a table's reconciled read view — the
     * flush/SSTable analogue the Spark catalog serves — per (table,
     * rendering): (epoch, dir, schema). Rewritten only when the mutation
-    * epoch moved; the epoch is part of the directory name so Spark-side
-    * file-index caches never see a mutated directory. */
+    * epoch moved, except by the table's own COMPACT ([[carrySnapshots]]);
+    * the epoch is part of the directory name so Spark-side file-index
+    * caches never see a mutated directory. */
   private val snapshotCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (Long, String, StructType)]()
 
@@ -779,6 +780,15 @@ private[graft] final class TableStore(spark: SparkSession) {
     retire((key, rendering), Option(prev).map(_._2).toSeq)
     (dir, df.schema)
   }
+
+  /** COMPACT moved `key` to `epoch` without changing its read view (the
+    * surviving subset reconciles to the same rows, [[compactedLog]]): its
+    * snapshots written at epoch `from` serve the new epoch as they are,
+    * so the next catalog read does not rebuild one. */
+  private def carrySnapshots(key: String, from: Long): Unit =
+    snapshotCache.replaceAll { (k, v) =>
+      if (k._1 == key && v._1 == from) (epoch, v._2, v._3) else v
+    }
 
   /** (entries, bytes on disk) of the live catalog snapshots. */
   def snapshotStats: (Long, Long) = {
@@ -844,10 +854,10 @@ private[graft] final class TableStore(spark: SparkSession) {
   /** COMPACT's fold and swap: fold the table's log to its surviving subset
     * ([[compactedLog]]), materialize it as one parquet segment (the
     * flushed-sstable analogue: bounds the driver-held pending rows AND the
-    * lineage depth), swap it in as the new base and retire the files the
-    * old base read. The task shows in `compactionTasks` while it runs and
-    * lands in `compactionHistory` stamped `stamp`; returns (rows in, rows
-    * out). */
+    * lineage depth), swap it in as the new base, keep the table's catalog
+    * snapshots and retire the files the old base read. The task shows in
+    * `compactionTasks` while it runs and lands in `compactionHistory`
+    * stamped `stamp`; returns (rows in, rows out). */
   def compact(key: String, t: TableState, ks: String, tbl: String,
       stamp: Long): (Long, Long) = {
     val lg = log(t)
@@ -869,6 +879,7 @@ private[graft] final class TableStore(spark: SparkSession) {
       epoch += 1
       tables(key) = t.copy(base = compacted, pending = Vector.empty,
         localOnly = false)
+      carrySnapshots(key, epoch - 1)
       retireBase(key)
       live(key) = Seq(dir)
       if (compactionHistory.size >= CompactionHistoryMax)

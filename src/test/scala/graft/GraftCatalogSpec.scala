@@ -1263,8 +1263,11 @@ class GraftCatalogSpec extends SparkSpec {
     }
     // a DataFrame analyzed one epoch back still reads its snapshot
     assert(held.count() === 105L)
+    val current = snapshotDir()
     s.execute("COMPACT cat_bound")
     assert(loadDir.isDirectory) // in the grace slot
+    // COMPACT keeps the table's read view, so its snapshot serves on
+    assert(snapshotDir() === current)
     s.execute("COMPACT cat_bound")
     assert(!loadDir.exists())
     assert(table().count() === 106L)
