@@ -1,9 +1,10 @@
 package graft.cql
 
 import graft.operators.CassandraModel
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 
 /** A table registered with the CQL façade: the backing DataFrame plus its
   * primary-key declaration (partition + clustering columns — the part of the
@@ -62,6 +63,25 @@ object CqlTable {
       counterKeys, indexedColumns, clusteringDesc, annSimilarity)
 }
 
+/** A system virtual table: its schema and keys, and the builder of its
+  * rows, which runs each time a statement reads the table — upstream's
+  * `AbstractVirtualTable.data()` [U db/virtual]. */
+final class VirtualTable(val schema: StructType,
+    val partitionKeys: Seq[String], val clusteringKeys: Seq[String],
+    data: () => DataFrame) {
+  /** The table over rows built now. */
+  def read: CqlTable = CqlTable(data(), partitionKeys, clusteringKeys)
+}
+
+object VirtualTable {
+  /** A virtual table whose rows are built on the driver. */
+  def apply(spark: SparkSession, schema: StructType,
+      partitionKeys: Seq[String], clusteringKeys: Seq[String] = Nil)(
+      rows: => Seq[Row]): VirtualTable =
+    new VirtualTable(schema, partitionKeys, clusteringKeys,
+      () => spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+}
+
 /** Raised for queries upstream Cassandra would reject (most importantly the
   * ALLOW FILTERING guardrail) — same user experience as
   * `InvalidRequestException` [U cql3/statements/SelectStatement.java,
@@ -95,7 +115,9 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
       * lowercase name → compiled impl. Dispatched after the builtins. */
     userFns: Map[String, CqlUserFunction] = Map.empty,
     /** session-registered aggregates (CQL `CREATE AGGREGATE`). */
-    userAggs: Map[String, CqlUserFunction] = Map.empty) {
+    userAggs: Map[String, CqlUserFunction] = Map.empty,
+    /** the system virtual tables, their rows built per read */
+    virtual: Map[String, VirtualTable] = Map.empty) {
 
   /** Is this selector an aggregate, counting session-registered UDAs
     * (the AST's own isAggregate knows only the builtin five)? */
@@ -114,10 +136,18 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
 
   def execute(cql: String): DataFrame = execute(CqlParser.parse(cql))
 
-  /** The engine's full table registry (user tables, MVs, system virtual
-    * tables) — consumed by the Spark catalog bridge
-    * [[graft.spark.GraftCatalog]]. */
-  private[graft] def catalogTables: Map[String, CqlTable] = catalog
+  /** Every table name the engine resolves: user tables, MVs and the
+    * system virtual tables. */
+  private[cql] def tableNames: Set[String] = catalog.keySet ++ virtual.keySet
+
+  /** The table `name` names; a virtual table over rows built now. */
+  private[cql] def table(name: String): Option[CqlTable] = {
+    val key = name.toLowerCase
+    catalog.get(key).orElse(virtual.get(key).map(_.read))
+  }
+
+  private def resolve(name: String): CqlTable = table(name).getOrElse(
+    throw new CqlInvalidQueryException(s"unknown table $name"))
 
   /** O4 paging — the driver page protocol (upstream
     * `service/pager/QueryPager` [U]): a page "token" is nothing but the
@@ -136,8 +166,7 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
   def executePaged(cql: String, fetchSize: Int): Iterator[DataFrame] = {
     require(fetchSize > 0, "fetchSize must be positive")
     val sel = CqlParser.parse(cql)
-    val table = catalog.getOrElse(sel.table.toLowerCase,
-      throw new CqlInvalidQueryException(s"unknown table ${sel.table}"))
+    val table = resolve(sel.table)
     val cks = table.clusteringKeys
     if (sel.selectors.exists(isAgg) || sel.groupBy.nonEmpty ||
         sel.distinct || sel.limit.nonEmpty || sel.perPartitionLimit.nonEmpty ||
@@ -266,9 +295,7 @@ class CqlEngine(spark: SparkSession, catalog: Map[String, CqlTable],
 
   /** Run an already-parsed (e.g. prepared-and-bound) SELECT. */
   private[cql] def execute(sel: CqlSelect): DataFrame =
-    execute(sel, catalog.getOrElse(sel.table.toLowerCase,
-      throw new CqlInvalidQueryException(s"unknown table ${sel.table}")),
-      Nil)
+    execute(sel, resolve(sel.table), Nil)
 
   /** Run `sel` over `table`, which may stand in for the registered table
     * (the session's one-partition fold). `applied` lists predicates of

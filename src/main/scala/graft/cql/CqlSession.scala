@@ -954,16 +954,17 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   def view(table: String, nowUs: Option[Long] = None): DataFrame =
     store.viewOf(tableState(table), nowUs)
 
-  /** cqlsh `SOURCE` analogue: run a multi-statement CQL script (statements
-    * separated by `;`, `--` line comments, `BEGIN BATCH … APPLY BATCH`
-    * blocks kept atomic). Returns one result per executed statement. */
+  /** cqlsh `SOURCE` analogue: run a multi-statement CQL script
+    * ([[CqlSession.splitCqlScript]]). Returns one result per executed
+    * statement. */
   def executeScript(script: String): Seq[DataFrame] =
-    CqlSession.splitStatements(script).map(execute)
+    CqlSession.splitCqlScript(script).map(execute)
 
   // catalog construction builds a reconciled-view plan per table and
   // compiles every MV definition — O(tables + views) analysis work. Cache
   // it per mutation epoch so statement N+1 reuses statement N's engine
-  // unless something was actually written.
+  // unless something was actually written. The system tables are not
+  // part of it: they build their rows per read ([[systemTables]]).
   private var engineCache: Option[(Long, CqlEngine)] = None
 
   /** The read engine over the current session state — exposes the
@@ -1008,8 +1009,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     (keyspaces.toSeq.filterNot(SystemKeyspaces) :+ UserKeyspace)
       .distinct.sorted
   private[graft] def systemKeyspaces: Set[String] = SystemKeyspaces
-  private[graft] def engineCatalog: Map[String, CqlTable] =
-    engine.catalogTables
+  /** Every table name a read resolves (user tables, MVs, system tables). */
+  private[graft] def tableNames: Set[String] = engine.tableNames
   /** Is `key` a base table the catalog write bridge may append to?
     * Materialized views and virtual tables read through the catalog but
     * are derived/engine-owned — they must advertise as read-only so a
@@ -1036,11 +1037,9 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * rendering, after the same read enforcement as a CQL SELECT. */
   private[graft] def catalogSnapshot(table: String): (String, StructType) = {
     val key = table.toLowerCase
-    // the runtime virtual tables (settings/clients) change without a
-    // mutation epoch bump — never serve them from the snapshot cache
-    val volatileKey = key.startsWith("system_views.") ||
-      key.startsWith("system_traces.") || key == "system.size_estimates"
-    if (key == "system.size_estimates") wantSizeEstimates = true
+    // a system table's rows are built per read: never served from the
+    // per-epoch snapshot cache
+    val virtual = systemTables.contains(key)
     // 5.0 DDM on the DSv2 bridge (r11): the catalog read path must honor
     // attached column masks exactly like a CQL SELECT — a Spark-side
     // `SELECT name FROM cat.ks.pii` under a role without UNMASK must not
@@ -1055,13 +1054,12 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     val maskedView = tableMasks.nonEmpty &&
       !hasPermBool("unmask", authRes(key))
     val rendering = if (maskedView) "masked" else "clear"
-    store.cachedSnapshot(key, rendering).filter(_ => !volatileKey) match {
+    store.cachedSnapshot(key, rendering).filter(_ => !virtual) match {
       case Some(hit) =>
         checkRead(key) // a cache hit must not skip enforcement
         hit
       case None =>
-        if (volatileKey) engineCache = None // rebuild → live conf/role rows
-        val t = engineCatalog.getOrElse(key,
+        val t = engine.table(key).getOrElse(
           throw new CqlInvalidQueryException(s"unknown table $table"))
         // catalog reads carry the session's authenticated role: same
         // SELECT enforcement (and system-keyspace carve-out) as the CQL
@@ -1080,7 +1078,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
               case None => col(s"`${f.name}`")
             }
           }: _*)
-        store.writeSnapshot(key, rendering, volatileKey, df)
+        store.writeSnapshot(key, rendering, virtual, df)
     }
   }
 
@@ -1146,8 +1144,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       name -> CqlTable(
         baseEngine.execute(sel.copy(allowFiltering = true)), pk, ck)
     }.toMap
-    new CqlEngine(spark, catalog ++ mvCatalog ++ systemSchemaCatalog,
-      userFns, userAggs)
+    new CqlEngine(spark, catalog ++ mvCatalog, userFns, userAggs, systemTables)
   }
 
   /** Compile a CREATE FUNCTION body to a Column transform. The body must
@@ -1327,19 +1324,27 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     s"CREATE TYPE $name (\n${fields.mkString(",\n")}\n)"
   }
 
-  /** `system_schema.{keyspaces,tables,columns}` as queryable tables —
-    * rebuilt with the engine on every schema epoch, so a driver-style
-    * catalog read always sees the current session schema. Upstream
+  /** The system tables, in one registry [U db/virtual/
+    * VirtualKeyspaceRegistry]: each entry builds its rows when a statement
+    * reads it, so every read — text, prepared, paged or through the Spark
+    * catalog — sees the session as it is, and no engine build pays for a
+    * table nobody reads. `system_virtual_schema` describes the virtual
+    * tables from the schemas served here. */
+  private lazy val systemTables: Map[String, VirtualTable] = {
+    val virtuals = systemLocalTables ++ systemViewsTables ++
+      systemTracesTables ++ store.storageViews(k => (keyspaceOf(k), tableOf(k)))
+    systemSchemaTables ++ virtuals ++ systemVirtualSchemaTables(virtuals)
+  }
+
+  /** `system_schema.{keyspaces,tables,columns}` as queryable tables, so a
+    * driver-style catalog read sees the current session schema. Upstream
     * column names and kinds [U schema/SchemaKeyspace.java]. */
-  private def systemSchemaCatalog: Map[String, CqlTable] = {
-    import scala.jdk.CollectionConverters._
-    def df(rows: Seq[Row], schema: StructType) =
-      spark.createDataFrame(rows.asJava, schema)
+  private def systemSchemaTables: Map[String, VirtualTable] = {
     val ksSchema = StructType(Seq(
       StructField("keyspace_name", StringType),
       StructField("durable_writes", BooleanType),
       StructField("replication", MapType(StringType, StringType))))
-    val ksRows = (keyspaces.toSeq :+ UserKeyspace).distinct.sorted.map { k =>
+    def ksRows = (keyspaces.toSeq :+ UserKeyspace).distinct.sorted.map { k =>
       // virtual keyspaces carry no replication params (upstream lists
       // them in system_virtual_schema only; the flat listing here keeps
       // DESCRIBE KEYSPACES serving one table)
@@ -1352,7 +1357,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("keyspace_name", StringType),
       StructField("table_name", StringType),
       StructField("default_time_to_live", LongType)))
-    val tRows = state.toSeq.sortBy(_._1).map { case (n, t) =>
+    def tRows = state.toSeq.sortBy(_._1).map { case (n, t) =>
       Row(keyspaceOf(n), tableOf(n), t.defaultTtl.getOrElse(0L))
     }
     val cSchema = StructType(Seq(
@@ -1363,7 +1368,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("kind", StringType),
       StructField("position", IntegerType),
       StructField("type", StringType)))
-    val cRows = state.toSeq.sortBy(_._1).flatMap { case (n, t) =>
+    def cRows = state.toSeq.sortBy(_._1).flatMap { case (n, t) =>
       t.schema.fields.toSeq.map { f =>
         val pkPos = t.partitionKeys.indexWhere(_.equalsIgnoreCase(f.name))
         val ckPos = t.clusteringKeys.indexWhere(_.equalsIgnoreCase(f.name))
@@ -1395,7 +1400,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       // map (options['target']), never as a top-level column — strict
       // -schema drivers reconstruct CREATE INDEX from the map
       StructField("options", MapType(StringType, StringType))))
-    val iRows = indexReg.toSeq.sortBy(_._1).map {
+    def iRows = indexReg.toSeq.sortBy(_._1).map {
       case (n, (tbl, c0, sai, target)) =>
         // upstream target strings read `values(m)` / `keys(m)` / … for
         // collection indexes and the bare column name otherwise
@@ -1410,14 +1415,14 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("keyspace_name", StringType),
       StructField("view_name", StringType),
       StructField("base_table_name", StringType)))
-    val vRows = mvReg.toSeq.sortBy(_._1).map { case (n, (sel, _, _)) =>
+    def vRows = mvReg.toSeq.sortBy(_._1).map { case (n, (sel, _, _)) =>
       Row(keyspaceOf(n), tableOf(n), tableOf(sel.table.toLowerCase))
     }
     val tySchema = StructType(Seq(
       StructField("keyspace_name", StringType),
       StructField("type_name", StringType),
       StructField("field_names", StringType))) // comma-joined (upstream:
-    val tyRows = udtReg.toSeq.sortBy(_._1).map { case (n, st) => // list)
+    def tyRows = udtReg.toSeq.sortBy(_._1).map { case (n, st) => // list)
       Row(keyspaceOf(n), tableOf(n), st.fieldNames.mkString(","))
     }
     val fSchema = StructType(Seq(
@@ -1428,7 +1433,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("language", StringType),
       StructField("body", StringType),
       StructField("called_on_null_input", BooleanType)))
-    val fRows = fnReg.toSeq.sortBy(_._1).map { case (n, d) =>
+    def fRows = fnReg.toSeq.sortBy(_._1).map { case (n, d) =>
       Row(keyspaceOf(n), tableOf(n),
         d.argTypes.map(typeNameOf(_, Set.empty)).mkString(","),
         typeNameOf(d.returnType, Set.empty), d.language, d.body,
@@ -1442,7 +1447,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("state_type", StringType),
       StructField("final_func", StringType),
       StructField("initcond", StringType)))
-    val aRows = aggReg.toSeq.sortBy(_._1).map { case (n, d) =>
+    def aRows = aggReg.toSeq.sortBy(_._1).map { case (n, d) =>
       Row(keyspaceOf(n), tableOf(n),
         d.argTypes.map(typeNameOf(_, Set.empty)).mkString(","),
         d.sfunc, typeNameOf(d.stype, Set.empty), d.finalFunc.orNull,
@@ -1453,7 +1458,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("table_name", StringType),
       StructField("trigger_name", StringType),
       StructField("options", MapType(StringType, StringType))))
-    val trRows = triggerReg.toSeq.sortBy(_._1).map {
+    def trRows = triggerReg.toSeq.sortBy(_._1).map {
       case ((tbl, n), (clazz, _)) =>
         Row(keyspaceOf(tbl), tableOf(tbl), n, Map("class" -> clazz))
     }
@@ -1465,56 +1470,44 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("column_name", StringType),
       StructField("function_name", StringType),
       StructField("function_arguments", ArrayType(StringType))))
-    val cmRows = maskReg.toSeq.sortBy { case ((t, c0), _) => (t, c0) }.map {
+    def cmRows = maskReg.toSeq.sortBy { case ((t, c0), _) => (t, c0) }.map {
       case ((tbl, c0), m) =>
         Row(keyspaceOf(tbl), tableOf(tbl), c0, m.fn,
           m.args.map(String.valueOf(_)))
     }
+    // keyed by keyspace_name, then the clustering keys
+    def table(schema: StructType, keys: String*)(rows: => Seq[Row]) =
+      VirtualTable(spark, schema, keys.take(1), keys.drop(1))(rows)
     Map(
-      "system_schema.column_masks" ->
-        CqlTable(df(cmRows, cmSchema), Seq("keyspace_name"),
-          Seq("table_name", "column_name")),
-      "system_schema.keyspaces" ->
-        CqlTable(df(ksRows, ksSchema), Seq("keyspace_name")),
+      "system_schema.column_masks" -> table(cmSchema, "keyspace_name",
+        "table_name", "column_name")(cmRows),
+      "system_schema.keyspaces" -> table(ksSchema, "keyspace_name")(ksRows),
       "system_schema.tables" ->
-        CqlTable(df(tRows, tSchema), Seq("keyspace_name"), Seq("table_name")),
-      "system_schema.columns" ->
-        CqlTable(df(cRows, cSchema), Seq("keyspace_name"),
-          Seq("table_name", "column_name")),
-      "system_schema.indexes" ->
-        CqlTable(df(iRows, iSchema), Seq("keyspace_name"),
-          Seq("table_name", "index_name")),
+        table(tSchema, "keyspace_name", "table_name")(tRows),
+      "system_schema.columns" -> table(cSchema, "keyspace_name",
+        "table_name", "column_name")(cRows),
+      "system_schema.indexes" -> table(iSchema, "keyspace_name",
+        "table_name", "index_name")(iRows),
       "system_schema.views" ->
-        CqlTable(df(vRows, vSchema), Seq("keyspace_name"), Seq("view_name")),
+        table(vSchema, "keyspace_name", "view_name")(vRows),
       "system_schema.types" ->
-        CqlTable(df(tyRows, tySchema), Seq("keyspace_name"),
-          Seq("type_name")),
+        table(tySchema, "keyspace_name", "type_name")(tyRows),
       "system_schema.functions" ->
-        CqlTable(df(fRows, fSchema), Seq("keyspace_name"),
-          Seq("function_name")),
+        table(fSchema, "keyspace_name", "function_name")(fRows),
       "system_schema.aggregates" ->
-        CqlTable(df(aRows, aSchema), Seq("keyspace_name"),
-          Seq("aggregate_name")),
-      "system_schema.triggers" ->
-        CqlTable(df(trRows, trSchema), Seq("keyspace_name"),
-          Seq("table_name", "trigger_name"))) ++ {
-      val virtuals =
-        systemLocalCatalog ++ systemViewsCatalog ++ systemTracesCatalog
-      virtuals ++ systemVirtualSchemaCatalog(virtuals)
-    }
+        table(aSchema, "keyspace_name", "aggregate_name")(aRows),
+      "system_schema.triggers" -> table(trSchema, "keyspace_name",
+        "table_name", "trigger_name")(trRows))
   }
 
   /** `system_virtual_schema.{keyspaces,tables,columns}` — the 4.x/5.0
     * keyspace DESCRIBING the virtual tables themselves [U db/virtual/
     * VirtualSchemaKeyspace.java]: drivers read it to introspect
     * `system_views` the way they read `system_schema` for user tables.
-    * Derived from the ACTUAL registered virtual catalogs (names and Spark
-    * schemas), so it can never drift from what is served. */
-  private def systemVirtualSchemaCatalog(
-      virtuals: Map[String, CqlTable]): Map[String, CqlTable] = {
-    import scala.jdk.CollectionConverters._
-    def df(rows: Seq[Row], schema: StructType) =
-      spark.createDataFrame(rows.asJava, schema)
+    * Derived from the registry's virtual tables (names and the schemas
+    * their rows are built in), so it can never drift from what is served. */
+  private def systemVirtualSchemaTables(
+      virtuals: Map[String, VirtualTable]): Map[String, VirtualTable] = {
     val entries = virtuals.keys.toSeq.sorted.map { k =>
       val Array(ks, t) = k.split("\\.", 2)
       (ks, t, virtuals(k))
@@ -1535,7 +1528,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("position", IntegerType),
       StructField("type", StringType)))
     val cRows = entries.flatMap { case (ks, t, ct) =>
-      ct.df.schema.fields.toSeq.map { f =>
+      ct.schema.fields.toSeq.map { f =>
         val pkPos = ct.partitionKeys.indexWhere(_.equalsIgnoreCase(f.name))
         val ckPos = ct.clusteringKeys.indexWhere(_.equalsIgnoreCase(f.name))
         val kind =
@@ -1549,13 +1542,11 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     }
     Map(
       "system_virtual_schema.keyspaces" ->
-        CqlTable(df(ksRows, ksSchema), Seq("keyspace_name")),
-      "system_virtual_schema.tables" ->
-        CqlTable(df(tRows, tSchema), Seq("keyspace_name"),
-          Seq("table_name")),
-      "system_virtual_schema.columns" ->
-        CqlTable(df(cRows, cSchema), Seq("keyspace_name"),
-          Seq("table_name", "column_name")))
+        VirtualTable(spark, ksSchema, Seq("keyspace_name"))(ksRows),
+      "system_virtual_schema.tables" -> VirtualTable(spark, tSchema,
+        Seq("keyspace_name"), Seq("table_name"))(tRows),
+      "system_virtual_schema.columns" -> VirtualTable(spark, cSchema,
+        Seq("keyspace_name"), Seq("table_name", "column_name"))(cRows))
   }
 
   /** `system_views.settings` / `system_views.clients` — the 4.x runtime
@@ -1563,15 +1554,13 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * `settings` maps the LIVE Spark conf (this engine's runtime
     * configuration — the natural analogue of cassandra.yaml settings);
     * `clients` reports this session's connection-level state: the
-    * authenticated role and the statements it has issued. Both rebuild
-    * with the engine, so reads see current values. */
-  private def systemViewsCatalog: Map[String, CqlTable] = {
+    * authenticated role and the statements it has issued. Like every
+    * registry entry, their rows are built when a statement reads them. */
+  private def systemViewsTables: Map[String, VirtualTable] = {
     import scala.jdk.CollectionConverters._
     val setSchema = StructType(Seq(
       StructField("name", StringType),
       StructField("value", StringType)))
-    val setRows = spark.conf.getAll.toSeq.sortBy(_._1)
-      .map { case (k, v) => Row(k, v) }
     val cliSchema = StructType(Seq(
       StructField("address", StringType),
       StructField("port", IntegerType),
@@ -1580,8 +1569,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("protocol_version", IntegerType),
       StructField("username", StringType),
       StructField("request_count", LongType)))
-    val cliRows = Seq(Row("127.0.0.1", 9042, "ready", "graft-session", 5,
-      currentRole, requestCount))
     // `thread_pools` [U db/virtual/ThreadPoolsTable]: upstream reports the
     // stage pools (ReadStage, MutationStage, CompactionExecutor…); the
     // engine's execution pool is the Spark task scheduler — report its
@@ -1592,14 +1579,16 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("active_tasks", LongType),
       StructField("pending_tasks", LongType),
       StructField("completed_tasks", LongType)))
-    val tracker = spark.sparkContext.statusTracker
-    val stages = tracker.getActiveStageIds.toSeq
-      .flatMap(id => Option(tracker.getStageInfo(id)).flatten)
-    val active = stages.map(_.numActiveTasks.toLong).sum
-    val pending = stages.map(s0 => (s0.numTasks - s0.numActiveTasks -
-      s0.numCompletedTasks).toLong.max(0L)).sum
-    val tpRows = Seq(Row("SparkTaskScheduler", active, pending,
-      CqlSession.completedTaskCount))
+    def tpRows = {
+      val tracker = spark.sparkContext.statusTracker
+      val stages = tracker.getActiveStageIds.toSeq
+        .flatMap(id => Option(tracker.getStageInfo(id)).flatten)
+      val active = stages.map(_.numActiveTasks.toLong).sum
+      val pending = stages.map(s0 => (s0.numTasks - s0.numActiveTasks -
+        s0.numCompletedTasks).toLong.max(0L)).sum
+      Seq(Row("SparkTaskScheduler", active, pending,
+        CqlSession.completedTaskCount))
+    }
     // `caches` [U db/virtual/CachesTable]: upstream reports the key/row/
     // counter caches; the engine's caches are the per-epoch catalog
     // snapshots (parquet bytes on disk) and the per-epoch engine plan
@@ -1608,11 +1597,12 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("name", StringType),
       StructField("entry_count", LongType),
       StructField("size_bytes", LongType)))
-    val (snapCount, snapBytes) = store.snapshotStats
-    val caRows = Seq(
-      Row("catalog_snapshots", snapCount, snapBytes),
-      Row("engine_plan_cache",
-        engineCache.count(_._1 == store.epoch).toLong, 0L))
+    def caRows = {
+      val (snapCount, snapBytes) = store.snapshotStats
+      Seq(Row("catalog_snapshots", snapCount, snapBytes),
+        Row("engine_plan_cache",
+          engineCache.count(_._1 == store.epoch).toLong, 0L))
+    }
     // `audit_log` [U audit/AuditLogManager]: role-attributed per-statement
     // records (category, success, error class), ring-buffered; `queries`
     // [U db/virtual/QueriesTable]: the LIVE in-flight statements — a
@@ -1630,37 +1620,38 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("role", StringType),
       StructField("running_micros", LongType),
       StructField("task", StringType)))
-    val nowNs = System.nanoTime()
-    val qRows = inFlight.asScala.toSeq.sortBy(_._1).map {
-      case (tid, (stmt, role, t0)) =>
-        Row(tid, role, (nowNs - t0) / 1000L, stmt)
+    def qRows = {
+      val nowNs = System.nanoTime()
+      inFlight.asScala.toSeq.sortBy(_._1).map {
+        case (tid, (stmt, role, t0)) =>
+          Row(tid, role, (nowNs - t0) / 1000L, stmt)
+      }
     }
     Map(
-      "system_views.settings" -> CqlTable(
-        spark.createDataFrame(setRows.asJava, setSchema), Seq("name")),
-      "system_views.clients" -> CqlTable(
-        spark.createDataFrame(cliRows.asJava, cliSchema),
-        Seq("address"), Seq("port")),
-      "system_views.thread_pools" -> CqlTable(
-        spark.createDataFrame(tpRows.asJava, tpSchema), Seq("name")),
-      "system_views.caches" -> CqlTable(
-        spark.createDataFrame(caRows.asJava, caSchema), Seq("name")),
-      "system_views.audit_log" -> CqlTable(
-        spark.createDataFrame(auditRows.toSeq.asJava, auSchema),
-        Seq("seq")),
-      "system_views.queries" -> CqlTable(
-        spark.createDataFrame(qRows.asJava, qSchema), Seq("thread_id"))) ++
-      store.storageViews(k => (keyspaceOf(k), tableOf(k)))
+      "system_views.settings" -> VirtualTable(spark, setSchema, Seq("name"))(
+        spark.conf.getAll.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }),
+      "system_views.clients" -> VirtualTable(spark, cliSchema,
+          Seq("address"), Seq("port")) {
+        Seq(Row("127.0.0.1", 9042, "ready", "graft-session", 5,
+          currentRole, requestCount))
+      },
+      "system_views.thread_pools" ->
+        VirtualTable(spark, tpSchema, Seq("name"))(tpRows),
+      "system_views.caches" ->
+        VirtualTable(spark, caSchema, Seq("name"))(caRows),
+      "system_views.audit_log" ->
+        VirtualTable(spark, auSchema, Seq("seq"))(auditRows.toSeq),
+      "system_views.queries" ->
+        VirtualTable(spark, qSchema, Seq("thread_id"))(qRows))
   }
 
   /** `system_traces.{sessions,events}` — the coordinator trace rows
     * `TRACING ON` records [U tracing/TraceKeyspace.java]: upstream column
     * names and meanings; `event_id` is a zero-padded sequence (time-
     * ordered like upstream's timeuuid), `source_elapsed` is real measured
-    * µs from statement start. Rebuilt with the engine on every read (the
-    * volatile-snapshot path), so a client sees its latest statements. */
-  private def systemTracesCatalog: Map[String, CqlTable] = {
-    import scala.jdk.CollectionConverters._
+    * µs from statement start. Built per read from the trace buffers, so a
+    * client sees its latest statements. */
+  private def systemTracesTables: Map[String, VirtualTable] = {
     val sSchema = StructType(Seq(
       StructField("session_id", StringType),
       StructField("client", StringType),
@@ -1678,12 +1669,10 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("source_elapsed", IntegerType),
       StructField("thread", StringType)))
     Map(
-      "system_traces.sessions" -> CqlTable(
-        spark.createDataFrame(traceSessions.toSeq.asJava, sSchema),
-        Seq("session_id")),
-      "system_traces.events" -> CqlTable(
-        spark.createDataFrame(traceEvents.toSeq.asJava, eSchema),
-        Seq("session_id"), Seq("event_id")))
+      "system_traces.sessions" -> VirtualTable(spark, sSchema,
+        Seq("session_id"))(traceSessions.toSeq),
+      "system_traces.events" -> VirtualTable(spark, eSchema,
+        Seq("session_id"), Seq("event_id"))(traceEvents.toSeq))
   }
 
   /** `system.local` / `system.peers` — the first thing every driver reads
@@ -1691,8 +1680,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     * engine), an empty peer set (single-engine: there is no ring to
     * discover); partitioner name matches the Murmur3 tokens `token()`
     * actually computes. */
-  private def systemLocalCatalog: Map[String, CqlTable] = {
-    import scala.jdk.CollectionConverters._
+  private def systemLocalTables: Map[String, VirtualTable] = {
     val lSchema = StructType(Seq(
       StructField("key", StringType),
       StructField("cluster_name", StringType),
@@ -1710,45 +1698,17 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       StructField("data_center", StringType),
       StructField("rack", StringType),
       StructField("release_version", StringType)))
-    // `compaction_history` [U db/SystemKeyspace.compaction_history]:
     val psSchema = StructType(Seq(
       StructField("prepared_id", StringType),
       StructField("logged_keyspace", StringType),
       StructField("query_string", StringType)))
-    val psRows = preparedReg.toSeq.map { case ((id, ks), text) =>
-      Row(id, ks, text)
-    }
     Map(
-      "system.local" ->
-        CqlTable(spark.createDataFrame(lRows.asJava, lSchema), Seq("key")),
+      "system.local" -> VirtualTable(spark, lSchema, Seq("key"))(lRows),
       "system.prepared_statements" ->
-        CqlTable(spark.createDataFrame(psRows.asJava, psSchema),
-          Seq("prepared_id")),
-      "system.peers" ->
-        CqlTable(spark.createDataFrame(
-          Seq.empty[Row].asJava, pSchema), Seq("peer"))) ++ sizeEstimates
-  }
-
-  /** `system.size_estimates` [U db/SystemKeyspace.java] — what the Spark
-    * connector (and every token-aware bulk reader) queries to plan its
-    * splits. Single-engine: one row per table covering the full ring
-    * (range (MIN, MIN] = wraparound-everything, upstream's single-range
-    * form). `partitions_count` is computed LAZILY from the live view (the
-    * plan runs only when the virtual table is actually queried);
-    * `mean_partition_size` divides the optimizer's size estimate by it —
-    * an estimate feeding an estimator, which is exactly the upstream
-    * contract (sstable-metadata guesses, refreshed periodically). */
-  /** Set by the read paths just before forcing an engine rebuild: the
-    * size-estimate stats (a Catalyst optimize per table) are only worth
-    * computing when `system.size_estimates` is actually being SELECTed —
-    * an eager compute per mutation epoch taxed every first-statement-
-    * after-write with O(tables) optimizer runs. Reset after each build. */
-  private var wantSizeEstimates = false
-
-  private def sizeEstimates: Map[String, CqlTable] = {
-    val want = wantSizeEstimates
-    wantSizeEstimates = false
-    store.sizeEstimates(k => (keyspaceOf(k), tableOf(k)), want)
+        VirtualTable(spark, psSchema, Seq("prepared_id")) {
+          preparedReg.toSeq.map { case ((id, ks), text) => Row(id, ks, text) }
+        },
+      "system.peers" -> VirtualTable(spark, pSchema, Seq("peer"))(Nil))
   }
 
   /** cqlsh `COPY TO/FROM` as a statement — upstream it is a client-side
@@ -2395,9 +2355,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   private[cql] def runSelect(sel: CqlSelect): DataFrame = {
     checkRead(sel.table)
     guardAllowFiltering(sel)
-    if (sel.table.equalsIgnoreCase("system.size_estimates")) {
-      wantSizeEstimates = true; engineCache = None
-    }
     val masks = masksFor(sel.table)
     if (masks.isEmpty) partitionRead(sel).getOrElse(viewRead(sel))
     else if (hasPermBool("unmask", authRes(sel.table))) viewRead(sel)
@@ -2745,46 +2702,6 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
     p
   }
 
-  /** Split a CQL script on statement-terminating semicolons — quote-aware
-    * (`'…''…'` escapes) with `--` and `//` line comments stripped, the
-    * subset cqlsh's own splitter handles for scripts. */
-  private[graft] def splitCqlScript(text: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < text.length) {
-      val ch = text.charAt(i)
-      if (inStr) {
-        cur.append(ch)
-        if (ch == '\'') {
-          if (i + 1 < text.length && text.charAt(i + 1) == '\'') {
-            cur.append('\''); i += 1
-          } else inStr = false
-        }
-      } else ch match {
-        case '\'' => inStr = true; cur.append(ch)
-        case ';' =>
-          val st = cur.toString.trim
-          if (st.nonEmpty) out += st
-          cur.clear()
-        // a comment reads as WHITESPACE, like cqlsh: emit one space so
-        // "t--note\nWHERE" splits into "t WHERE", not the glued "tWHERE"
-        case '-' if i + 1 < text.length && text.charAt(i + 1) == '-' =>
-          while (i < text.length && text.charAt(i) != '\n') i += 1
-          cur.append(' ')
-        case '/' if i + 1 < text.length && text.charAt(i + 1) == '/' =>
-          while (i < text.length && text.charAt(i) != '\n') i += 1
-          cur.append(' ')
-        case c => cur.append(c)
-      }
-      i += 1
-    }
-    val last = cur.toString.trim
-    if (last.nonEmpty) out += last
-    out.result()
-  }
-
   private val preparedReg =
     scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
 
@@ -2871,8 +2788,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
   // the engine's session analogue is the cqlsh-style toggle `AUDIT
   // ON|OFF` (same shape as TRACING). Records ring-buffer at
   // [[CqlSession.TraceCap]] and serve through
-  // `system_views.audit_log` — the volatile-snapshot path, so reads are
-  // always current. A statement's row is appended AFTER it completes
+  // `system_views.audit_log`, whose rows are built per read, so reads
+  // are always current. A statement's row is appended AFTER it completes
   // (with success/error), so an audit_log read never contains itself.
   private var auditOn = false
   private var auditSeq = 0L
@@ -3342,7 +3259,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
           throw new CqlInvalidQueryException(
             s"SOURCE: cannot read $file: ${e.getMessage}") }
       import scala.jdk.CollectionConverters._
-      val rows = splitCqlScript(text).zipWithIndex.map { case (st, i) =>
+      val statements = CqlSession.splitCqlScript(text)
+      val rows = statements.zipWithIndex.map { case (st, i) =>
         val err = try { execute(st); null }
           catch { case scala.util.control.NonFatal(e) =>
             e.getClass.getSimpleName }
@@ -3447,18 +3365,8 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
       .getOrElse("").toLowerCase
     kw match {
       case "select" =>
-        // parse ONCE at the boundary: the current keyspace binds here,
-        // and the volatile-table rebuild decision reads the PARSED target
-        // (not a substring of the text — the cql12-era wart)
-        val sel0 = CqlParser.parse(trimmed)
-        val sel = canonSelect(sel0)
-        // the runtime virtual tables (settings/clients) change without a
-        // mutation epoch bump — rebuild so the read sees live values
-        val target = sel.table.toLowerCase
-        if (target.startsWith("system_views.") ||
-            target.startsWith("system_traces."))
-          engineCache = None
-        runSelect(sel)
+        // parse ONCE at the boundary: the current keyspace binds here
+        runSelect(canonSelect(CqlParser.parse(trimmed)))
       case "create" | "drop" | "alter"
           if secondKw == "role" || secondKw == "user" =>
         runAuth(CqlParser.parseAuth(trimmed))
@@ -4706,7 +4614,7 @@ class CqlSession(spark: SparkSession, defs: Map[String, CqlTable]) {
         case _ => None
       })
       if pk.size == pins.size
-      table <- engine.catalogTables.get(key)
+      table <- engine.table(key)
     } yield {
       val log = store.partitionLog(t, pk)
       val rows = foldPartition(t, log)
@@ -5365,45 +5273,56 @@ object CqlSession {
   /** A session with no tables — create them with CQL `CREATE TABLE`. */
   def apply(spark: SparkSession): CqlSession = new CqlSession(spark, Map.empty)
 
-  /** Split a CQL script into statements: `;` terminators outside string
-    * literals, `--` line comments stripped, `BEGIN BATCH … APPLY BATCH`
-    * re-merged into one statement. */
-  private[cql] def splitStatements(script: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inString = false
+  /** Split a CQL script into statements — the one splitter of
+    * `executeScript` and `SOURCE`, the subset cqlsh's own splitter handles
+    * for scripts: `;` ends a statement outside string literals (`''`
+    * escapes), `--` and `//` line comments read as whitespace, and a
+    * `BEGIN … BATCH … APPLY BATCH` block stays one statement. */
+  private[graft] def splitCqlScript(text: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    val cur = new StringBuilder
     var i = 0
-    while (i < script.length) {
-      val ch = script.charAt(i)
-      if (!inString && ch == '-' && i + 1 < script.length &&
-          script.charAt(i + 1) == '-') {
-        while (i < script.length && script.charAt(i) != '\n') i += 1
-      } else {
-        if (ch == '\'') inString = !inString // '' escape toggles twice — fine
-        if (ch == ';' && !inString) { parts += sb.result(); sb.clear() }
-        else sb.append(ch)
-        i += 1
+    var inStr = false
+    while (i < text.length) {
+      val ch = text.charAt(i)
+      if (inStr) {
+        cur.append(ch)
+        if (ch == '\'') {
+          if (i + 1 < text.length && text.charAt(i + 1) == '\'') {
+            cur.append('\''); i += 1
+          } else inStr = false
+        }
+      } else ch match {
+        case '\'' => inStr = true; cur.append(ch)
+        case ';' =>
+          parts += cur.toString.trim
+          cur.clear()
+        // a comment reads as WHITESPACE, like cqlsh: emit one space so
+        // "t--note\nWHERE" splits into "t WHERE", not the glued "tWHERE"
+        case '-' | '/' if i + 1 < text.length && text.charAt(i + 1) == ch =>
+          while (i < text.length && text.charAt(i) != '\n') i += 1
+          cur.append(' ')
+        case c => cur.append(c)
       }
+      i += 1
     }
-    parts += sb.result()
-    val trimmed = parts.map(_.trim).filter(_.nonEmpty).toSeq
-    // re-merge batch blocks that the ';' split tore apart
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    parts += cur.toString.trim
+    // re-merge the batch blocks the ';' split tore apart
+    def kw(st: String) = st.takeWhile(!_.isWhitespace).toLowerCase
+    val out = Seq.newBuilder[String]
     var batch: Option[StringBuilder] = None
-    trimmed.foreach { st =>
+    parts.result().filter(_.nonEmpty).foreach { st =>
       batch match {
         case Some(b) =>
           b.append("; ").append(st)
-          if (st.toLowerCase.startsWith("apply")) {
-            out += b.result(); batch = None
-          }
+          if (kw(st) == "apply") { out += b.result(); batch = None }
         case None =>
-          if (st.toLowerCase.startsWith("begin")) batch = Some(new StringBuilder(st))
+          if (kw(st) == "begin") batch = Some(new StringBuilder(st))
           else out += st
       }
     }
-    batch.foreach(b => out += b.result())
-    out.toSeq
+    batch.foreach(out += _.result())
+    out.result()
   }
 
   /** A session over an empty table — CREATE TABLE analogue for tests/demos. */

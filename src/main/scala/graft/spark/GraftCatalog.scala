@@ -112,7 +112,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ks = requireNamespace(namespace)
-    val keys = session.engineCatalog.keys.toSeq
+    val keys = session.tableNames.toSeq
     val names =
       if (ks == session.userKeyspaceName) keys.filterNot(_.contains("."))
       else keys.filter(_.startsWith(s"$ks.")).map(_.stripPrefix(s"$ks."))
@@ -120,7 +120,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    try session.engineCatalog.contains(registryKey(ident))
+    try session.tableNames.contains(registryKey(ident))
     catch { case _: NoSuchNamespaceException => false }
 
   override def loadTable(ident: Identifier): Table = {

@@ -1,6 +1,6 @@
 package graft.storage
 
-import graft.cql.{CqlInvalidQueryException, CqlTable}
+import graft.cql.{CqlInvalidQueryException, CqlTable, VirtualTable}
 import graft.operators.CassandraModel
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -212,10 +212,15 @@ private[graft] final class TableStore(spark: SparkSession) {
       clusteringKeys = renSeq(t.clusteringKeys))
   }
 
-  /** DROP TABLE: forget the log and retire its files. False if unknown. */
+  /** DROP TABLE: forget the log and its catalog snapshots, and retire
+    * their files. False if unknown. */
   def drop(key: String): Boolean = {
     val known = tables.remove(key).isDefined
     retireBase(key)
+    import scala.jdk.CollectionConverters._
+    snapshotCache.keySet.asScala.filter(_._1 == key).toSeq.foreach { slot =>
+      retire(slot, Option(snapshotCache.remove(slot)).map(_._2).toSeq)
+    }
     known
   }
 
@@ -767,13 +772,12 @@ private[graft] final class TableStore(spark: SparkSession) {
       .map(c => (c._2, c._3))
 
   /** Write `df` as this epoch's snapshot of `key` in `rendering` (a
-    * `volatile` one — a runtime virtual table that changes without an
-    * epoch bump — gets a fresh directory per read) and retire the
-    * snapshot it supersedes. */
-  def writeSnapshot(key: String, rendering: String, volatile: Boolean,
+    * `virtual` table, whose rows are built per read, gets a fresh
+    * directory per read) and retire the snapshot it supersedes. */
+  def writeSnapshot(key: String, rendering: String, virtual: Boolean,
       df: DataFrame): (String, StructType) = {
     val gen =
-      if (volatile) s"${epoch}_${System.nanoTime()}" else epoch.toString
+      if (virtual) s"${epoch}_${System.nanoTime()}" else epoch.toString
     val dir = dirFor(DirKind.Epoch, key, rendering, gen)
     df.write.mode("overwrite").parquet(dir)
     val prev = snapshotCache.put((key, rendering), (epoch, dir, df.schema))
@@ -861,7 +865,14 @@ private[graft] final class TableStore(spark: SparkSession) {
   def compact(key: String, t: TableState, ks: String, tbl: String,
       stamp: Long): (Long, Long) = {
     val lg = log(t)
-    val rowsIn = lg.count()
+    // rows_merged histogram: how many log rows folded into each key —
+    // upstream's sstables-merged histogram at row granularity. Bounded
+    // by the distinct per-key row counts (small); driver-side by design.
+    // Its counts sum to the log's row count, so the log is scanned once.
+    val hist = lg.groupBy(keyCols(t).map(col): _*).count()
+      .groupBy("count").count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val rowsIn = hist.map { case (rows, keys) => rows * keys }.sum
     val taskId = compactionSeq.incrementAndGet()
     compactionTasks.put(taskId, (ks, tbl, "Compaction", rowsIn))
     try {
@@ -870,12 +881,6 @@ private[graft] final class TableStore(spark: SparkSession) {
       survivors.write.mode("overwrite").parquet(dir)
       val compacted = spark.read.schema(t.logSchema).parquet(dir)
       val rowsOut = compacted.count()
-      // rows_merged histogram: how many log rows folded into each key —
-      // upstream's sstables-merged histogram at row granularity. Bounded
-      // by the distinct per-key row counts (small); driver-side by design.
-      val hist = lg.groupBy(keyCols(t).map(col): _*).count()
-        .groupBy("count").count().collect()
-        .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
       epoch += 1
       tables(key) = t.copy(base = compacted, pending = Vector.empty,
         localOnly = false)
@@ -892,11 +897,11 @@ private[graft] final class TableStore(spark: SparkSession) {
   // ——— storage virtual tables [U db/virtual] ———
 
   /** The storage layer's virtual tables: the active compactions, the
-    * snapshots, each table's disk usage, the cdc accounting and the
-    * compaction history. `split` maps a table key to its (keyspace, table)
-    * names. */
+    * snapshots, each table's disk usage, the cdc accounting, the
+    * compaction history and the size estimates. `split` maps a table key
+    * to its (keyspace, table) names. */
   def storageViews(
-      split: String => (String, String)): Map[String, CqlTable] = {
+      split: String => (String, String)): Map[String, VirtualTable] = {
     import scala.jdk.CollectionConverters._
     // `sstable_tasks` [U db/virtual/SSTableTasksTable]: the ACTIVE
     // compaction tasks (empty at rest, as upstream); unit = log rows
@@ -908,10 +913,6 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("progress", LongType),
       StructField("total", LongType),
       StructField("unit", StringType)))
-    val sstRows = compactionTasks.asScala.toSeq.sortBy(_._1).map {
-      case (id, (ks, tbl, kind, total)) =>
-        Row(ks, tbl, id, kind, 0L, total, "rows")
-    }
     // `snapshots` [U db/virtual/SnapshotsTable, 4.1]: created_at is the
     // session clock (deterministic), sizes are real on-disk bytes
     val snapSchema = StructType(Seq(
@@ -921,10 +922,6 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("created_at", LongType),
       StructField("true_size", LongType),
       StructField("ephemeral", BooleanType)))
-    val snapRows = snapshots.toSeq.sortBy(_._1).map {
-      case ((n, k), (at, size)) => Row(n, split(k)._1, split(k)._2, at, size,
-        false)
-    }
     // `disk_usage` [U db/virtual/TableMetricTables, 4.1]: REAL on-disk
     // bytes of the files each table's base reads — bulk loads, committed
     // delta segments and the compacted segment (the sstable analogues) —
@@ -937,13 +934,6 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("base_bytes", LongType),
       StructField("snapshot_bytes", LongType),
       StructField("memtable_rows", LongType)))
-    val duRows = tables.toSeq.sortBy(_._1).map { case (k, t) =>
-      val snapBytesT = snapshots.collect {
-        case ((_, key), (_, sz)) if key == k => sz
-      }.sum
-      Row(split(k)._1, split(k)._2, baseBytes(k), snapBytesT,
-        t.pending.size.toLong)
-    }
     // `cdc` — per cdc-enabled table disk accounting (the disk_usage
     // pattern over cdc_raw): live segment bytes on disk vs cumulative
     // bytes consumers have REAPed. The pair is what an operator watches
@@ -953,10 +943,6 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("table_name", StringType),
       StructField("raw_bytes", LongType),
       StructField("reaped_bytes", LongType)))
-    val cdcRows = cdcTables.toSeq.sorted.map { k =>
-      Row(split(k)._1, split(k)._2, dirBytes(cdcDir(k)),
-        cdcReaped.getOrElse(k, 0L))
-    }
     // completed compactions, ring-bounded; compacted_at is the session
     // clock, bytes_in/out are LOG ROW counts (deviation: the session's
     // sstable analogue is row-granular), rows_merged the fold histogram
@@ -969,29 +955,48 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("bytes_out", LongType),
       StructField("rows_merged", MapType(IntegerType, LongType))))
     Map(
-      "system_views.cdc" -> CqlTable(
-        spark.createDataFrame(cdcRows.asJava, cdcSchema),
-        Seq("keyspace_name"), Seq("table_name")),
-      "system_views.sstable_tasks" -> CqlTable(
-        spark.createDataFrame(sstRows.asJava, sstSchema),
-        Seq("keyspace_name"), Seq("table_name", "task_id")),
-      "system_views.snapshots" -> CqlTable(
-        spark.createDataFrame(snapRows.asJava, snapSchema),
-        Seq("name"), Seq("keyspace_name", "table_name")),
-      "system_views.disk_usage" -> CqlTable(
-        spark.createDataFrame(duRows.asJava, duSchema),
-        Seq("keyspace_name"), Seq("table_name")),
+      "system_views.cdc" -> VirtualTable(spark, cdcSchema,
+          Seq("keyspace_name"), Seq("table_name")) {
+        cdcTables.toSeq.sorted.map { k =>
+          Row(split(k)._1, split(k)._2, dirBytes(cdcDir(k)),
+            cdcReaped.getOrElse(k, 0L))
+        }
+      },
+      "system_views.sstable_tasks" -> VirtualTable(spark, sstSchema,
+          Seq("keyspace_name"), Seq("table_name", "task_id")) {
+        compactionTasks.asScala.toSeq.sortBy(_._1).map {
+          case (id, (ks, tbl, kind, total)) =>
+            Row(ks, tbl, id, kind, 0L, total, "rows")
+        }
+      },
+      "system_views.snapshots" -> VirtualTable(spark, snapSchema,
+          Seq("name"), Seq("keyspace_name", "table_name")) {
+        snapshots.toSeq.sortBy(_._1).map {
+          case ((n, k), (at, size)) =>
+            Row(n, split(k)._1, split(k)._2, at, size, false)
+        }
+      },
+      "system_views.disk_usage" -> VirtualTable(spark, duSchema,
+          Seq("keyspace_name"), Seq("table_name")) {
+        tables.toSeq.sortBy(_._1).map { case (k, t) =>
+          val snapBytesT = snapshots.collect {
+            case ((_, key), (_, sz)) if key == k => sz
+          }.sum
+          Row(split(k)._1, split(k)._2, baseBytes(k), snapBytesT,
+            t.pending.size.toLong)
+        }
+      },
       "system.compaction_history" ->
-        CqlTable(spark.createDataFrame(
-          compactionHistory.toSeq.asJava, chSchema), Seq("id")))
+        VirtualTable(spark, chSchema, Seq("id"))(compactionHistory.toSeq),
+      "system.size_estimates" -> sizeEstimates(split))
   }
 
   /** `system.size_estimates` [U db/SizeEstimatesRecorder]: per table one
     * whole-ring range with its partition count and the optimizer's size
-    * estimate over that count. Computed only when `want` (a read of the
-    * table is about to run); otherwise empty placeholder rows. */
-  def sizeEstimates(split: String => (String, String),
-      want: Boolean): Map[String, CqlTable] = {
+    * estimate over that count (an estimate feeding the connector's split
+    * planner, as upstream's sstable-metadata guesses are). */
+  private def sizeEstimates(
+      split: String => (String, String)): VirtualTable = {
     val sSchema = StructType(Seq(
       StructField("keyspace_name", StringType),
       StructField("table_name", StringType),
@@ -1000,32 +1005,25 @@ private[graft] final class TableStore(spark: SparkSession) {
       StructField("mean_partition_size", LongType),
       StructField("partitions_count", LongType)))
     val ring = Long.MinValue.toString
-    if (!want)
-      // placeholder rows are never served: every size_estimates read path
-      // (text, prepared, Spark catalog) sets the flag and rebuilds first
-      return Map("system.size_estimates" -> CqlTable(
-        spark.createDataFrame(new java.util.ArrayList[Row](), sSchema),
-        Seq("keyspace_name"), Seq("table_name", "range_start", "range_end")))
-    val perTable = tables.toSeq.sortBy(_._1).map { case (n, t) =>
-      val v = viewOf(t)
-      val bytes = BigInt(v.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong)
-      v.agg(count_distinct(
-          struct(t.partitionKeys.map(col): _*)).as("pc"))
-        .select(lit(split(n)._1).as("keyspace_name"),
-          lit(split(n)._2).as("table_name"),
-          lit(ring).as("range_start"), lit(ring).as("range_end"),
-          when(col("pc") > 0, lit(bytes.toLong) / col("pc"))
-            .otherwise(0L).cast(LongType).as("mean_partition_size"),
-          col("pc").cast(LongType).as("partitions_count"))
-    }
-    val df0 =
+    new VirtualTable(sSchema, Seq("keyspace_name"),
+        Seq("table_name", "range_start", "range_end"), () => {
+      val perTable = tables.toSeq.sortBy(_._1).map { case (n, t) =>
+        val v = viewOf(t)
+        val bytes = BigInt(v.queryExecution.optimizedPlan.stats.sizeInBytes
+          .min(BigInt(Long.MaxValue)).toLong)
+        v.agg(count_distinct(
+            struct(t.partitionKeys.map(col): _*)).as("pc"))
+          .select(lit(split(n)._1).as("keyspace_name"),
+            lit(split(n)._2).as("table_name"),
+            lit(ring).as("range_start"), lit(ring).as("range_end"),
+            when(col("pc") > 0, lit(bytes.toLong) / col("pc"))
+              .otherwise(0L).cast(LongType).as("mean_partition_size"),
+            col("pc").cast(LongType).as("partitions_count"))
+      }
       if (perTable.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](), sSchema)
+        spark.createDataFrame(new java.util.ArrayList[Row](), sSchema)
       else perTable.reduce(_ unionByName _)
-    Map("system.size_estimates" -> CqlTable(df0, Seq("keyspace_name"),
-      Seq("table_name", "range_start", "range_end")))
+    })
   }
 }
 

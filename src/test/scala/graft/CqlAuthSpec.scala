@@ -303,6 +303,18 @@ class CqlAuthSpec extends SparkSpec {
     s.login("cassandra", "cassandra")
   }
 
+  test("a prepared read of system_views.settings sees a changed setting") {
+    val s = CqlSession(spark)
+    val p = s.prepare("SELECT value FROM system_views.settings WHERE name = ?")
+    val name = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(name)
+    assert(p.execute(name).head().getString(0) === before)
+    val changed = (before.toInt + 1).toString
+    spark.conf.set(name, changed)
+    try assert(p.execute(name).head().getString(0) === changed)
+    finally spark.conf.set(name, before)
+  }
+
   test("system_virtual_schema describes the virtual tables themselves") {
     val s = CqlSession(spark)
     val kss = s.execute(
@@ -353,5 +365,15 @@ class CqlAuthSpec extends SparkSpec {
     val after = s.execute("SELECT entry_count, size_bytes FROM " +
       "system_views.caches WHERE name = 'catalog_snapshots'").head()
     assert(after.getLong(0) >= 1L && after.getLong(1) > 0L)
+  }
+
+  test("caches counts the engine plan cache the reads before it used") {
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE pc_t (k bigint PRIMARY KEY, v bigint)")
+    s.execute("INSERT INTO pc_t (k, v) VALUES (1, 1)")
+    s.execute("SELECT v FROM pc_t WHERE k = 1").collect()
+    s.execute("SELECT v FROM pc_t WHERE k = 1").collect()
+    assert(s.execute("SELECT entry_count FROM system_views.caches " +
+      "WHERE name = 'engine_plan_cache'").head().getLong(0) === 1L)
   }
 }

@@ -178,6 +178,17 @@ class CqlReplaySpec extends SparkSpec {
     val rows = sess.execute(s"SOURCE '${f.toString}'").collect()
     assert(rows.length === 1)
     assert(rows.head.getBoolean(2), s"statement failed: ${rows.head}")
+    // a BEGIN BATCH … APPLY BATCH block is ONE statement: both rows or
+    // neither
+    java.nio.file.Files.write(f, ("BEGIN BATCH " +
+      "INSERT INTO srcws (k, v) VALUES (5, 'x'); " +
+      "INSERT INTO srcws (k, v) VALUES (6, 'y'); APPLY BATCH;\n")
+      .getBytes("UTF-8"))
+    val batch = sess.execute(s"SOURCE '${f.toString}'").collect()
+    assert(batch.length === 1)
+    assert(batch.head.getBoolean(2), s"batch failed: ${batch.head}")
+    assert(sess.execute("SELECT k FROM srcws").collect().map(_.getLong(0))
+      .sorted.toSeq === Seq(1L, 5L, 6L))
   }
 
   test("replay into an empty fresh session reports inequality honestly") {

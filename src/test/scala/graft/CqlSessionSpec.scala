@@ -813,6 +813,16 @@ class CqlSessionSpec extends SparkSpec {
     assert(sel.execute(1L).collect().map(_.getString(1)).toSeq === Seq("ada"))
   }
 
+  test("system.prepared_statements counts a PREPARE with no write between") {
+    val s = freshSession
+    s.prepare("SELECT name FROM users WHERE user_id = ?")
+    def count() = s.execute("SELECT count(*) FROM system.prepared_statements")
+      .head().getLong(0)
+    val n = count()
+    s.prepare("SELECT age FROM users WHERE user_id = ?")
+    assert(count() === n + 1)
+  }
+
   test("prepared UPDATE binds assignments before predicates; collections bind inside literals") {
     val s = collSession
     s.execute("INSERT INTO profiles (id, events, tags) VALUES (1, [1], {'a'})")
@@ -1309,6 +1319,7 @@ class CqlSessionSpec extends SparkSpec {
     val s = CqlSession(spark)
     val results = s.executeScript("""
       -- data model
+      // a slash comment reads as whitespace too
       CREATE TABLE accounts (id bigint PRIMARY KEY, owner text, balance counter);
       INSERT INTO accounts (id, owner) VALUES (1, 'ada; the first'); -- ';' in string
       BEGIN COUNTER BATCH

@@ -45,6 +45,16 @@ class CqlTraceSpec extends SparkSpec {
       .head().getLong(0) === 2L)
   }
 
+  test("engineView reads the trace tables live") {
+    val s = CqlSession(spark)
+    s.execute("CREATE TABLE tr_ev (k bigint PRIMARY KEY)")
+    s.execute("TRACING ON")
+    s.execute("SELECT k FROM tr_ev WHERE k = 1")
+    s.execute("TRACING OFF")
+    assert(s.engineView.execute("SELECT count(*) FROM system_traces.sessions")
+      .head().getLong(0) === 1L)
+  }
+
   test("a failed statement still leaves its trace; bad TRACING arg errors") {
     val s = CqlSession(spark)
     s.execute("CREATE TABLE tr_f (k bigint PRIMARY KEY)")

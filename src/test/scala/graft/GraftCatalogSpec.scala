@@ -1271,5 +1271,11 @@ class GraftCatalogSpec extends SparkSpec {
     s.execute("COMPACT cat_bound")
     assert(!loadDir.exists())
     assert(table().count() === 106L)
+    // DROP TABLE forgets the table's snapshots
+    def snapshotEntries() = s.execute("SELECT entry_count FROM " +
+      "system_views.caches WHERE name = 'catalog_snapshots'").head().getLong(0)
+    assert(snapshotEntries() === 1L)
+    s.execute("DROP TABLE cat_bound")
+    assert(snapshotEntries() === 0L)
   }
 }

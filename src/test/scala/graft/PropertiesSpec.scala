@@ -143,7 +143,6 @@ class PropertiesSpec extends SparkSpec {
 
   test("SOURCE script splitter: random statements with quotes/comments " +
     "round-trip (30 random scripts)") {
-    val sess = graft.cql.CqlSession(spark)
     // statement bodies exercising every splitter hazard: semicolons and
     // comment markers INSIDE quotes, escaped quotes, dashes that are not
     // comments, slashes that are not comments
@@ -156,7 +155,7 @@ class PropertiesSpec extends SparkSpec {
       comment <- Gen.oneOf("", "-- a comment\n", "// another\n")
     } yield (stmts, stmts.map(s => comment + s).mkString(";\n") + ";")
     for ((stmts, script) <- samples(scriptGen, 30)) {
-      val out = sess.splitCqlScript(script)
+      val out = graft.cql.CqlSession.splitCqlScript(script)
       assert(out.length === stmts.length,
         s"script:\n$script\nsplit: $out")
       // every recovered statement equals its source modulo whitespace
